@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * at sf0.001 first forces classloading, codegen compilation, and JIT
   * of the shared operator paths so per-query numbers reflect steady
   * state rather than whichever query happened to run first. A query
-  * that throws is reported as -1.
+  * that throws is reported as -1, listed with its message under
+  * `failed`, and left out of `value`; the process then exits 1.
   *
   * Noise protocol (VERDICT r8 #5): single-shot timings on a shared
   * host swing 3x with background noise, and min-of-2 still left
@@ -102,10 +103,14 @@ object Bench {
       else Set.empty
     val duckPre = duckdbYardstick(sfDir, duckOnly)
 
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     def timeOnce(name: String): Double = {
       val t0 = System.nanoTime()
       val ok = try { force(name, sfDir); true }
-        catch { case _: Throwable => false }
+        catch { case scala.util.control.NonFatal(e) =>
+          failed.getOrElseUpdate(name, Option(e.getMessage).getOrElse(e.toString))
+          false
+        }
       // timestamp BEFORE the cleanup: the per-query number is the
       // query's computation, not its checkpoint-block teardown (r19;
       // the teardown is synchronous now, so it can't leak into the
@@ -150,6 +155,8 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""baseline_queries":${baselineQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""http_queries":$httpJson,""" +
+        s""""failed":${failed.map { case (k, m) => "\"" + k + "\":" +
+          graft.engine.JsonShape.str(m) }.mkString("{", ",", "}")},""" +
         s""""duckdb_total":${duck.map(_.total).getOrElse(-1.0)},""" +
         s""""duckdb_total_pre":${duckPre.map(_.total).getOrElse(-1.0)},""" +
         s""""duckdb_count":${duck.map(_.count).getOrElse(0)},""" +
@@ -174,6 +181,10 @@ object Bench {
     System.out.flush(); System.err.flush()
     println(line)
     System.out.flush()
+    if (failed.nonEmpty) {
+      System.err.println(s"${failed.size} queries failed: ${failed.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   /** The wire-level rows: documents served from a provisioned segment

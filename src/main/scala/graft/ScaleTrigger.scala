@@ -72,8 +72,6 @@ object ScaleTrigger {
       s"wrong result: n=$n s=$s (want $firings/$expectS)")
     println(f"""{"metric":"trigger_general_tier","mode":"$mode","firings":$firings,""" +
       f""""wall_sec":$wall%.2f,"firings_per_sec":${firings / wall}%.1f}""")
-    if (sys.env.contains("GRAFT_TRIG_PROF"))
-      println("PROF " + graft.engine.WriteTxn.profDump())
     spark.stop()
   }
 }

@@ -660,7 +660,7 @@ object Fts5 {
     var contentRowid = "rowid"
     var columnsize = true
     var contentlessDelete = false
-    val cols = SqlScript.splitTopLevel(m.group(4)).map(_.trim).flatMap { arg =>
+    val cols = SqlLexer.splitTopLevel(m.group(4)).map(_.trim).flatMap { arg =>
       if (arg.contains("=")) {
         checkOption(arg) match {
           case TokOpt(t) => tok = t
@@ -1219,7 +1219,7 @@ object Fts5 {
     val matchRe =
       s"(?is)($id)(?:\\s*\\.\\s*($id))?\\s+MATCH\\s+('(?:[^']|'')*')".r
     // which fts tables the STATEMENT mentions (for bare-column LHS)
-    val blanked = SqliteDdl.blankLiterals(stmt).toLowerCase(java.util.Locale.ROOT)
+    val blanked = SqlLexer.blankLiterals(stmt).toLowerCase(java.util.Locale.ROOT)
     val mentioned = ftsTables.keys.filter { t =>
       ("(^|[^a-z0-9_])" + java.util.regex.Pattern.quote(t) + "([^a-z0-9_]|$)").r
         .findFirstIn(blanked).isDefined
@@ -1309,7 +1309,7 @@ object Fts5 {
       matchSpans: Map[String, List[(Int, Int)]]): Set[String] = {
     val multi = matchSpans.filter(_._2.length > 1)
     if (multi.isEmpty) return Set.empty
-    val blanked = SqliteDdl.blankLiterals(stmt)
+    val blanked = SqlLexer.blankLiterals(stmt)
     val n = blanked.length
     // paren intervals + depth per position
     val stack = mutable.ArrayBuffer[Int]()
@@ -1387,7 +1387,7 @@ object Fts5 {
       matchPos: Map[String, List[Int]]): Set[String] = {
     val multi = matchPos.filter(_._2.length > 1)
     if (multi.isEmpty) return Set.empty
-    val blanked = SqliteDdl.blankLiterals(stmt)
+    val blanked = SqlLexer.blankLiterals(stmt)
     val n = blanked.length
     val depthAt = new Array[Int](n)
     var d = 0
@@ -1429,7 +1429,7 @@ object Fts5 {
     * serve it. Matches are found on literal-blanked text. */
   def rewriteRowidRefs(stmt: String, contentFts: Set[String]): String = {
     if (contentFts.isEmpty) return stmt
-    val blanked = SqliteDdl.blankLiterals(stmt)
+    val blanked = SqlLexer.blankLiterals(stmt)
     val blankedLower = blanked.toLowerCase(java.util.Locale.ROOT)
     val mentioned = contentFts.filter { t =>
       ("(^|[^a-z0-9_])" + java.util.regex.Pattern.quote(t) + "([^a-z0-9_]|$)").r
@@ -2118,7 +2118,7 @@ object Fts5 {
       conjOwners: Set[String], orOwners: Set[String],
       statsOf: (String, Seq[PhraseSpec]) => AuxStats): String = {
     def maskOf(tLower: String): Long = ftsTables(tLower).indexedMask
-    val blanked = SqliteDdl.blankLiterals(stmt)
+    val blanked = SqlLexer.blankLiterals(stmt)
     val lower = blanked.toLowerCase(java.util.Locale.ROOT)
     if (!lower.contains("bm25") && !lower.contains("highlight") &&
       !lower.contains("snippet") &&
@@ -2226,7 +2226,7 @@ object Fts5 {
     val bm25Re = "(?i)\\bbm25\\s*\\(([^()]*)\\)".r
     for (m <- bm25Re.findAllMatchIn(blanked)) {
       val argsOrig = stmt.substring(m.start(1), m.end(1))
-      val parts = SqlScript.splitTopLevel(argsOrig).map(_.trim)
+      val parts = SqlLexer.splitTopLevel(argsOrig).map(_.trim)
       if (parts.nonEmpty && parts.head.nonEmpty) {
         val tLower = SqlScript.unquoteIdent(parts.head)
           .toLowerCase(java.util.Locale.ROOT)
@@ -2300,7 +2300,7 @@ object Fts5 {
     for (m <- auxRe.findAllMatchIn(blanked)) {
       val fn = m.group(1).toLowerCase(java.util.Locale.ROOT)
       val argsOrig = stmt.substring(m.start(2), m.end(2))
-      val parts = SqlScript.splitTopLevel(argsOrig).map(_.trim)
+      val parts = SqlLexer.splitTopLevel(argsOrig).map(_.trim)
       if (parts.nonEmpty && parts.head.nonEmpty) {
         val tLower = SqlScript.unquoteIdent(parts.head)
           .toLowerCase(java.util.Locale.ROOT)

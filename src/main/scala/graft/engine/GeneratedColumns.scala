@@ -26,7 +26,7 @@ private[engine] object GeneratedColumns {
     // expr are rare enough to accept the miss — worst case is SQLite's
     // declaration-order evaluation, which covers back-references)
     def deps(g: GeneratedDef): Seq[String] = {
-      val blanked = SqliteDdl.blankLiterals(g.expr).toLowerCase
+      val blanked = SqlLexer.blankLiterals(g.expr).toLowerCase
       byName.keys.filter(n => n != g.name.toLowerCase &&
         ("(?<![a-z0-9_])" + java.util.regex.Pattern.quote(n) + "(?![a-z0-9_])")
           .r.findFirstIn(blanked).isDefined).toSeq

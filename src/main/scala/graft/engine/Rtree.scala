@@ -65,7 +65,7 @@ object Rtree {
     val module = m.group(3).toLowerCase(java.util.Locale.ROOT)
     if (module != "rtree" && module != "rtree_i32") return None
     val name = SqlScript.unquoteIdent(m.group(2))
-    val args = SqlScript.splitTopLevel(m.group(4)).map(_.trim)
+    val args = SqlLexer.splitTopLevel(m.group(4)).map(_.trim)
     // auxiliary `+col [TYPE]` columns (r17) come after the coords —
     // real rtree's own error text when they don't (probed)
     val firstAux = args.indexWhere(_.startsWith("+"))

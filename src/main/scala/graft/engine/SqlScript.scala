@@ -2,8 +2,8 @@ package graft.engine
 
 import scala.collection.mutable.ArrayBuffer
 
-/** SQL script utilities: statement splitting that respects string
-  * literals, quoted identifiers, and comments.
+/** SQL script utilities: statement splitting over [[SqlLexer]]'s
+  * tokens, and identifier unquoting.
   *
   * The reference write path accepts whole scripts and hands them to
   * `executescript` (trough/write.py:33-40); the read path requires
@@ -12,96 +12,50 @@ import scala.collection.mutable.ArrayBuffer
   */
 object SqlScript {
 
-  /** Split a script into trimmed, non-empty statements on top-level `;`.
-    * Handles 'single-quoted' (with '' escape), "double-quoted",
-    * `backtick`, [bracket] identifiers, -- line comments, and C-style
-    * block comments. A `CREATE TRIGGER … BEGIN …; …; END` statement
-    * stays ONE statement: its body semicolons don't split until the
-    * trigger's own END (CASE…END pairs inside the body tracked, so a
-    * CASE's END can't close the trigger early — SQLite's parser rule,
-    * re-implemented as the same token scan sqlite3's `.read` does). */
+  /** Split a script into trimmed, non-empty statements on `;` tokens
+    * (so never inside a literal, quoted identifier or comment); each
+    * comment becomes one space. A `CREATE TRIGGER … BEGIN …; …; END`
+    * statement stays ONE statement: its body semicolons don't split
+    * until the trigger's own END (CASE…END pairs inside the body
+    * tracked, so a CASE's END can't close the trigger early — SQLite's
+    * parser rule, the same token scan sqlite3's `.read` does). */
   def split(script: String): Seq[String] = {
+    val toks = SqlLexer.tokens(script)
     val stmts = ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var i = 0
-    val n = if (script == null) 0 else script.length
-    var state: Char = 0 // 0 = normal, '\'','"','`',']' = in quote, '-' = line comment, '*' = block comment
-    while (i < n) {
-      val c = script.charAt(i)
-      state match {
-        case 0 =>
-          c match {
-            case ';' if triggerNeedsMore(cur) => cur.append(c); i += 1
-            case ';' => stmts += cur.toString; cur.clear(); i += 1
-            case '\'' | '"' | '`' => state = c; cur.append(c); i += 1
-            case '[' => state = ']'; cur.append(c); i += 1
-            case '-' if i + 1 < n && script.charAt(i + 1) == '-' => state = '-'; i += 2
-            case '/' if i + 1 < n && script.charAt(i + 1) == '*' => state = '*'; i += 2
-            case _ => cur.append(c); i += 1
+    var first = 0
+    for (i <- 0 to toks.length) {
+      if (i == toks.length || (toks(i).isPunct(';') && !triggerNeedsMore(toks.slice(first, i)))) {
+        if (i > first) {
+          val sb = new StringBuilder(toks(first).text)
+          for (k <- first + 1 until i) {
+            val gap = script.substring(toks(k - 1).end, toks(k).start)
+            sb.append(if (gap.forall(_.isWhitespace)) gap else " ").append(toks(k).text)
           }
-        case '\'' | '"' | '`' =>
-          if (c == state) {
-            // doubled quote inside literal = escape
-            if (i + 1 < n && script.charAt(i + 1) == state) { cur.append(c).append(c); i += 2 }
-            else { state = 0; cur.append(c); i += 1 }
-          } else { cur.append(c); i += 1 }
-        case ']' =>
-          if (c == ']') state = 0
-          cur.append(c); i += 1
-        case '-' =>
-          if (c == '\n') { state = 0; cur.append(c) }
-          i += 1
-        case '*' =>
-          if (c == '*' && i + 1 < n && script.charAt(i + 1) == '/') { state = 0; i += 2 }
-          else i += 1
+          stmts += sb.toString
+        }
+        first = i + 1
       }
     }
-    stmts += cur.toString
-    stmts.map(_.trim).filter(_.nonEmpty).toSeq
+    stmts.toSeq
   }
 
-
-  /** Is `cur` an unfinished CREATE TRIGGER statement — i.e. its
-    * BEGIN…END body hasn't reached the trigger's own END yet? Called
-    * at each candidate split point; scripts are small (HTTP writes),
-    * so the re-scan stays cheap. Quote-aware word scan; CASE
-    * increments and END decrements a depth counter so only the
-    * depth-0 END terminates the trigger. */
-  private def triggerNeedsMore(cur: StringBuilder): Boolean = {
-    val s = cur.toString
-    val words = new ArrayBuffer[String](8)
-    var i = 0; val n = s.length
-    var quote: Char = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote || (quote == ']' && c == ']')) quote = 0; i += 1 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c; i += 1
-        case '[' => quote = ']'; i += 1
-        case ch if ch.isLetter || ch == '_' =>
-          var e = i
-          while (e < n && (s.charAt(e).isLetterOrDigit || s.charAt(e) == '_')) e += 1
-          words += s.substring(i, e).toLowerCase
-          i = e
-        case _ => i += 1
-      }
-    }
+  /** Is `stmt` an unfinished CREATE TRIGGER statement — i.e. its
+    * BEGIN…END body hasn't reached the trigger's own END yet? CASE
+    * increments and END decrements a depth counter so only the depth-0
+    * END terminates the trigger. */
+  private def triggerNeedsMore(stmt: Seq[SqlLexer.Tok]): Boolean = {
+    val words = stmt.filter(_.kind == SqlLexer.Word).map(_.lower)
     val isTrigger = words.length >= 2 && words(0) == "create" &&
       (words(1) == "trigger" ||
         ((words(1) == "temp" || words(1) == "temporary") &&
           words.length >= 3 && words(2) == "trigger"))
-    if (!isTrigger) return false
     val beginAt = words.indexOf("begin")
-    if (beginAt < 0) return false // malformed; let the parser refuse it
+    if (!isTrigger || beginAt < 0) return false // malformed: the parser refuses it
     var depth = 0
-    var k = beginAt + 1
-    while (k < words.length) {
-      words(k) match {
-        case "case" => depth += 1
-        case "end" => if (depth > 0) depth -= 1 else return false // trigger closed
-        case _ => ()
-      }
-      k += 1
+    words.drop(beginAt + 1).foreach {
+      case "case" => depth += 1
+      case "end" => if (depth > 0) depth -= 1 else return false // trigger closed
+      case _ => ()
     }
     true
   }
@@ -123,33 +77,5 @@ object SqlScript {
       (t.head == '\'' && t.last == '\'') || (t.head == '[' && t.last == ']')))
       t.substring(1, t.length - 1)
     else t
-  }
-
-  /** Split on top-level commas (not inside parens or quotes). */
-  def splitTopLevel(s: String, sep: Char = ','): Seq[String] = {
-    val parts = ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == quote) {
-          if (i + 1 < s.length && s.charAt(i + 1) == quote) { cur.append(quote); i += 1 }
-          else quote = 0
-        }
-      } else c match {
-        case '\'' | '"' => quote = c; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case `sep` if depth == 0 => parts += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    parts += cur.toString
-    parts.map(_.trim).filter(_.nonEmpty).toSeq
   }
 }

@@ -59,60 +59,23 @@ object SqliteDdl {
     * Anything else is refused with SQLite's own prepare-time text. */
   private val BuiltinCollations = Set("BINARY", "NOCASE", "RTRIM")
 
-  /** The `COLLATE <name>` clause of a column definition, scanned over
-    * literal- and paren-blanked text so a CHECK body or DEFAULT string
-    * can't trip it. Unknown names get SQLite's exact refusal. */
+  /** The `COLLATE <name>` clause of a column definition: the last
+    * top-level COLLATE keyword (a CHECK body or DEFAULT expression may
+    * legally contain its own COLLATE operators inside parens). SQLite
+    * accepts any identifier quoting for the name — COLLATE "NOCASE",
+    * [nocase], `nocase`, 'nocase'. Unknown names get SQLite's exact
+    * refusal. */
   private[engine] def collateClause(defn: String): Option[String] = {
-    // blank top-level parenthesized runs (CHECK/DEFAULT expressions may
-    // legally contain their own COLLATE operators)
-    val blanked = {
-      val b = new StringBuilder(blankLiterals(defn))
-      var depth = 0
-      var i = 0
-      while (i < b.length) {
-        val c = b.charAt(i)
-        if (c == '(') { depth += 1; if (depth >= 1) b.setCharAt(i, ' ') }
-        else if (c == ')') { depth -= 1; b.setCharAt(i, ' ') }
-        else if (depth > 0) b.setCharAt(i, ' ')
-        i += 1
-      }
-      b.toString
-    }
-    // the keyword is found on the blanked text, but the NAME is read
-    // from the ORIGINAL (blanking is length-preserving): SQLite accepts
-    // any identifier quoting here — COLLATE "NOCASE", [nocase],
-    // `nocase`, 'nocase' — which the blanking erases (ADVICE r10: the
-    // bare-identifier regex silently ignored quoted forms, leaving the
-    // column BINARY)
-    val re = "(?i)\\bCOLLATE\\b".r
-    re.findAllMatchIn(blanked).toSeq.lastOption.flatMap { m =>
-      var i = m.end
-      while (i < defn.length && defn.charAt(i).isWhitespace) i += 1
-      val name: String =
-        if (i >= defn.length) null
-        else defn.charAt(i) match {
-          case q @ ('"' | '\'' | '`') =>
-            val e = defn.indexOf(q, i + 1)
-            if (e < 0) null else defn.substring(i + 1, e)
-          case '[' =>
-            val e = defn.indexOf(']', i + 1)
-            if (e < 0) null else defn.substring(i + 1, e)
-          case c if c.isLetter || c == '_' =>
-            var e = i
-            while (e < defn.length &&
-              (defn.charAt(e).isLetterOrDigit || defn.charAt(e) == '_')) e += 1
-            defn.substring(i, e)
-          case _ => null
-        }
-      if (name == null) None
-      else {
+    val toks = SqlLexer.tokens(defn)
+    val at = toks.lastIndexWhere(t => t.depth == 0 && t.is("COLLATE"))
+    toks.lift(at + 1).filter(t => at >= 0 && (t.isName || t.kind == SqlLexer.Str))
+      .map(_.value).flatMap { name =>
         val up = name.toUpperCase
         if (!BuiltinCollations.contains(up))
           throw new IllegalArgumentException(
             s"no such collation sequence: $name")
         Some(up).filter(_ != "BINARY")
       }
-    }
   }
 
   final case class TableDef(
@@ -173,52 +136,38 @@ object SqliteDdl {
     var generated = Vector.empty[GeneratedDef]
 
     /** The parenthesized expression after the first CHECK keyword in
-      * `s` (quote/paren aware), as its inner text. */
+      * `s`, as its inner text. */
     def checkExpr(s: String): Option[String] = {
-      val blanked = blankLiterals(s).toUpperCase
-      val at = "\\bCHECK\\b".r.findFirstMatchIn(blanked).map(_.start)
-      at.flatMap { i =>
-        val open = s.indexOf('(', i)
-        if (open < 0) None
-        else {
-          var depth = 0; var q: Char = 0; var j = open
-          while (j < s.length) {
-            val ch = s.charAt(j)
-            if (q != 0) { if (ch == q) q = 0 }
-            else if (ch == '\'' || ch == '"') q = ch
-            else if (ch == '(') depth += 1
-            else if (ch == ')') {
-              depth -= 1
-              if (depth == 0) return Some(s.substring(open + 1, j).trim)
-            }
-            j += 1
-          }
-          None
-        }
-      }
+      val toks = SqlLexer.tokens(s)
+      val kw = toks.indexWhere(_.is("CHECK"))
+      val open = if (kw < 0) -1 else toks.indexWhere(_.isPunct('('), kw)
+      val close = if (open < 0) -1 else SqlLexer.matchParen(toks, open)
+      if (close < 0) None else Some(s.substring(toks(open).end, toks(close).start).trim)
     }
 
-    SqlScript.splitTopLevel(body).foreach { defn =>
+    SqlLexer.splitTopLevel(body).foreach { defn =>
       val upper = defn.toUpperCase
-      if (upper.startsWith("PRIMARY KEY")) {
+      // a table constraint opens with its keyword as a whole word (a
+      // column may be named unique_id or check_ts)
+      val lead = SqlLexer.tokens(defn).headOption
+        .filter(_.kind == SqlLexer.Word).map(_.text.toUpperCase).getOrElse("")
+      if (lead == "PRIMARY") {
         val cols = defn.substring(defn.indexOf('(') + 1, defn.lastIndexOf(')'))
-        pk = SqlScript.splitTopLevel(cols).map(c =>
-          // strip per-column collation/direction (PRIMARY KEY (x DESC))
-          SqlScript.unquoteIdent(c.trim.split("\\s+").head)).toVector
+        // strip per-column collation/direction (PRIMARY KEY (x DESC))
+        pk = SqlLexer.splitTopLevel(cols).map(c => SqlLexer.tokens(c).head.value).toVector
         pkFromTableConstraint = true
         // SQLite quirk: PRIMARY KEY (x DESC) in the table-constraint
         // form is NOT a rowid alias even for an INTEGER column
         if (upper.matches("(?s).*\\bDESC\\b.*")) pkFromTableConstraint = false
-      } else if (upper.startsWith("UNIQUE")) {
+      } else if (lead == "UNIQUE") {
         // table-level UNIQUE (cols): recorded for the commit-time gate
         // and the export's autoindex trees
         val cols = defn.substring(defn.indexOf('(') + 1, defn.lastIndexOf(')'))
-        uniques :+= SqlScript.splitTopLevel(cols).map(c =>
-          SqlScript.unquoteIdent(c.trim.split("\\s+").head))
-      } else if (upper.startsWith("CHECK")) {
+        uniques :+= SqlLexer.splitTopLevel(cols).map(c => SqlLexer.tokens(c).head.value)
+      } else if (lead == "CHECK") {
         // unnamed table-level CHECK: labeled by its own expression text
         checkExpr(defn).foreach(e => checks :+= CheckDef(checkLabel(e), e))
-      } else if (upper.startsWith("CONSTRAINT")) {
+      } else if (lead == "CONSTRAINT") {
         // CONSTRAINT <name> CHECK (...) keeps the name as the failure
         // label; other named forms (UNIQUE/PK/FK) stay hints
         val m = "(?is)^\\s*CONSTRAINT\\s+(\\S+)\\s+CHECK\\b.*".r
@@ -227,28 +176,28 @@ object SqliteDdl {
           checkExpr(defn).foreach(e =>
             checks :+= CheckDef(SqlScript.unquoteIdent(g.group(1)), e))
         }
-      } else if (upper.startsWith("FOREIGN KEY")) {
+      } else if (lead == "FOREIGN") {
         // FKs don't shape the schema and are unused in the reference
       } else {
         // column-def: name [type-name] [constraints...]
         val tokens = tokenizeColumnDef(defn)
-        val colName = SqlScript.unquoteIdent(tokens.head)
+        val colName = SqlLexer.tokens(tokens.head).head.value
         val constraintStart = tokens.indexWhere(t =>
           Set("PRIMARY", "NOT", "NULL", "UNIQUE", "CHECK", "DEFAULT", "COLLATE",
             "REFERENCES", "AUTOINCREMENT", "GENERATED", "AS").contains(t.toUpperCase))
         val typeTokens =
           if (constraintStart < 0) tokens.drop(1) else tokens.slice(1, constraintStart)
         val declared = typeTokens.mkString(" ")
-        val upperDef = defn.toUpperCase
+        val isPk = SqlLexer.hasWord(defn, "PRIMARY", "KEY")
         generatedClause(defn).foreach { case (gexpr, stored) =>
           // SQLite's exact prepare-time refusals (probed, 3.51)
           if (defaultClause(defn).isDefined)
             throw new IllegalArgumentException(
               "cannot use DEFAULT on a generated column")
-          if (upperDef.contains("PRIMARY KEY"))
+          if (isPk)
             throw new IllegalArgumentException(
               "generated columns cannot be part of the PRIMARY KEY")
-          if (blankLiterals(gexpr).toUpperCase.matches("(?s).*\\bSELECT\\b.*"))
+          if (SqlLexer.hasWord(gexpr, "SELECT"))
             throw new IllegalArgumentException(
               "subqueries prohibited in generated columns")
           if (declared.isEmpty)
@@ -260,9 +209,9 @@ object SqliteDdl {
                 "(dynamic storage class is not supported)")
           generated :+= GeneratedDef(colName, gexpr, stored)
         }
-        if (upperDef.contains("PRIMARY KEY")) {
+        if (isPk) {
           pk = pk :+ colName
-          if (upperDef.contains("AUTOINCREMENT") ||
+          if (SqlLexer.hasWord(defn, "AUTOINCREMENT") ||
               // SQLite: INTEGER PRIMARY KEY is an alias for rowid and
               // auto-assigns on NULL/omitted insert even without the keyword
               declared.toUpperCase == "INTEGER")
@@ -281,11 +230,11 @@ object SqliteDdl {
           if (isStrictAny) LongType else affinity(declared), nullable = true,
           metadata = fieldMeta)
         declaredTypes(colName.toLowerCase) = declared.toUpperCase
-        if (hasNotNull(defn)) notNull :+= colName
+        if (SqlLexer.hasWord(defn, "NOT", "NULL")) notNull :+= colName
         defaultClause(defn).foreach(d => defaults += colName -> d)
         // column-level UNIQUE (the keyword never appears in PRIMARY KEY
         // or other constraint spellings at column level)
-        if (blankLiterals(defn).toUpperCase.matches("(?s).*\\bUNIQUE\\b.*"))
+        if (SqlLexer.hasWord(defn, "UNIQUE"))
           uniques :+= Seq(colName)
         checkExpr(defn).foreach(e =>
           checks :+= CheckDef(checkLabel(e), e, ownerCol = colName))
@@ -341,62 +290,18 @@ object SqliteDdl {
 
   /** The `[GENERATED ALWAYS] AS ( expr ) [STORED|VIRTUAL]` clause of a
     * column definition, as (expr text, stored?); None when the column
-    * is not generated. Quote- and paren-aware: only a top-level `AS`
-    * immediately followed by `(` counts (`CAST(x AS INT)` inside a
-    * CHECK sits at depth ≥ 1). */
+    * is not generated. Only a top-level `AS` immediately followed by `(`
+    * counts (`CAST(x AS INT)` inside a CHECK sits at depth ≥ 1). */
   private[engine] def generatedClause(defn: String): Option[(String, Boolean)] = {
-    val blanked = blankLiterals(defn)
-    var depth = 0; var i = 0
-    while (i < blanked.length) {
-      val c = blanked.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && (c == 'a' || c == 'A') && i + 2 <= blanked.length - 1 &&
-          blanked.substring(i, i + 2).equalsIgnoreCase("AS") &&
-          (i == 0 || { val p = blanked.charAt(i - 1)
-            !p.isLetterOrDigit && p != '_' }) &&
-          { val nx = blanked.charAt(i + 2); !nx.isLetterOrDigit && nx != '_' }) {
-        var j = i + 2
-        while (j < blanked.length && blanked.charAt(j).isWhitespace) j += 1
-        if (j < blanked.length && blanked.charAt(j) == '(') {
-          // matching close paren in the ORIGINAL text (expr may quote)
-          var d = 0; var k = j; var q: Char = 0
-          while (k < defn.length) {
-            val ch = defn.charAt(k)
-            if (q != 0) { if (ch == q) q = 0 }
-            else if (ch == '\'' || ch == '"' || ch == '`') q = ch
-            else if (ch == '(') d += 1
-            else if (ch == ')') {
-              d -= 1
-              if (d == 0) {
-                val expr = defn.substring(j + 1, k).trim
-                val tail = blankLiterals(defn.substring(k + 1)).toUpperCase
-                return Some((expr, tail.matches("(?s).*\\bSTORED\\b.*")))
-              }
-            }
-            k += 1
-          }
-        }
-      }
-      i += 1
+    val toks = SqlLexer.tokens(defn)
+    val as = toks.indices.find(i => toks(i).depth == 0 && toks(i).is("AS") &&
+      toks.lift(i + 1).exists(_.isPunct('(')))
+    as.flatMap { i =>
+      val close = SqlLexer.matchParen(toks, i + 1)
+      if (close < 0) None
+      else Some((defn.substring(toks(i + 1).end, toks(close).start).trim,
+        toks.drop(close + 1).exists(_.is("STORED"))))
     }
-    None
-  }
-
-  /** Whether a column definition carries NOT NULL, scanned with string
-    * literals blanked so a default like `'NOT NULL'` can't trip it. */
-  private[engine] def hasNotNull(defn: String): Boolean =
-    blankLiterals(defn).toUpperCase.matches("(?s).*\\bNOT\\s+NULL\\b.*")
-
-  private[engine] def blankLiterals(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var q: Char = 0
-    s.foreach { c =>
-      if (q != 0) { if (c == q) q = 0; b.append(' ') }
-      else if (c == '\'' || c == '"' || c == '`') { q = c; b.append(' ') }
-      else b.append(c)
-    }
-    b.toString
   }
 
   /** sqlite names an unnamed CHECK with its expression's source span,
@@ -406,103 +311,25 @@ object SqliteDdl {
     * `CHECK constraint failed: c`, `CHECK('lit' <> c)` as `lit`,
     * `CHECK([c] > 0)` as `c`; `CHECK((c) > 0)` keeps the full span).
     * Doubled closing quotes un-escape, like identifier dequoting. */
-  private[engine] def checkLabel(e: String): String = {
-    if (e.isEmpty) return e
-    e.head match {
-      case q @ ('"' | '`' | '\'') =>
-        val b = new StringBuilder
-        var i = 1
-        var done = false
-        while (!done && i < e.length) {
-          if (e.charAt(i) == q) {
-            if (i + 1 < e.length && e.charAt(i + 1) == q) { b.append(q); i += 2 }
-            else done = true
-          } else { b.append(e.charAt(i)); i += 1 }
-        }
-        b.toString
-      case '[' => e.drop(1).takeWhile(_ != ']')
-      case _ => e
-    }
-  }
-
-  /** Blank ONLY single-quoted string literals, preserving the content
-    * of double-quoted/backtick-quoted identifiers (the quote chars
-    * themselves are replaced with spaces, leaving the identifier text
-    * word-bounded). For scans that match COLUMN references — e.g. the
-    * UPDATE constraint gate's "does this CHECK mention an assigned
-    * column" test — [[blankLiterals]] is wrong: it erases `"c"` along
-    * with `'c'`, dropping a quoted-identifier CHECK from the gate.
-    * SQLite's double-quoted-string fallback makes `"x"` a literal when
-    * no column x exists; preserving it here merely over-matches, which
-    * for a gate is the safe direction (the constraint is checked, not
-    * skipped). */
-  private[engine] def blankStringLiterals(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var q: Char = 0
-    s.foreach { c =>
-      if (q == '\'') { if (c == q) q = 0; b.append(' ') }
-      else if (q != 0) { if (c == q) { q = 0; b.append(' ') } else b.append(c) }
-      else if (c == '\'') { q = c; b.append(' ') }
-      else if (c == '"' || c == '`') { q = c; b.append(' ') }
-      else b.append(c)
-    }
-    b.toString
-  }
+  private[engine] def checkLabel(e: String): String =
+    SqlLexer.tokens(e).headOption
+      .filter(t => t.start == 0 && (t.kind == SqlLexer.Str || t.kind == SqlLexer.Ident))
+      .map(_.value).getOrElse(e)
 
   /** Extract the raw DEFAULT value text from a column definition:
     * a parenthesized expression, a (possibly doubled-quote) string
-    * literal, or a single bare token (number with optional sign, NULL,
-    * `CURRENT_*`). Quote-aware so DEFAULT inside a string can't match. */
+    * literal, or a single token (number with optional sign, NULL,
+    * `CURRENT_*`). */
   private[engine] def defaultClause(defn: String): Option[String] = {
-    val n = defn.length
-    def isIdent(c: Char) = c.isLetterOrDigit || c == '_'
-    var i = 0
-    while (i < n) {
-      val c = defn.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        i += 1
-        while (i < n && defn.charAt(i) != c) i += 1
-        i += 1 // past close (doubled quotes re-enter literal scan; fine)
-      } else if (defn.regionMatches(true, i, "DEFAULT", 0, 7) &&
-          (i == 0 || !isIdent(defn.charAt(i - 1))) &&
-          (i + 7 >= n || !isIdent(defn.charAt(i + 7)))) {
-        var j = i + 7
-        while (j < n && defn.charAt(j).isWhitespace) j += 1
-        if (j >= n) return None
-        val start = j
-        defn.charAt(j) match {
-          case '(' =>
-            var depth = 0; var q: Char = 0
-            while (j < n) {
-              val ch = defn.charAt(j)
-              if (q != 0) { if (ch == q) q = 0 }
-              else if (ch == '\'' || ch == '"') q = ch
-              else if (ch == '(') depth += 1
-              else if (ch == ')') {
-                depth -= 1
-                if (depth == 0) return Some(defn.substring(start, j + 1))
-              }
-              j += 1
-            }
-            return None
-          case q @ ('\'' | '"') =>
-            j += 1
-            while (j < n) {
-              if (defn.charAt(j) == q) {
-                if (j + 1 < n && defn.charAt(j + 1) == q) j += 2
-                else return Some(defn.substring(start, j + 1))
-              } else j += 1
-            }
-            return None
-          case _ =>
-            if (defn.charAt(j) == '+' || defn.charAt(j) == '-') j += 1
-            while (j < n && !defn.charAt(j).isWhitespace &&
-              defn.charAt(j) != ',' && defn.charAt(j) != ')') j += 1
-            return Some(defn.substring(start, j))
-        }
-      } else i += 1
+    val toks = SqlLexer.tokens(defn)
+    val at = toks.indexWhere(_.is("DEFAULT"))
+    toks.lift(at + 1).filter(_ => at >= 0).flatMap { v =>
+      val last =
+        if (v.isPunct('(')) SqlLexer.matchParen(toks, at + 1)
+        else if ((v.isPunct('+') || v.isPunct('-')) && at + 2 < toks.length) at + 2
+        else at + 1
+      if (last < 0) None else Some(defn.substring(v.start, toks(last).end))
     }
-    None
   }
 
   /** Inverse of [[parseCreateTable]] for export: render a store meta
@@ -623,7 +450,7 @@ object SqliteDdl {
       if (nameSection.endsWith(")") && nameSection.contains("(")) {
         val p = nameSection.indexOf('(')
         (nameSection.substring(0, p).trim,
-          SqlScript.splitTopLevel(nameSection.substring(p + 1, nameSection.length - 1))
+          SqlLexer.splitTopLevel(nameSection.substring(p + 1, nameSection.length - 1))
             .map(c => SqlScript.unquoteIdent(c.trim)))
       } else (nameSection, Seq.empty[String])
     ViewDef(SqlScript.unquoteIdent(name), cols, m.group(3).trim,
@@ -668,7 +495,7 @@ object SqliteDdl {
       if (eventFull.startsWith("UPDATE")) "UPDATE"
       else if (eventFull.startsWith("INSERT")) "INSERT" else "DELETE"
     val ofCols = Option(m.group(6)).map(
-      SqlScript.splitTopLevel(_).map(c => SqlScript.unquoteIdent(c.trim)))
+      SqlLexer.splitTopLevel(_).map(c => SqlScript.unquoteIdent(c.trim)))
       .getOrElse(Nil)
     TriggerDef(
       name = SqlScript.unquoteIdent(m.group(3).trim),
@@ -719,7 +546,7 @@ object SqliteDdl {
     * misordered tree. */
   def parseCreateIndex(stmt: String): Option[IndexDef] =
     createIndexRe.findFirstMatchIn(stmt).flatMap { m =>
-      val cols = SqlScript.splitTopLevel(m.group(5)).map(_.trim)
+      val cols = SqlLexer.splitTopLevel(m.group(5)).map(_.trim)
       val plain = cols.nonEmpty && cols.forall { c =>
         // a single bare/quoted identifier token: no expressions, no
         // DESC/COLLATE qualifiers
@@ -746,64 +573,35 @@ object SqliteDdl {
         s"ON ${q(table)} (${ix.columns.map(q).mkString(", ")})")
   }
 
-  /** Tokenize a column definition, keeping parenthesized type args (e.g.
-    * `varchar(100)`) attached to their type token. */
-  /** Does `sql` reference `ident` as a COLUMN? Token-level scan over
-    * literal-blanked text: bare identifier tokens (not function calls —
-    * a following `(` — and not qualifiers — a following `.`), plus
-    * double-quoted occurrences in the raw text. Conservative by
+  /** Does `sql` reference `ident` as a COLUMN? Any quoted identifier
+    * spelling it, or a bare one that is neither a function call (a
+    * following `(`) nor a qualifier (a following `.`). Conservative by
     * construction; used by the ALTER DROP COLUMN reference checks. */
   private[engine] def referencesIdent(sql: String, ident: String): Boolean = {
-    val blanked = blankLiterals(sql)
-    val re = ("(?i)(?<![A-Za-z0-9_$])" + java.util.regex.Pattern.quote(ident) +
-      "(?![A-Za-z0-9_$])(?!\\s*[.(])").r
-    re.findFirstIn(blanked).isDefined ||
-      sql.toLowerCase.contains("\"" + ident.toLowerCase + "\"")
+    val toks = SqlLexer.tokens(sql)
+    toks.indices.exists(i => isColumnRef(toks, i) && toks(i).value.equalsIgnoreCase(ident))
   }
 
+  private def isColumnRef(toks: IndexedSeq[SqlLexer.Tok], i: Int): Boolean =
+    toks(i).isName && !toks.lift(i + 1).exists(n => n.isPunct('(') || n.isPunct('.'))
+
   /** Rewrite COLUMN references to `from` as `to` in a SQL fragment:
-    * bare identifier tokens (skipping string literals, function-call
-    * names, and dot-qualifiers like the table in `t.x` — but renaming
-    * the x of `NEW.x`) and double-quoted identifiers. This is SQLite's
-    * ≥3.25 RENAME COLUMN rewrite at token level — exact for the
-    * unambiguous references the engine stores (checks, generated
-    * expressions, trigger bodies, view texts). */
-  private[engine] def renameIdentIn(sql: String, from: String, to: String): String = {
-    val out = new StringBuilder(sql.length)
-    var i = 0; var q: Char = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (q != 0) { out.append(c); if (c == q) q = 0; i += 1 }
-      else if (c == '\'' || c == '`') { q = c; out.append(c); i += 1 }
-      else if (c == '"') {
-        // quoted identifier (with "" doubling)
-        val sb = new StringBuilder
-        var j = i + 1; var closed = false
-        while (j < sql.length && !closed) {
-          if (sql.charAt(j) == '"') {
-            if (j + 1 < sql.length && sql.charAt(j + 1) == '"') { sb += '"'; j += 2 }
-            else { closed = true; j += 1 }
-          } else { sb += sql.charAt(j); j += 1 }
-        }
-        if (closed && sb.toString.equalsIgnoreCase(from))
-          out.append("\"" + to.replace("\"", "\"\"") + "\"")
-        else out.append(sql.substring(i, j))
-        i = j
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < sql.length &&
-          (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-        val tok = sql.substring(start, i)
-        var j = i
-        while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-        val next = if (j < sql.length) sql.charAt(j) else ' '
-        // next '(' = function call; next '.' = qualifier (table/alias)
-        if (next != '(' && next != '.' && tok.equalsIgnoreCase(from)) out.append(to)
-        else out.append(tok)
-      } else { out.append(c); i += 1 }
+    * bare and quoted identifier tokens, skipping string literals,
+    * function-call names, and dot-qualifiers like the table in `t.x` —
+    * but renaming the x of `NEW.x`. A quoted reference keeps its
+    * quoting. This is SQLite's ≥3.25 RENAME COLUMN rewrite at token
+    * level — exact for the unambiguous references the engine stores
+    * (checks, generated expressions, trigger bodies, view texts). */
+  private[engine] def renameIdentIn(sql: String, from: String, to: String): String =
+    SqlLexer.rewrite(sql) { (toks, i) =>
+      val t = toks(i)
+      if (!isColumnRef(toks, i) || !t.value.equalsIgnoreCase(from)) None
+      else Some((i + 1, t.quote match {
+        case 0 => to
+        case '[' => s"[$to]"
+        case q => s"$q${to.replace(q.toString, s"$q$q")}$q"
+      }))
     }
-    out.toString
-  }
 
   /** The declared type text of a column definition (tokens between the
     * name and the first constraint keyword) — what STRICT validation
@@ -817,18 +615,16 @@ object SqliteDdl {
      else tokens.slice(1, constraintStart)).mkString(" ")
   }
 
+  /** A column definition's whitespace-separated words, keeping a
+    * quoted name (`"a b"`) whole and parenthesized type args
+    * (`varchar(100)`) attached to their type word. */
   private def tokenizeColumnDef(defn: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    defn.foreach { c =>
-      if (c == '(') { depth += 1; cur.append(c) }
-      else if (c == ')') { depth -= 1; cur.append(c) }
-      else if (c.isWhitespace && depth == 0) {
-        if (cur.nonEmpty) { out += cur.toString; cur.clear() }
-      } else cur.append(c)
+    val toks = SqlLexer.tokens(defn)
+    val starts = toks.indices.filter(i => i == 0 || (toks(i).depth == 0 &&
+      !toks(i).isPunct(')') && toks(i).start > toks(i - 1).end))
+    starts.indices.map { k =>
+      val last = if (k + 1 < starts.length) starts(k + 1) - 1 else toks.length - 1
+      defn.substring(toks(starts(k)).start, toks(last).end)
     }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq
   }
 }

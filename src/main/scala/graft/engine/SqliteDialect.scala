@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedFuncti
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Concat, And, Between, BinaryComparison, CaseWhen, Cast, Divide, EqualTo, Exists, Expression, GreaterThanOrEqual, If, In, InSubquery, IsNotNull, IsNull, LessThan, Like, ListQuery, Literal, Multiply, NamedExpression, Not, Or, RLike, Remainder, RowFrame, SortOrder, SpecifiedWindowFrame, SubqueryExpression, Subtract, UnaryMinus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, UnresolvedWith}
 import org.apache.spark.sql.graft.SqlInternals
+import graft.engine.SqlLexer.Tok
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -422,18 +423,18 @@ object SqliteDialect {
       case Some(sql) =>
         (like.origin.startIndex, like.origin.stopIndex) match {
           case (Some(si), Some(ei)) if si >= 0 && si <= ei && ei < sql.length =>
-            val toks = tokenize(sql.substring(si, ei + 1))
+            val toks = SqlLexer.tokens(sql.substring(si, ei + 1))
             toks.length >= 2 && toks(toks.length - 2).lower == "escape" &&
-              toks.last.text.startsWith("'")
+              toks.last.kind == SqlLexer.Str
           case _ => hasEscapeClause(sql)
         }
       case None => false
     }
 
   private def hasEscapeClause(sql: String): Boolean = {
-    val toks = tokenize(sql)
+    val toks = SqlLexer.tokens(sql)
     toks.indices.exists(i => toks(i).lower == "escape" &&
-      i + 1 < toks.length && toks(i + 1).text.startsWith("'"))
+      i + 1 < toks.length && toks(i + 1).kind == SqlLexer.Str)
   }
 
   private def rewriteRule(sqlText: Option[String]): PartialFunction[Expression, Expression] = {
@@ -556,68 +557,18 @@ object SqliteDialect {
     "union", "intersect", "except", "all", "distinct", "between", "in", "is",
     "like", "escape", "values", "set", "collate")
 
-  private final case class Tok(text: String, start: Int, end: Int) {
-    def lower: String = text.toLowerCase(Locale.ROOT)
-  }
-
-  /** Quote-aware tokenization: string/identifier literals are single
-    * tokens; words, parens, commas, and operator characters tokenized
-    * individually. `--` line and `/* */` block comments are skipped
-    * entirely — a `glob` inside a comment is not an operator. */
-  private def tokenize(sql: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        while (i < n && sql.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < n && !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-        i = math.min(i + 2, n)
-      } else if (c == '\'' || c == '"' || c == '`') {
-        val start = i
-        i += 1
-        var done = false
-        while (i < n && !done) {
-          if (sql.charAt(i) == c) {
-            if (i + 1 < n && sql.charAt(i + 1) == c) i += 2 // doubled quote
-            else { done = true; i += 1 }
-          } else i += 1
-        }
-        out += Tok(sql.substring(start, i), start, i)
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '_')) i += 1
-        out += Tok(sql.substring(start, i), start, i)
-      } else if (c.isDigit) {
-        val start = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit || sql.charAt(i) == '.')) i += 1
-        out += Tok(sql.substring(start, i), start, i)
-      } else {
-        out += Tok(c.toString, i, i + 1)
-        i += 1
-      }
-    }
-    out.result()
-  }
-
   /** Whether a token can END the left operand of an infix operator: a
     * closing paren, a quoted literal, a number, or a non-keyword word.
     * `glob` right after SELECT / AS / a comma is an identifier in a
     * position where SQLite's grammar also reads it as one (a column or
     * alias legally named glob), never the operator. */
-  private def operandEnd(t: Tok): Boolean = {
-    val c = t.text.charAt(0)
-    c == ')' || c == '\'' || c == '"' || c == '`' || c.isDigit ||
-      ((c.isLetter || c == '_') && !boundaryWords.contains(t.lower))
-  }
+  private def operandEnd(t: Tok): Boolean =
+    t.isPunct(')') || t.kind == SqlLexer.Ident || t.isLiteral || t.kind == SqlLexer.Param ||
+      (t.kind == SqlLexer.Word && !boundaryWords.contains(t.lower))
 
   /** Forward scan for the (exclusive) end of the operand starting at
     * token `start`, honoring paren depth and [[boundaryWords]]. */
-  private def operandEndAfter(toks: Vector[Tok], start: Int): Int = {
+  private def operandEndAfter(toks: IndexedSeq[Tok], start: Int): Int = {
     var depth = 0
     var j = start
     var end = toks.length
@@ -641,7 +592,7 @@ object SqliteDialect {
   /** Backward scan for the start of the operand ending just before token
     * `end` (exclusive), honoring paren depth and [[boundaryWords]].
     * Returns `end` when no operand precedes. */
-  private def operandStartBefore(toks: Vector[Tok], end: Int): Int = {
+  private def operandStartBefore(toks: IndexedSeq[Tok], end: Int): Int = {
     var depth = 0
     var k = end - 1
     var start = 0
@@ -692,52 +643,20 @@ object SqliteDialect {
     * verbatim (a backslash inside an identifier stays an identifier
     * char), as are comments and blob literals' hex bodies (no '\' in
     * the alphabet). DuckDB — the oracle — lexes raw like SQLite, so
-    * this also keeps differential tests honest. */
-  def rewriteStringLiterals(sql: String): String = {
-    if (sql.indexOf('\\') < 0) return sql
-    val out = new StringBuilder(sql.length + 8)
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val e = sql.indexOf('\n', i)
-        val stop = if (e < 0) n else e + 1
-        out.append(sql, i, stop); i = stop
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        val stop = if (e < 0) n else e + 2
-        out.append(sql, i, stop); i = stop
-      } else if (c == '\'') {
-        out.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sql.charAt(i)
-          if (d == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') { out.append("''"); i += 2 }
-            else { out.append('\''); i += 1; done = true }
-          } else if (d == '\\') { out.append("\\\\"); i += 1 }
-          else { out.append(d); i += 1 }
-        }
-      } else if (c == '"' || c == '`') {
-        val q = c
-        out.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sql.charAt(i)
-          out.append(d); i += 1
-          if (d == q) {
-            if (i < n && sql.charAt(i) == q) { out.append(q); i += 1 }
-            else done = true
-          }
-        }
-      } else { out.append(c); i += 1 }
+    * this also keeps differential tests honest. A `[name]` identifier,
+    * which Spark's lexer does not know, is re-spelled `` `name` ``. */
+  def rewriteStringLiterals(sql: String): String =
+    if (sql.indexOf('\\') < 0 && sql.indexOf('[') < 0) sql
+    else SqlLexer.rewrite(sql) { (toks, i) =>
+      val t = toks(i)
+      if (t.kind == SqlLexer.Str && t.text.indexOf('\\') >= 0)
+        Some((i + 1, t.text.replace("\\", "\\\\")))
+      else if (t.quote == '[') Some((i + 1, "`" + t.value.replace("`", "``") + "`"))
+      else None
     }
-    out.toString
-  }
 
   def rewriteCollate(sql: String): String = {
-    val toks = tokenize(sql)
+    val toks = SqlLexer.tokens(sql)
     val found = toks.indices.find { i =>
       toks(i).lower == "collate" && i > 0 && i + 1 < toks.length &&
         Set("nocase", "binary", "rtrim").contains(toks(i + 1).lower)
@@ -800,7 +719,7 @@ object SqliteDialect {
     * parser to reject with its own error rather than corrupted here.
     * Idempotent on SQL without infix GLOB. */
   def rewriteGlob(sql: String): String = {
-    val toks = tokenize(sql)
+    val toks = SqlLexer.tokens(sql)
     val globIdx = toks.zipWithIndex.find { case (t, i) =>
       t.lower == "glob" &&
         // not the function-call form
@@ -845,11 +764,11 @@ object SqliteDialect {
     * each CAST rewrites to the canonical Spark name of its affinity;
     * [[castRule]] then swaps the parsed Cast for SQLite semantics. */
   def rewriteCastTypes(sql: String): String = {
-    val toks = tokenize(sql)
+    val toks = SqlLexer.tokens(sql)
     var i = 0
     while (i + 1 < toks.length) {
       if (toks(i).lower == "cast" && toks(i + 1).text == "(") {
-        val close = matchParen(toks, i + 1)
+        val close = SqlLexer.matchParen(toks, i + 1)
         if (close > 0) {
           // last top-level AS inside this cast's parens
           var depth = 0
@@ -925,7 +844,7 @@ object SqliteDialect {
     * untouched (LATERAL VIEW cannot precede a comma) — the parser's
     * error beats corrupting the statement, same contract as GLOB. */
   def rewriteJsonEach(sql: String): String = {
-    val toks = tokenize(sql)
+    val toks = SqlLexer.tokens(sql)
     val tvfs = Set("json_each", "json_tree")
     var i = 1
     while (i + 1 < toks.length) {
@@ -933,7 +852,7 @@ object SqliteDialect {
       if (tvfs.contains(toks(i).lower) && toks(i + 1).text == "(" &&
           (prev.lower == "from" || prev.lower == "join" || prev.text == ",")) {
         val kernel = toks(i).lower + "_entries"
-        val close = matchParen(toks, i + 1)
+        val close = SqlLexer.matchParen(toks, i + 1)
         if (close > 0) {
           // optional [AS] alias after the call
           var j = close + 1
@@ -967,13 +886,11 @@ object SqliteDialect {
 
   /** Whether a token can be a table alias: an identifier-shaped or
     * quoted word that isn't a clause keyword. */
-  private def isAliasTok(t: Tok): Boolean = {
-    val c = t.text.charAt(0)
-    (c == '`' || c == '"' || c.isLetter || c == '_') && !boundaryWords.contains(t.lower)
-  }
+  private def isAliasTok(t: Tok): Boolean =
+    t.isName && !boundaryWords.contains(t.lower)
 
   def rewriteJsonArrows(sql: String): String = {
-    val toks = tokenize(sql)
+    val toks = SqlLexer.tokens(sql)
     var found = -1
     var isText = false
     var i = 0
@@ -1005,22 +922,18 @@ object SqliteDialect {
     * `start`: a literal / signed number, a (dot-qualified) column, a
     * function call, or a parenthesized group. -1 when nothing usable
     * starts there. */
-  private def primaryEndAfter(toks: Vector[Tok], start: Int): Int = {
+  private def primaryEndAfter(toks: IndexedSeq[Tok], start: Int): Int = {
     if (start >= toks.length) return -1
     var j = start
     val t = toks(j)
-    val c = t.text.charAt(0)
     if (t.text == "+" || t.text == "-") {
-      return if (j + 1 < toks.length && toks(j + 1).text.head.isDigit) j + 1 else -1
+      return if (j + 1 < toks.length && toks(j + 1).kind == SqlLexer.Number) j + 1 else -1
     }
-    if (c == '\'' || c == '"' || c == '`' || c.isDigit) return j
-    if (c == '(') return matchParen(toks, j)
-    if ((c.isLetter || c == '_') && !boundaryWords.contains(t.lower)) {
-      while (j + 2 < toks.length && toks(j + 1).text == "." && {
-        val n = toks(j + 2).text.charAt(0)
-        n.isLetter || n == '_' || n == '`' || n == '"'
-      }) j += 2
-      if (j + 1 < toks.length && toks(j + 1).text == "(") return matchParen(toks, j + 1)
+    if (t.kind == SqlLexer.Ident || t.isLiteral) return j
+    if (t.isPunct('(')) return SqlLexer.matchParen(toks, j)
+    if (t.kind == SqlLexer.Word && !boundaryWords.contains(t.lower)) {
+      while (j + 2 < toks.length && toks(j + 1).text == "." && toks(j + 2).isName) j += 2
+      if (j + 1 < toks.length && toks(j + 1).text == "(") return SqlLexer.matchParen(toks, j + 1)
       return j
     }
     -1
@@ -1028,59 +941,27 @@ object SqliteDialect {
 
   /** Index of the FIRST token of the primary expression whose last token
     * is `end - 1`; -1 when nothing usable ends there. */
-  private def primaryStartBefore(toks: Vector[Tok], end: Int): Int = {
+  private def primaryStartBefore(toks: IndexedSeq[Tok], end: Int): Int = {
     val last = end - 1
     if (last < 0) return -1
     val t = toks(last)
-    val c = t.text.charAt(0)
-    if (c == ')') {
-      val open = matchParenBack(toks, last)
+    if (t.isPunct(')')) {
+      val open = SqlLexer.matchParenBack(toks, last)
       if (open < 0) return -1
       var k = open
       // call form: (possibly dot-qualified) name right before '('
-      if (k > 0 && { val p = toks(k - 1).text.charAt(0); p.isLetter || p == '_' } &&
+      if (k > 0 && toks(k - 1).kind == SqlLexer.Word &&
           !boundaryWords.contains(toks(k - 1).lower)) {
         k -= 1
-        while (k > 1 && toks(k - 1).text == "." && {
-          val p = toks(k - 2).text.charAt(0); p.isLetter || p == '_'
-        }) k -= 2
+        while (k > 1 && toks(k - 1).text == "." && toks(k - 2).kind == SqlLexer.Word) k -= 2
       }
       return k
     }
-    if (c == '\'' || c == '"' || c == '`' || c.isDigit ||
-        ((c.isLetter || c == '_') && !boundaryWords.contains(t.lower))) {
+    if (t.kind == SqlLexer.Ident || t.isLiteral ||
+        (t.kind == SqlLexer.Word && !boundaryWords.contains(t.lower))) {
       var k = last
-      while (k > 1 && toks(k - 1).text == "." && {
-        val p = toks(k - 2).text.charAt(0)
-        p.isLetter || p == '_' || p == '`' || p == '"'
-      }) k -= 2
+      while (k > 1 && toks(k - 1).text == "." && toks(k - 2).isName) k -= 2
       return k
-    }
-    -1
-  }
-
-  private def matchParen(toks: Vector[Tok], open: Int): Int = {
-    var depth = 0; var j = open
-    while (j < toks.length) {
-      toks(j).text match {
-        case "(" => depth += 1
-        case ")" => depth -= 1; if (depth == 0) return j
-        case _ => ()
-      }
-      j += 1
-    }
-    -1
-  }
-
-  private def matchParenBack(toks: Vector[Tok], close: Int): Int = {
-    var depth = 0; var j = close
-    while (j >= 0) {
-      toks(j).text match {
-        case ")" => depth += 1
-        case "(" => depth -= 1; if (depth == 0) return j
-        case _ => ()
-      }
-      j -= 1
     }
     -1
   }

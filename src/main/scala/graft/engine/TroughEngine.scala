@@ -185,24 +185,14 @@ class TroughEngine(
       // escalating one job per round over the segment's tiny part
       // files). Falls back to the one-job limit-collect for plans the
       // driver-local path refuses (many partitions, over-cap rows).
-      val dbg = sys.props.contains("graft.serve.debug")
-      var tD = System.nanoTime()
-      def lapD(tag: String): Unit = if (dbg) {
-        val t1 = System.nanoTime()
-        Console.err.println(f"[serve]   localize.$tag ${(t1 - tD) / 1e6}%.2f ms")
-        tD = t1
-      }
       // driver-local only when the scan is 1-2 splits (per-file open
       // cost is ~3 ms and sequential on the driver — many-file tables
       // read faster as ONE parallel job, below)
       val rowsOpt = SqlInternals
         .driverLocalInternalRows(df, ServeLocalMaxRows, maxPartitions = 2)
-        .map { r => lapD("driverLocal"); r }
         .orElse {
-          lapD("driverLocalRefused")
           val r = df.limit(ServeLocalMaxRows + 1)
             .queryExecution.executedPlan.executeCollect().toSeq
-          lapD("limitCollect")
           if (r.length > ServeLocalMaxRows) None else Some(r)
         }
       rowsOpt match {
@@ -216,19 +206,10 @@ class TroughEngine(
     } catch { case scala.util.control.NonFatal(_) => df }
 
   private def readCtx(segmentId: String): ReadCtx = readCtxs.synchronized {
-    val dbg = sys.props.contains("graft.serve.debug")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      Console.err.println(f"[serve] $tag ${(t1 - t0) / 1e6}%.2f ms")
-      t0 = t1
-    }
     val fp = store.readFingerprint(segmentId)
-    lap("fingerprint")
     val cached = readCtxs.get(segmentId)
     if (cached != null && cached.fingerprint == fp) return cached
     val sess = readSession()
-    lap("session")
     sess.conf.set("spark.sql.shuffle.partitions", "1")
     // AQE's stage-materialization machinery costs ~25 ms on a
     // single-stage serving query that has nothing to re-plan; the
@@ -259,20 +240,15 @@ class TroughEngine(
     // already-tiny serve plans, so excluding it loses nothing here.
     sess.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.PropagateEmptyRelation")
-    lap("conf")
     val ftsDefs = ftsTablesOf(segmentId)
-    lap("ftsDefs")
     store.tables(segmentId).foreach { t =>
       val df0 = store.loadTable(segmentId, t, sess)
-      lap(s"loadTable $t")
       val df = localizeForServe(sess, df0)
-      lap(s"localize $t")
       ftsDefs.get(t.toLowerCase(java.util.Locale.ROOT)) match {
         case Some(fd) if fd.content.isDefined =>
           registerContentFts(segmentId, sess, t, fd, df)
         case _ => df.createOrReplaceTempView(t)
       }
-      lap(s"register $t")
     }
     // register every view up front; a broken one only errors when a
     // query actually references it (registerViews' contract)
@@ -329,7 +305,7 @@ class TroughEngine(
           // the left side is testable.
           val matchOp = "(?is)(\\S+)\\s+MATCH\\b".r
           val isInfixMatch = matchOp
-            .findAllMatchIn(SqliteDdl.blankLiterals(stmt))
+            .findAllMatchIn(SqlLexer.blankLiterals(stmt))
             .exists(m => !m.group(1).equalsIgnoreCase("AS"))
           if (isInfixMatch)
             throw new IllegalArgumentException(
@@ -518,7 +494,7 @@ class TroughEngine(
     // projection: `SELECT * FROM t WHERE rowid = 5` must still DROP
     // the star-leaked hidden column (r16 — the old any-token-anywhere
     // heuristic kept it as a phantom output column).
-    val projected = rowidProjected(SqliteDdl.blankLiterals(sql))
+    val projected = rowidProjected(SqlLexer.blankLiterals(sql))
     out.columns.filter(Fts5.isHiddenCol).foreach { c =>
       out =
         if (c.startsWith("__rid#") && projected)
@@ -849,48 +825,16 @@ class TroughEngine(
   }
 
   /** Rewrite every DOUBLE-QUOTED occurrence of `name` in `text` to a
-    * single-quoted string literal (quote-aware scan; '' / "" escapes
-    * honored; backtick identifiers and single-quoted literals skipped).
+    * single-quoted string literal.
     * Exact-case occurrences rewrite when any exist, else case-insensitive
     * ones (the analyzer reports the name as written, but resolution is
     * case-insensitive). Returns `text` unchanged when nothing matched. */
   private def dqsLiteralize(text: String, name: String): String = {
-    def pass(matchCase: Boolean): String = {
-      val sb = new java.lang.StringBuilder
-      var i = 0
-      val n = text.length
-      while (i < n) {
-        val c = text.charAt(i)
-        if (c == '\'') {
-          var j = i + 1
-          while (j < n && !(text.charAt(j) == '\'' &&
-            (j + 1 >= n || text.charAt(j + 1) != '\''))) {
-            j += (if (text.charAt(j) == '\'') 2 else 1)
-          }
-          val e = math.min(n, j + 1)
-          sb.append(text, i, e); i = e
-        } else if (c == '`') {
-          val e = text.indexOf('`', i + 1)
-          val stop = if (e < 0) n else e + 1
-          sb.append(text, i, stop); i = stop
-        } else if (c == '"') {
-          var j = i + 1
-          val ident = new java.lang.StringBuilder
-          var closed = false
-          while (j < n && !closed) {
-            if (text.charAt(j) == '"') {
-              if (j + 1 < n && text.charAt(j + 1) == '"') { ident.append('"'); j += 2 }
-              else { closed = true; j += 1 }
-            } else { ident.append(text.charAt(j)); j += 1 }
-          }
-          val tok = ident.toString
-          val hit = if (matchCase) tok == name else tok.equalsIgnoreCase(name)
-          if (hit) sb.append('\'').append(tok.replace("'", "''")).append('\'')
-          else sb.append(text, i, j)
-          i = j
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
+    def pass(matchCase: Boolean): String = SqlLexer.rewrite(text) { (toks, i) =>
+      val t = toks(i)
+      val hit = t.quote == '"' &&
+        (if (matchCase) t.value == name else t.value.equalsIgnoreCase(name))
+      if (hit) Some((i + 1, "'" + t.value.replace("'", "''") + "'")) else None
     }
     val exact = pass(matchCase = true)
     if (exact != text) exact else pass(matchCase = false)

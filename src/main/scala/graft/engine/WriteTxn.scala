@@ -358,50 +358,14 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     if (text.indexOf('"') < 0) return text
     val res = resolvable.map(_.toLowerCase(java.util.Locale.ROOT)) ++
       Set("rowid", "_rowid_", "oid")
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'') { // skip string literals ('' escapes)
-        val e = {
-          var j = i + 1
-          while (j < n && !(text.charAt(j) == '\'' &&
-            (j + 1 >= n || text.charAt(j + 1) != '\''))) {
-            j += (if (text.charAt(j) == '\'') 2 else 1)
-          }
-          math.min(n, j + 1)
-        }
-        sb.append(text, i, e); i = e
-      } else if (c == '`') { // skip backtick identifiers
-        val e = text.indexOf('`', i + 1)
-        val stop = if (e < 0) n else e + 1
-        sb.append(text, i, stop); i = stop
-      } else if (c == '"') {
-        // "ident" with "" escapes
-        var j = i + 1
-        val ident = new java.lang.StringBuilder
-        var closed = false
-        while (j < n && !closed) {
-          if (text.charAt(j) == '"') {
-            if (j + 1 < n && text.charAt(j + 1) == '"') { ident.append('"'); j += 2 }
-            else { closed = true; j += 1 }
-          } else { ident.append(text.charAt(j)); j += 1 }
-        }
-        val name = ident.toString
-        if (res.contains(name.toLowerCase(java.util.Locale.ROOT)))
-          sb.append('`').append(name.replace("`", "``")).append('`')
-        else
-          sb.append('\'').append(name.replace("'", "''")).append('\'')
-        i = j
-      } else { sb.append(c); i += 1 }
+    SqlLexer.rewrite(text) { (toks, i) =>
+      val t = toks(i)
+      if (t.quote != '"') None
+      else if (res.contains(t.value.toLowerCase(java.util.Locale.ROOT)))
+        Some((i + 1, "`" + t.value.replace("`", "``") + "`"))
+      else Some((i + 1, "'" + t.value.replace("'", "''") + "'"))
     }
-    sb.toString
   }
-
-  private def hasSelectToken(stmt: String): Boolean =
-    "(?i)(?<![A-Za-z0-9_$])select(?![A-Za-z0-9_$])".r
-      .findFirstIn(SqliteDdl.blankLiterals(stmt)).isDefined
 
   /** Rewrite the TARGET fts table's `rowid`/`_rowid_`/`oid` references
     * in an UPDATE/DELETE tail to the hidden backing column. Scoped
@@ -414,13 +378,10 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     * no FROM of its own (correlated EXISTS(SELECT 1 …)) inherits the
     * enclosing scope's decision. */
   private def rewriteFtsRowids(text: String, targets: Set[String]): String = {
-    val blanked = SqliteDdl.blankLiterals(text)
     val targetsL = targets.map(_.toLowerCase(java.util.Locale.ROOT))
-    val re = ("(?i)([()])|(?<![A-Za-z0-9_$])(select)(?![A-Za-z0-9_$])|" +
-      "(?<![A-Za-z0-9_$])(?:from|join)\\s+([A-Za-z_\"`\\[][A-Za-z0-9_\"`\\]]*)|" +
-      "(?:(?<![A-Za-z0-9_$.])([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*|" +
-      "(?<![A-Za-z0-9_$.]))(rowid|_rowid_|oid)(?![A-Za-z0-9_$])").r
-    val matches = re.findAllMatchIn(blanked).toSeq
+    val toks = SqlLexer.tokens(text)
+    def isRowid(t: SqlLexer.Tok) =
+      t.kind == SqlLexer.Word && Set("rowid", "_rowid_", "oid").contains(t.lower)
     // pass 1: paren regions [start, end) and each SELECT region's
     // direct FROM/JOIN sources
     final case class Region(start: Int, var end: Int = Int.MaxValue,
@@ -428,20 +389,15 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       sources: mutable.ArrayBuffer[String] = mutable.ArrayBuffer())
     val all = mutable.ArrayBuffer[Region]()
     val stack = mutable.ArrayBuffer[Region]()
-    matches.foreach { mm =>
-      if (mm.group(1) != null) {
-        if (mm.group(1) == "(") {
-          val r = Region(mm.start); all += r; stack += r
-        } else if (stack.nonEmpty) {
-          stack.last.end = mm.start; stack.remove(stack.length - 1)
-        }
-      } else if (mm.group(2) != null) {
-        if (stack.nonEmpty) stack.last.isSelect = true
-      } else if (mm.group(3) != null) {
-        if (stack.nonEmpty)
-          stack.last.sources +=
-            SqlScript.unquoteIdent(mm.group(3)).toLowerCase(java.util.Locale.ROOT)
-      }
+    toks.indices.foreach { i =>
+      val t = toks(i)
+      if (t.isPunct('(')) { val r = Region(t.start); all += r; stack += r }
+      else if (t.isPunct(')') && stack.nonEmpty) {
+        stack.last.end = t.start; stack.remove(stack.length - 1)
+      } else if (stack.nonEmpty && t.is("select")) stack.last.isSelect = true
+      else if (stack.nonEmpty && (t.is("from") || t.is("join")) &&
+          toks.lift(i + 1).exists(_.isName))
+        stack.last.sources += toks(i + 1).value.toLowerCase(java.util.Locale.ROOT)
     }
     // pass 2: rewrite decisions — the innermost enclosing SELECT region
     // WITH its own sources decides; source-less select regions and
@@ -453,28 +409,19 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
           case Some(r) => r.sources.forall(targetsL.contains)
           case None => true
         }
-    // java.lang.StringBuilder: the 3-arg append is the (CharSequence,
-    // from, to) overload (scala's would auto-tuple)
-    val sb = new java.lang.StringBuilder
-    var last = 0
-    matches.foreach { mm =>
-      if (mm.group(5) != null) {
-        val qual = Option(mm.group(4)).map(_.toLowerCase(java.util.Locale.ROOT))
-        val rewrite = qual match {
-          case Some(q) => targetsL.contains(q)
-          case None => bareRewrites(mm.start(5))
-        }
-        if (rewrite) {
-          // a target-qualified reference drops its qualifier too: the
-          // single-table predicate paths filter the unaliased frame,
-          // where `t.__rowid` would not resolve
-          val from = if (qual.isDefined) mm.start else mm.start(5)
-          sb.append(text, last, from).append(Fts5.RowidCol)
-          last = mm.end(5)
-        }
-      }
+    // a target-qualified reference drops its qualifier too: the
+    // single-table predicate paths filter the unaliased frame, where
+    // `t.__rowid` would not resolve
+    SqlLexer.rewrite(text) { (ts, i) =>
+      val qualified = i + 2 < ts.length && ts(i).kind == SqlLexer.Word &&
+        ts(i + 1).isPunct('.') && isRowid(ts(i + 2))
+      if (qualified) {
+        if (targetsL.contains(ts(i).lower)) Some((i + 3, Fts5.RowidCol))
+        else Some((i + 3, text.substring(ts(i).start, ts(i + 2).end)))
+      } else if (isRowid(ts(i)) && !(i > 0 && ts(i - 1).isPunct('.')) &&
+          bareRewrites(ts(i).start)) Some((i + 1, Fts5.RowidCol))
+      else None
     }
-    sb.append(text, last, text.length).toString
   }
 
   private def load(table: String): (TableMeta, DataFrame) =
@@ -562,7 +509,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     * column literally named `returning` used UNQUOTED at the top level
     * of the statement will be taken for the clause. */
   private def splitReturning(stmt: String): (String, Option[String]) = {
-    val at = firstTopLevelKw(stmt, "RETURNING")
+    val at = SqlLexer.firstTopLevel(stmt, "RETURNING")
     if (at < 0) (stmt, None)
     else (stmt.substring(0, at),
       Some(stmt.substring(at + 9).trim.stripSuffix(";").trim))
@@ -588,12 +535,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val affected =
       if (meta.generated.isEmpty) affected0
       else GeneratedColumns.recompute(spark, affected0, meta.schema, meta.generated)
-    val items = SqlScript.splitTopLevel(text).map(_.trim).filter(_.nonEmpty)
+    val items = SqlLexer.splitTopLevel(text).map(_.trim).filter(_.nonEmpty)
     require(items.nonEmpty, s"cannot parse RETURNING clause: $text")
     val identRe = "^[A-Za-z_][A-Za-z0-9_]*$".r
     val sel = items.flatMap { it =>
       if (it == "*") meta.schema.fieldNames.toSeq.map(f => s"`$f`")
-      else if (identRe.matches(it) || firstTopLevelKw(it, "AS") >= 0) Seq(it)
+      else if (identRe.matches(it) || SqlLexer.firstTopLevel(it, "AS") >= 0) Seq(it)
       else Seq(s"($it) AS `${it.replace("`", "")}`")
     }
     val view = "__graft_affected"
@@ -705,7 +652,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       }
       val mainQualified = attachedDbs.isEmpty &&
         "(?i)(?<![A-Za-z0-9_$.])main\\s*\\.\\s*[A-Za-z_\"`\\[]".r
-          .findFirstIn(SqliteDdl.blankLiterals(routed)).isDefined
+          .findFirstIn(SqlLexer.blankLiterals(routed, keepIdents = true)).isDefined
       val rewritten =
         if (attachedDbs.isEmpty && !mainQualified) routed
         else SqlScript.firstWord(routed) match {
@@ -742,11 +689,11 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       // predicates/assignments carrying subqueries (WHERE rowid IN
       // (SELECT …)) resolve their relations eagerly under the txn's
       // temp views (r16); statements without one skip the registration
-      if (hasSelectToken(stmt)) withRelationsVisible()(update(stmt))
+      if (SqlLexer.hasWord(stmt, "select")) withRelationsVisible()(update(stmt))
       else update(stmt)
     case "DELETE" =>
       returningBuf = None
-      if (hasSelectToken(stmt)) withRelationsVisible()(delete(stmt))
+      if (SqlLexer.hasWord(stmt, "select")) withRelationsVisible()(delete(stmt))
       else delete(stmt)
     case "ALTER" => alter(stmt)
     case other =>
@@ -771,7 +718,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   private def attach(stmt: String): Unit = {
     val body = stmt.trim.stripSuffix(";").trim
       .replaceFirst("(?is)^ATTACH\\s+(DATABASE\\s+)?", "")
-    val asAt = lastTopLevelKw(body, "AS")
+    val asAt = SqlLexer.lastTopLevel(body, "AS")
     if (asAt < 0) throw new IllegalArgumentException(s"cannot parse: $stmt")
     val fileExpr = body.substring(0, asAt).trim
     val name = SqlScript.unquoteIdent(body.substring(asAt + 2).trim)
@@ -871,28 +818,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     }
   }
 
-  private def lastTopLevelKw(s: String, kw: String): Int = {
-    var depth = 0; var quote: Char = 0; var i = 0; var last = -1
-    val n = kw.length
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 && c.toUpper == kw.charAt(0).toUpper &&
-            i + n <= s.length && s.substring(i, i + n).equalsIgnoreCase(kw) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + n == s.length || s.charAt(i + n).isWhitespace) =>
-          last = i
-        case _ => ()
-      }
-      i += 1
-    }
-    last
-  }
-
   // ------------------------------------------------------- db routing
 
   /** Mark an attached db as referenced by this transaction — sqlite
@@ -933,34 +858,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
           s"segment $s is in cold storage (read-only)")
       }
 
-  /** Scan one identifier token at `i` (bare, `"q"`, `` `q` `` or
-    * `[q]`); returns (unquotedName, endExclusive). */
-  private def scanIdent(text: String, i: Int): Option[(String, Int)] = {
-    if (i >= text.length) return None
-    text.charAt(i) match {
-      case c @ ('"' | '`') =>
-        val sb = new java.lang.StringBuilder
-        var j = i + 1
-        while (j < text.length) {
-          val ch = text.charAt(j)
-          if (ch == c) {
-            if (j + 1 < text.length && text.charAt(j + 1) == c) { sb.append(c); j += 2 }
-            else return Some((sb.toString, j + 1))
-          } else { sb.append(ch); j += 1 }
-        }
-        None
-      case '[' =>
-        val e = text.indexOf(']', i + 1)
-        if (e < 0) None else Some((text.substring(i + 1, e), e + 1))
-      case ch if ch.isLetter || ch == '_' =>
-        var j = i + 1
-        while (j < text.length && (text.charAt(j).isLetterOrDigit ||
-          text.charAt(j) == '_' || text.charAt(j) == '$')) j += 1
-        Some((text.substring(i, j), j))
-      case _ => None
-    }
-  }
-
   private val targetHeadRe = ("(?is)^(\\s*(?:" +
     "INSERT\\s+(?:OR\\s+\\w+\\s+)?INTO|REPLACE\\s+INTO|" +
     "UPDATE(?:\\s+OR\\s+\\w+)?|DELETE\\s+FROM|" +
@@ -983,14 +880,13 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val headEnd = m.end
     val head = m.group(1).trim.toUpperCase.replaceAll("\\s+", " ")
     val verb = head.takeWhile(!_.isWhitespace)
-    val first = scanIdent(stmt, headEnd).getOrElse(return ("main", stmt, -1))
-    var j = first._2
-    while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
-    if (j < stmt.length && stmt.charAt(j) == '.') {
-      var k = j + 1
-      while (k < stmt.length && stmt.charAt(k).isWhitespace) k += 1
-      val name = scanIdent(stmt, k).getOrElse(return ("main", stmt, -1))
-      val q = first._1
+    val toks = SqlLexer.tokens(stmt)
+    val fi = toks.indexWhere(_.start >= headEnd)
+    if (fi < 0 || toks(fi).start != headEnd || !toks(fi).isName) return ("main", stmt, -1)
+    if (toks.lift(fi + 1).exists(_.isPunct('.'))) {
+      val nameTok = toks.lift(fi + 2).filter(_.isName).getOrElse(return ("main", stmt, -1))
+      val name = nameTok.value
+      val q = toks(fi).value
       val ql = q.toLowerCase(java.util.Locale.ROOT)
       if (ql != "main" && !attachedDbs.contains(ql)) {
         // sqlite's error shapes, probed: CREATE says "unknown database",
@@ -1000,19 +896,19 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         val obj =
           if (head.startsWith("DROP TRIGGER")) "trigger"
           else if (head.startsWith("DROP VIEW")) "view" else "table"
-        throw new IllegalArgumentException(s"no such $obj: $q.${name._1}")
+        throw new IllegalArgumentException(s"no such $obj: $q.$name")
       }
       val db = if (ql == "main") "main" else ql
       // the qualified-DML missing-table error keeps the qualifier
       // (probed: "no such table: a.missing")
       if (Set("INSERT", "REPLACE", "UPDATE", "DELETE").contains(verb) &&
-          !scopeHasTableOrView(db, name._1))
-        throw new IllegalArgumentException(s"no such table: $q.${name._1}")
-      if (head.startsWith("DROP TABLE") && !scopeTables(db).exists(_.equalsIgnoreCase(name._1)) &&
-          !scopeViews(db).exists(_.name.equalsIgnoreCase(name._1)) && !head.contains("IF EXISTS"))
-        throw new IllegalArgumentException(s"no such table: $q.${name._1}")
+          !scopeHasTableOrView(db, name))
+        throw new IllegalArgumentException(s"no such table: $q.$name")
+      if (head.startsWith("DROP TABLE") && !scopeTables(db).exists(_.equalsIgnoreCase(name)) &&
+          !scopeViews(db).exists(_.name.equalsIgnoreCase(name)) && !head.contains("IF EXISTS"))
+        throw new IllegalArgumentException(s"no such table: $q.$name")
       markUsed(db); requireWritable(db)
-      (db, stmt.substring(0, headEnd) + stmt.substring(k), headEnd)
+      (db, stmt.substring(0, headEnd) + stmt.substring(nameTok.start), headEnd)
     } else {
       // unqualified: CREATE always lands in main; the rest search
       if (verb == "CREATE" || attachedDbs.isEmpty) {
@@ -1020,7 +916,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         ("main", stmt, headEnd)
       }
       else {
-        val n = first._1
+        val n = toks(fi).value
         val db =
           if (head.startsWith("DROP TRIGGER"))
             dbKeys.find(scopeTriggerNames(_).contains(
@@ -1057,13 +953,10 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val head = m.group(1).trim.toUpperCase
     if (!(head.startsWith("INSERT") || head.startsWith("REPLACE") ||
       head.startsWith("UPDATE") || head.startsWith("DELETE"))) return false
-    scanIdent(b, m.end) match {
-      case Some((_, e)) =>
-        var j = e
-        while (j < b.length && b.charAt(j).isWhitespace) j += 1
-        j < b.length && b.charAt(j) == '.'
-      case None => false
-    }
+    val toks = SqlLexer.tokens(b)
+    val fi = toks.indexWhere(_.start >= m.end)
+    fi >= 0 && toks(fi).start == m.end && toks(fi).isName &&
+      toks.lift(fi + 1).exists(_.isPunct('.'))
   }
 
   /** Keywords that end a FROM-source position — anything else after a
@@ -1076,33 +969,28 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     "OR", "NOT", "USING", "HAVING", "WINDOW", "RETURNING", "VALUES",
     "SELECT", "FROM", "COLLATE", "INDEXED", "ASC", "DESC", "CASE", "AS")
 
-  private val threePartRe =
-    ("(?i)(?<![A-Za-z0-9_$.\"`\\]])([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)").r
-  private val fromSourceRe =
-    ("(?i)(?<![A-Za-z0-9_$.])(FROM|JOIN)\\s+([A-Za-z_][A-Za-z0-9_]*)" +
-      "(\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*))?").r
-  private val shadowNameRe =
-    "(?i)(?<![A-Za-z0-9_$.])([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s*\\(".r
-
   /** Rewrite cross-db references in a statement body (r17 ATTACH):
     * 3-part `db.tbl.col` and FROM/JOIN `db.tbl` become per-scope
     * relation names (bare for the statement's own scope unless
     * `mangleOwn`); unqualified FROM/JOIN sources that resolve OUTSIDE
     * the target scope under sqlite's main-first search order mangle
     * too (CTE names and the routed target at `skipPos` are exempt).
-    * Scans literal-blanked text, splices the original. BARE and
-    * backtick-free identifiers only: a double-quoted qualifier
-    * (`"a"."t"`) stays untouched and resolves loudly or not at all —
+    * A query over the statement's tokens. BARE identifiers only: a
+    * double-quoted qualifier (`"a"."t"`) stays untouched and resolves loudly or not at all —
     * never silently to the wrong db. */
   private def rewriteDbRefs(text: String, ownDb: String,
       mangleOwn: Boolean = false, skipPos: Int = -1,
       qualifiedOnly: Boolean = false,
       foreignRefusal: Option[String] = None): String = {
-    val blanked = SqliteDdl.blankLiterals(text)
+    val toks = SqlLexer.tokens(text)
+    def word(i: Int) = i < toks.length && toks(i).kind == SqlLexer.Word
+    def dot(i: Int) = i < toks.length && toks(i).isPunct('.')
+    def head(i: Int) = word(i) && !(i > 0 && toks(i - 1).isPunct('.'))
     val dbSet = dbKeys.toSet
-    val shadows = shadowNameRe.findAllMatchIn(blanked)
-      .map(_.group(1).toLowerCase(java.util.Locale.ROOT)).toSet
+    // CTE names (`name AS (`) shadow same-named tables
+    val shadows = toks.indices.filter(i => head(i) &&
+      toks.lift(i + 1).exists(_.is("AS")) && toks.lift(i + 2).exists(_.isPunct('(')))
+      .map(toks(_).lower).toSet
     // edits collected as (start, end, replacement), applied right-to-left
     val edits = mutable.ArrayBuffer[(Int, Int, String)]()
     val consumed = mutable.ArrayBuffer[(Int, Int)]()
@@ -1124,51 +1012,46 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     // The column rides on the relation's EXPOSED name — the FROM pass
     // below re-aliases every rewritten source back to its bare table
     // name, so `db.tbl.col` compiles to `tbl`.col regardless of scope.
-    threePartRe.findAllMatchIn(blanked).foreach { mm =>
-      val d = mm.group(1).toLowerCase(java.util.Locale.ROOT)
-      if (dbSet.contains(d)) {
-        resolved(d, mm.group(2)) // foreign-refusal + DETACH-lock effects
-        edits += ((mm.start, mm.end(2), mm.group(2)))
-        consumed += ((mm.start, mm.end))
+    toks.indices.foreach { i =>
+      if (head(i) && dot(i + 1) && word(i + 2) && dot(i + 3) && word(i + 4) &&
+          dbSet.contains(toks(i).lower)) {
+        val tbl = toks(i + 2).text
+        resolved(toks(i).lower, tbl) // foreign-refusal + DETACH-lock effects
+        edits += ((toks(i).start, toks(i + 2).end, tbl))
+        consumed += ((toks(i).start, toks(i + 4).end))
       }
     }
     // pass 2: FROM/JOIN sources, qualified and unqualified
-    fromSourceRe.findAllMatchIn(blanked).foreach { mm =>
-      val identStart = mm.start(2)
+    toks.indices.foreach { i =>
+      val isSource = (toks(i).is("FROM") || toks(i).is("JOIN")) &&
+        !(i > 0 && toks(i - 1).isPunct('.')) && word(i + 1)
+      val qualified = isSource && dot(i + 2) && word(i + 3)
+      val last = if (qualified) i + 3 else i + 1
+      val identStart = if (isSource) toks(i + 1).start else -1
       val inConsumed = consumed.exists { case (s, e) => identStart >= s && identStart < e }
-      val followedByParen = mm.end < blanked.length && {
-        var p = mm.end
-        while (p < blanked.length && blanked.charAt(p).isWhitespace) p += 1
-        p < blanked.length && blanked.charAt(p) == '('
-      }
-      if (!inConsumed && !followedByParen && identStart != skipPos) {
-        val a = mm.group(2)
+      val followedByParen = toks.lift(last + 1).exists(_.isPunct('('))
+      if (isSource && !inConsumed && !followedByParen && identStart != skipPos) {
+        val a = toks(i + 1).text
         val al = a.toLowerCase(java.util.Locale.ROOT)
-        val qualified = mm.group(4) != null
-        val (target, endAt): (Option[(String, String)], Int) =
-          if (qualified && dbSet.contains(al)) (Some((al, mm.group(4))), mm.end)
+        val (target, endTok): (Option[(String, String)], Int) =
+          if (qualified && dbSet.contains(al)) (Some((al, toks(i + 3).text)), i + 3)
           else if (!qualified && !qualifiedOnly && !shadows.contains(al)) {
             val hit =
               if (mangleOwn) Some(ownDb).filter(scopeHasTableOrView(_, a))
               else dbKeys.find(scopeHasTableOrView(_, a))
             hit match {
-              case Some(db) if db != ownDb || mangleOwn => (Some((db, a)), mm.end(2))
+              case Some(db) if db != ownDb || mangleOwn => (Some((db, a)), i + 1)
               case _ => (None, 0)
             }
           } else (None, 0)
         target.foreach { case (db, tbl) =>
           // re-alias to the bare table name unless an explicit alias
           // follows — sqlite exposes `db.tbl` as `tbl`
-          var p = endAt
-          while (p < blanked.length && blanked.charAt(p).isWhitespace) p += 1
-          val aliasFollows = scanIdent(blanked, p) match {
-            case Some((tok, _)) => !aliasStops.contains(tok.toUpperCase) ||
-              tok.equalsIgnoreCase("AS")
-            case None => false
-          }
+          val aliasFollows = toks.lift(endTok + 1).exists(t => t.isName &&
+            (!aliasStops.contains(t.text.toUpperCase) || t.is("AS")))
           val rel = resolved(db, tbl)
           val rep = if (aliasFollows) rel else s"$rel AS $tbl"
-          edits += ((identStart, endAt, rep))
+          edits += ((identStart, toks(endTok).end, rep))
         }
       }
     }
@@ -1300,12 +1183,11 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val asg = assigned.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
     def hit(c: String): Boolean = asg.contains(c.toLowerCase(java.util.Locale.ROOT))
     def checkMentions(expr: String): Boolean = {
-      // blankStringLiterals, not blankLiterals: a CHECK referencing an
-      // assigned column as a QUOTED identifier (CHECK("c" > 0)) must
-      // stay in the statement-time gate — erasing identifier quotes
+      // quoted names kept: a CHECK referencing an assigned column as a
+      // QUOTED identifier (CHECK("c" > 0)) must stay in the statement-time gate — erasing identifier quotes
       // dropped it, deferring the violation to the commit gate where a
       // later statement could wash it (r18 advice)
-      val blanked = SqliteDdl.blankStringLiterals(expr)
+      val blanked = SqlLexer.blankLiterals(expr, keepIdents = true)
         .toLowerCase(java.util.Locale.ROOT)
       asg.exists(c =>
         ("(^|[^a-z0-9_])" + java.util.regex.Pattern.quote(c) + "([^a-z0-9_]|$)").r
@@ -1632,10 +1514,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     "(?is)^\\s*ALTER\\s+TABLE\\s+(\\S+)\\s+ADD(\\s+COLUMN)?\\s+(.+)$".r
   private val alterRenameRe =
     "(?is)^\\s*ALTER\\s+TABLE\\s+(\\S+)\\s+RENAME\\s+TO\\s+(\\S+)\\s*$".r
-  private val alterRenameColRe =
-    "(?is)^\\s*ALTER\\s+TABLE\\s+(\\S+)\\s+RENAME\\s+(?:COLUMN\\s+)?(\\S+)\\s+TO\\s+(\\S+)\\s*;?\\s*$".r
-  private val alterDropRe =
-    "(?is)^\\s*ALTER\\s+TABLE\\s+(\\S+)\\s+DROP(?:\\s+COLUMN)?\\s+(\\S+)\\s*;?\\s*$".r
+  /** One column name in any SQLite quoting (a quoted one may hold spaces). */
+  private val colNamePat = """("(?:[^"]|"")*"|`(?:[^`]|``)*`|\[[^\]]*\]|[^\s"`\[;]+)"""
+  private val alterRenameColRe = ("(?is)^\\s*ALTER\\s+TABLE\\s+(\\S+)\\s+RENAME\\s+(?:COLUMN\\s+)?" +
+    colNamePat + "\\s+TO\\s+" + colNamePat + "\\s*;?\\s*$").r
+  private val alterDropRe = ("(?is)^\\s*ALTER\\s+TABLE\\s+(\\S+)\\s+DROP(?:\\s+COLUMN)?\\s+" +
+    colNamePat + "\\s*;?\\s*$").r
   private def alter(stmt: String): Unit = stmt match {
     case alterRenameRe(from, to) =>
       val (meta, df) = load(SqlScript.unquoteIdent(from))
@@ -1776,7 +1660,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         // body uses it that way (probed message shape)
         val texts = (tg.when.toSeq ++ tg.body).mkString(" ")
         val qual = s"(?i)\\b(NEW|OLD)\\s*\\.\\s*${java.util.regex.Pattern.quote(colName)}\\b".r
-          .findFirstMatchIn(SqliteDdl.blankLiterals(texts))
+          .findFirstMatchIn(SqlLexer.blankLiterals(texts))
           .map(m => s"${m.group(1).toUpperCase}.$colName")
         throw new IllegalArgumentException(
           s"error in trigger ${tg.name} after drop column: " +
@@ -1841,14 +1725,13 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       // SQLite backfills existing rows with the declared DEFAULT (or
       // NULL when absent) — dropping it would silently NULL-fill rows
       // that queries then expect to hold the default
-      val upperTail = SqliteDdl.blankLiterals(tail).toUpperCase
       // SQLite's own prepare-time refusals for un-backfillable shapes
-      if (upperTail.matches("(?s).*\\bUNIQUE\\b.*"))
+      if (SqlLexer.hasWord(tail, "UNIQUE"))
         throw new IllegalArgumentException("Cannot add a UNIQUE column")
-      if (upperTail.matches("(?s).*\\bPRIMARY\\s+KEY\\b.*"))
+      if (SqlLexer.hasWord(tail, "PRIMARY", "KEY"))
         throw new IllegalArgumentException("Cannot add a PRIMARY KEY column")
       val dflt = SqliteDdl.defaultClause(colDef)
-      val nn = SqliteDdl.hasNotNull(tail)
+      val nn = SqlLexer.hasWord(tail, "NOT", "NULL")
       // SQLite's refusal, which since 3.35 applies only when rows exist
       // to backfill (an empty table takes the constraint fine)
       if (nn && dflt.forall(_.equalsIgnoreCase("NULL")) && df.limit(1).count() > 0)
@@ -2096,7 +1979,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       .orElse(Option(m.group(2)).map(_ => "REPLACE"))
     val table = SqlScript.unquoteIdent(m.group(3))
     var colList = Option(m.group(4)).map(
-      s => SqlScript.splitTopLevel(s).map(SqlScript.unquoteIdent))
+      s => SqlLexer.splitTopLevel(s).map(SqlScript.unquoteIdent))
     if (isView(table)) {
       // INSTEAD OF INSERT: the trigger programs ARE the write
       if (conflict.isDefined || upsertClause.isDefined)
@@ -2161,11 +2044,11 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         // Evaluate each tuple as a SELECT so arbitrary expressions work
         // (incl. the client's datetime('<iso>') literals, which are UDF
         // calls and therefore not allowed in Spark inline VALUES tables).
-        val tuples = SqlScript.splitTopLevel(m.group(6))
+        val tuples = SqlLexer.splitTopLevel(m.group(6))
         val targetCols = colList.getOrElse(baseCols)
         val selects = tuples.map { t =>
           val inner = t.trim.stripPrefix("(").stripSuffix(")")
-          val exprs = SqlScript.splitTopLevel(inner)
+          val exprs = SqlLexer.splitTopLevel(inner)
           require(exprs.length == targetCols.length,
             s"INSERT arity mismatch: ${exprs.length} values for ${targetCols.length} columns")
           "SELECT " + exprs.zip(targetCols)
@@ -2305,9 +2188,9 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val targetCols = cols.map(c => if (isRowidAlias(c)) Fts5.RowidCol else c)
     val frames: Seq[DataFrame] =
       if (body.toUpperCase.startsWith("VALUES")) {
-        SqlScript.splitTopLevel(tuples0).map { t =>
+        SqlLexer.splitTopLevel(tuples0).map { t =>
           val inner = t.trim.stripPrefix("(").stripSuffix(")")
-          val exprs = SqlScript.splitTopLevel(inner)
+          val exprs = SqlLexer.splitTopLevel(inner)
           require(exprs.length == targetCols.length,
             s"INSERT arity mismatch: ${exprs.length} values for " +
               s"${targetCols.length} columns")
@@ -2499,30 +2382,11 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   /** Find the last top-level `ON CONFLICT` (outside quotes/parens) and
     * split the statement there. Returns (insert-part, Some(clause)). */
   private def splitOnConflict(s: String): (String, Option[String]) = {
-    var depth = 0; var quote: Char = 0; var i = 0; var at = -1
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'o' | 'O' if depth == 0 &&
-            (i == 0 || { val p = s.charAt(i - 1); !p.isLetterOrDigit && p != '_' }) &&
-            s.regionMatches(true, i, "ON", 0, 2) =>
-          var j = i + 2
-          if (j < s.length && s.charAt(j).isWhitespace) {
-            while (j < s.length && s.charAt(j).isWhitespace) j += 1
-            if (s.regionMatches(true, j, "CONFLICT", 0, 8) &&
-                (j + 8 == s.length ||
-                  { val n = s.charAt(j + 8); !n.isLetterOrDigit && n != '_' }))
-              at = i
-          }
-        case _ => ()
-      }
-      i += 1
-    }
-    if (at < 0) (s, None) else (s.substring(0, at), Some(s.substring(at)))
+    val toks = SqlLexer.tokens(s)
+    val at = toks.indices.lastIndexWhere(i => toks(i).depth == 0 && toks(i).is("ON") &&
+      toks.lift(i + 1).exists(_.is("CONFLICT")))
+    if (at < 0) (s, None)
+    else (s.substring(0, toks(at).start), Some(s.substring(toks(at).start)))
   }
 
   private val onConflictRe =
@@ -2549,7 +2413,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       aligned0: DataFrame, clause: String): (TableMeta, DataFrame, DataFrame) = {
     val m = onConflictRe.findFirstMatchIn(clause.trim).getOrElse(
       throw new IllegalArgumentException(s"cannot parse ON CONFLICT clause: $clause"))
-    val target = Option(m.group(1)).map(SqlScript.splitTopLevel(_).map(c =>
+    val target = Option(m.group(1)).map(SqlLexer.splitTopLevel(_).map(c =>
       // strip per-column COLLATE/direction, as in index/pk parsing
       SqlScript.unquoteIdent(c.trim.split("\\s+").head)))
     val doNothing = m.group(2).equalsIgnoreCase("NOTHING")
@@ -2581,12 +2445,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
             "one statement is not supported (SQLite folds them one at a time); " +
             "pre-aggregate the inserted rows instead")
       val setBody = m.group(3)
-      val whereAt = topLevelWhere(setBody)
+      val whereAt = SqlLexer.lastTopLevel(setBody, "WHERE")
       val (setPart, predPart) =
         if (whereAt < 0) (setBody, None)
         else (setBody.substring(0, whereAt), Some(setBody.substring(whereAt + 5)))
       val rawAssigns: Seq[(StructField, Column)] =
-        SqlScript.splitTopLevel(setPart).map { assignment =>
+        SqlLexer.splitTopLevel(setPart).map { assignment =>
           val eq = topLevelEq(assignment)
           val colName = SqlScript.unquoteIdent(assignment.substring(0, eq).trim)
           val rhs = dexpr(rewriteExcluded(assignment.substring(eq + 1).trim))
@@ -2665,93 +2529,20 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   }
 
   /** Rewrite `excluded.<ident>` references (any SQLite ident quoting) to
-    * the join's `__exc_<ident>` columns — quote-aware so text literals
-    * mentioning "excluded." survive untouched. */
-  private def rewriteExcluded(s: String): String = {
-    val out = new StringBuilder
-    var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { out.append(c); if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out.append(c); i += 1 }
-      else if ((c == 'e' || c == 'E') && s.regionMatches(true, i, "excluded", 0, 8) &&
-          (i == 0 || { val p = s.charAt(i - 1); !p.isLetterOrDigit && p != '_' && p != '.' })) {
-        var j = i + 8
-        while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        if (j < s.length && s.charAt(j) == '.') {
-          j += 1
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          val (name, end) =
-            if (j >= s.length) (null, j)
-            else s.charAt(j) match {
-              case '`' => val e = s.indexOf('`', j + 1); (s.substring(j + 1, e), e + 1)
-              case '[' => val e = s.indexOf(']', j + 1); (s.substring(j + 1, e), e + 1)
-              case ch if ch.isLetter || ch == '_' =>
-                var e = j
-                while (e < s.length && (s.charAt(e).isLetterOrDigit || s.charAt(e) == '_')) e += 1
-                (s.substring(j, e), e)
-              case _ => (null, j)
-            }
-          if (name == null) { out.append(c); i += 1 }
-          else { out.append('`').append("__exc_").append(name).append('`'); i = end }
-        } else { out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+    * the join's `__exc_<ident>` columns. */
+  private def rewriteExcluded(s: String): String =
+    WriteTxn.rewriteRowRefs(s, Set("excluded"), (_, name) => s"`__exc_$name`")
 
-  /** Index of the last top-level occurrence of ` WHERE ` (case-
-    * insensitive, outside quotes and parens), or -1. Last occurrence
-    * because SET/DELETE bodies may contain subqueries with their own
-    * WHERE; a regex split would also match WHERE inside string
-    * literals (`SET note = 'see WHERE docs'`). */
-  private def topLevelWhere(s: String): Int = {
-    var depth = 0; var quote: Char = 0; var i = 0; var found = -1
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'w' | 'W' if depth == 0 && i + 6 <= s.length &&
-            s.substring(i, i + 5).equalsIgnoreCase("where") &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + 5 == s.length || s.charAt(i + 5).isWhitespace) =>
-          found = i
-        case _ => ()
-      }
-      i += 1
+  /** The predicate of a DELETE tail `[WHERE pred]`: None when the tail
+    * is empty, refused when it is anything but a WHERE clause. */
+  private def deleteWhere(rest: String, stmt: String): Option[String] =
+    SqlLexer.tokens(rest).headOption.map { t =>
+      require(t.is("WHERE") && rest.length > t.end, s"cannot parse DELETE statement: $stmt")
+      rest.substring(t.end)
     }
-    found
-  }
-
-  /** Index of the FIRST top-level occurrence of keyword `kw` (not inside
-    * quotes or parens, whitespace-delimited); -1 if absent. */
-  private def firstTopLevelKw(s: String, kw: String): Int = {
-    var depth = 0; var quote: Char = 0; var i = 0
-    val n = kw.length
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 && (c == kw.charAt(0) || c.toUpper == kw.charAt(0).toUpper) &&
-            i + n <= s.length && s.substring(i, i + n).equalsIgnoreCase(kw) &&
-            (i == 0 || s.charAt(i - 1).isWhitespace) &&
-            (i + n == s.length || s.charAt(i + n).isWhitespace || s.charAt(i + n) == '(') =>
-          return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
-  }
 
   private val updateHeadRe =
-    "(?is)^\\s*UPDATE\\s+(\\S+)(?:\\s+AS\\s+(\\S+))?\\s+SET\\s+(.*)$".r
+    "(?is)^\\s*UPDATE\\s+(\\S+)(?:\\s+AS\\s+(\\S+))?\\s+SET\\b\\s*(.*)$".r
   private def update(stmt0: String): Unit = {
     val (stmt, retText) = splitReturning(stmt0)
     val m = updateHeadRe.findFirstMatchIn(stmt).getOrElse(
@@ -2783,16 +2574,15 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       if (ftsDefU.exists(_.hasRowids))
         rewriteFtsRowids(body0, Set(table) ++ alias)
       else body0
-    val fromAt = firstTopLevelKw(body, "FROM")
+    val fromAt = SqlLexer.firstTopLevel(body, "FROM")
     if (fromAt >= 0) { updateFrom(table, alias, metaL, dfL, body, fromAt, retText); return }
-    val whereAt = topLevelWhere(body)
+    val whereAt = SqlLexer.lastTopLevel(body, "WHERE")
     val (setPart, predPart) =
       if (whereAt < 0) (body, None)
       else (body.substring(0, whereAt), Some(body.substring(whereAt + 5)))
-    val tParse0 = System.nanoTime()
     val pred = predPart.map(dpred).getOrElse(lit(true))
     val rawAssigns: Seq[(StructField, Column)] =
-      SqlScript.splitTopLevel(setPart).map { assignment =>
+      SqlLexer.splitTopLevel(setPart).map { assignment =>
         val eq = topLevelEq(assignment)
         val colName = SqlScript.unquoteIdent(assignment.substring(0, eq).trim)
         val valueExpr = dexpr(assignment.substring(eq + 1).trim)
@@ -2801,7 +2591,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
           throw new IllegalArgumentException(s"no such column: $colName"))
         field -> valueExpr
       }
-    WriteTxn.profAdd("upd.parse", System.nanoTime() - tParse0)
     // STRICT ANY adoption for SET targets: an assigned value of a new
     // storage class adapts the column type before coercion — but only
     // when the predicate actually selects a row (ADVICE r10: `UPDATE t
@@ -2845,23 +2634,17 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     // pre-statement row state (SQLite semantics) — sequential
     // withColumn would let later assignments see earlier ones and
     // re-evaluate the predicate against already-updated columns
-    val tSel0 = System.nanoTime()
     val out = df.select(meta.schema.fields.map { f =>
       assignments.get(f.name)
         .map(v => when(pred, v).otherwise(col(f.name)).as(f.name))
         .getOrElse(col(f.name))
     }.toSeq: _*)
-    WriteTxn.profAdd("upd.select", System.nanoTime() - tSel0)
     // statement-time constraint gate: SQLite errors at the UPDATE, and
     // a commit-only check could be washed by a later statement
     // (fuzz-caught); restricted to constraints the assigned columns
     // can break (r18) — zero jobs when none intersect
-    val tEnf0 = System.nanoTime()
     enforceUniqueForUpdate(table, meta, out, assignments.keys)
-    WriteTxn.profAdd("upd.enforce", System.nanoTime() - tEnf0)
-    val tStage0 = System.nanoTime()
     stage(table, meta, out)
-    WriteTxn.profAdd("upd.stage", System.nanoTime() - tStage0)
     retText.foreach { t =>
       // post-update image of the rows the predicate selected
       val affected = df.where(coalesce(pred, lit(false)))
@@ -2890,13 +2673,13 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       retText: Option[String] = None): Unit = {
     val setPart = body.substring(0, fromAt)
     val rest = body.substring(fromAt + 4)
-    val whereAt = topLevelWhere(rest)
+    val whereAt = SqlLexer.lastTopLevel(rest, "WHERE")
     val (fromText, predText) =
       if (whereAt < 0) (rest.trim.stripSuffix(";").trim, None)
       else (rest.substring(0, whereAt),
             Some(rest.substring(whereAt + 5).trim.stripSuffix(";").trim))
     val assigns0: Seq[(StructField, String)] =
-      SqlScript.splitTopLevel(setPart).map { assignment =>
+      SqlLexer.splitTopLevel(setPart).map { assignment =>
         val eq = topLevelEq(assignment)
         val colName = SqlScript.unquoteIdent(assignment.substring(0, eq).trim)
         requireNotGenerated(meta0, colName, "UPDATE")
@@ -3040,26 +2823,17 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     }
   }
 
-  /** index of the first top-level '=' (not inside quotes/parens, not part
-    * of '==', '<=', '>=', '!='). */
+  /** Offset of the first top-level assignment `=` (not part of `==`,
+    * `<=`, `>=`, `!=`). */
   private def topLevelEq(s: String): Int = {
-    var depth = 0; var quote: Char = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '=' if depth == 0 =>
-          val prev = if (i > 0) s.charAt(i - 1) else ' '
-          val next = if (i + 1 < s.length) s.charAt(i + 1) else ' '
-          if (prev != '<' && prev != '>' && prev != '!' && prev != '=' && next != '=') return i
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"cannot parse assignment: $s")
+    val toks = SqlLexer.tokens(s)
+    def glued(a: Int, b: Int) = toks(a).end == toks(b).start
+    toks.indices.find { i =>
+      toks(i).depth == 0 && toks(i).isPunct('=') &&
+        !(i > 0 && glued(i - 1, i) && "<>!=".contains(toks(i - 1).text)) &&
+        !(i + 1 < toks.length && glued(i, i + 1) && toks(i + 1).isPunct('='))
+    }.map(toks(_).start).getOrElse(
+      throw new IllegalArgumentException(s"cannot parse assignment: $s"))
   }
 
   private val deleteHeadRe = "(?is)^\\s*DELETE\\s+FROM\\s+(\\S+)\\s*(.*)$".r
@@ -3086,13 +2860,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       if (ftsDefD.exists(_.hasRowids))
         rewriteFtsRowids(rest0, Set(table))
       else rest0
-    val delPred: Column =
-      if (rest.isEmpty) lit(true)
-      else {
-        require(rest.length > 5 && rest.substring(0, 5).equalsIgnoreCase("where") &&
-          rest.charAt(5).isWhitespace, s"cannot parse DELETE statement: $stmt")
-        coalesce(dpred(rest.substring(6)), lit(false))
-      }
+    val delPred: Column = deleteWhere(rest, stmt)
+      .map(p => coalesce(dpred(p), lit(false))).getOrElse(lit(true))
     val trigs = activeTriggers(table, "DELETE")
     if (trigs.nonEmpty) {
       refuseReturningWithTriggers(retText, haveTriggers = true)
@@ -3162,10 +2931,10 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         runSelect("SELECT " +
           viewCols.map(c => s"NULL AS `$c`").mkString(", "))
       else if (body.toUpperCase.startsWith("VALUES")) {
-        val tuples = SqlScript.splitTopLevel(valuesTail)
+        val tuples = SqlLexer.splitTopLevel(valuesTail)
         val selects = tuples.map { t =>
           val inner = t.trim.stripPrefix("(").stripSuffix(")")
-          val exprs = SqlScript.splitTopLevel(inner)
+          val exprs = SqlLexer.splitTopLevel(inner)
           require(exprs.length == targetCols.length,
             s"INSERT arity mismatch: ${exprs.length} values for ${targetCols.length} columns")
           "SELECT " + exprs.zip(targetCols)
@@ -3187,16 +2956,16 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   }
 
   private def viewUpdate(view: String, body: String): Unit = {
-    if (firstTopLevelKw(body, "FROM") >= 0)
+    if (SqlLexer.firstTopLevel(body, "FROM") >= 0)
       throw new UnsupportedOperationException(
         "UPDATE ... FROM on a view is not supported")
-    val whereAt = topLevelWhere(body)
+    val whereAt = SqlLexer.lastTopLevel(body, "WHERE")
     val (setPart, predPart) =
       if (whereAt < 0) (body, None)
       else (body.substring(0, whereAt), Some(body.substring(whereAt + 5)))
     val (viewCols, vdf) = viewFrame(view)
     val assignments: Seq[(String, Column)] =
-      SqlScript.splitTopLevel(setPart).map { a =>
+      SqlLexer.splitTopLevel(setPart).map { a =>
         val eq = topLevelEq(a)
         val colName = SqlScript.unquoteIdent(a.substring(0, eq).trim)
         val c = viewCols.find(_.equalsIgnoreCase(colName)).getOrElse(
@@ -3224,13 +2993,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     if (trigs.isEmpty)
       throw new IllegalArgumentException(s"cannot modify $view because it is a view")
     val (viewCols, vdf) = viewFrame(view)
-    val pred: Column =
-      if (rest.isEmpty) lit(true)
-      else {
-        require(rest.length > 5 && rest.substring(0, 5).equalsIgnoreCase("where") &&
-          rest.charAt(5).isWhitespace, s"cannot parse DELETE statement: $rest")
-        coalesce(dpred(rest.substring(6)), lit(false))
-      }
+    val pred: Column = deleteWhere(rest, rest)
+      .map(p => coalesce(dpred(p), lit(false))).getOrElse(lit(true))
     val rows = streamRows(vdf.where(pred))
     fireInsteadOf(trigs, viewCols, rows.map(r => (Some(r.toSeq.toIndexedSeq), None)))
   }
@@ -3340,16 +3104,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
             val handled = raw != null &&
               compileLocalBody(tg, bi, b0).exists(runCompiledBody(_, raw))
             if (!handled) {
-              val tP0 = System.nanoTime()
               val b = prep(b0)
-              WriteTxn.profAdd("prep", System.nanoTime() - tP0)
-              val tE0 = System.nanoTime()
               SqlScript.firstWord(b) match {
                 // SELECT bodies run for their side effects (RAISE guards)
                 case "SELECT" | "WITH" => runSelect(b).collect()
                 case _ => execute(b)
               }
-              WriteTxn.profAdd("exec", System.nanoTime() - tE0)
             }
           }
         } finally firingStack = firingStack.tail
@@ -3389,7 +3149,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val pat = ("(^|[^a-z0-9_])" +
       java.util.regex.Pattern.quote(table.toLowerCase) + "([^a-z0-9_]|$)").r
     trigs.exists(tg => (tg.when.toSeq ++ tg.body).exists { text =>
-      pat.findFirstIn(SqliteDdl.blankLiterals(text).toLowerCase).isDefined
+      pat.findFirstIn(SqlLexer.blankLiterals(text, keepIdents = true).toLowerCase).isDefined
     })
   }
 
@@ -3495,17 +3255,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   private def compileLocalBody(tg: SqliteDdl.TriggerDef, idx: Int,
       template: String): Option[CompiledBody] =
     compiledBodies.getOrElseUpdate((tg.name.toLowerCase + "#" + tg.table, idx), {
-      try {
-        val r = buildCompiledBody(template)
-        if (r.isEmpty && sys.env.contains("GRAFT_TRIG_PROF"))
-          System.err.println(s"[trig-compile] shape fallback: $template")
-        r
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          if (sys.env.contains("GRAFT_TRIG_PROF"))
-            System.err.println(s"[trig-compile] failed: $template -> $e")
-          None
-      }
+      try buildCompiledBody(template)
+      catch { case scala.util.control.NonFatal(_) => None }
     })
 
   private def buildCompiledBody(template: String): Option[CompiledBody] = {
@@ -3549,24 +3300,20 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       StructField(name, f.dataType, nullable = true)
     }
     val body = rewriteDqs(body0, fields.map(_.name).toSet + table)
-    if (firstTopLevelKw(body, "FROM") >= 0) return None // UPDATE..FROM
-    val whereAt = topLevelWhere(body)
+    if (SqlLexer.firstTopLevel(body, "FROM") >= 0) return None // UPDATE..FROM
+    val whereAt = SqlLexer.lastTopLevel(body, "WHERE")
     val (setPart, predText) = kind match {
       case "UPDATE" =>
         if (whereAt < 0) (body, None)
         else (body.substring(0, whereAt), Some(body.substring(whereAt + 5)))
       case _ =>
-        val rest = body.trim
-        if (rest.isEmpty) ("", None)
-        else {
-          if (!(rest.length > 5 && rest.substring(0, 5).equalsIgnoreCase("where") &&
-              rest.charAt(5).isWhitespace)) return None
-          ("", Some(rest.substring(6)))
-        }
+        val where = SqlLexer.tokens(body).headOption
+        if (where.exists(!_.is("WHERE"))) return None
+        ("", where.map(t => body.substring(t.end)))
     }
     val assigns: Seq[(StructField, Column)] =
       if (kind != "UPDATE") Nil
-      else SqlScript.splitTopLevel(setPart).map { assignment =>
+      else SqlLexer.splitTopLevel(setPart).map { assignment =>
         val eq = topLevelEq(assignment)
         if (eq < 0) return None
         val colName = SqlScript.unquoteIdent(assignment.substring(0, eq).trim)
@@ -3615,7 +3362,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       raw: (String, String) => Any): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val tG0 = System.nanoTime()
     if (attachedDbs.nonEmpty || activeDb != "main") return false
     if (!working.contains(cb.table)) return false
     val (meta, df) = working(cb.table)
@@ -3629,8 +3375,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     if (activeTriggers(cb.table, cb.kind,
         if (cb.kind == "UPDATE") Some(cb.assigned) else None).nonEmpty)
       return false
-    WriteTxn.profAdd("cb.gate", System.nanoTime() - tG0)
-    val tImg0 = System.nanoTime()
     val img = new GenericInternalRow(cb.markers.indices.map { i =>
       val (kw, c) = cb.markers(i)
       raw(kw, c) match {
@@ -3640,8 +3384,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         case v => cb.converters(i)(v)
       }
     }.toArray[Any])
-    WriteTxn.profAdd("cb.img", System.nanoTime() - tImg0)
-    val tEval0 = System.nanoTime()
     val joined = new JoinedRow
     val data = lr.data
     val out = new mutable.ArrayBuffer[org.apache.spark.sql.catalyst.InternalRow](data.length)
@@ -3655,11 +3397,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       } else out += r
       i += 1
     }
-    WriteTxn.profAdd("cb.eval", System.nanoTime() - tEval0)
-    val tSt0 = System.nanoTime()
     stage(cb.table, meta, SqlInternals.ofRows(spark,
       LocalRelation(lr.output.map(_.newInstance()), out.toSeq)))
-    WriteTxn.profAdd("cb.stage", System.nanoTime() - tSt0)
     true
   }
 
@@ -3726,7 +3465,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     * fine. */
   private def vecPure(text: String): Boolean =
     "(^|[^a-z0-9_])(select|raise)([^a-z0-9_]|$)".r
-      .findFirstIn(SqliteDdl.blankLiterals(text).toLowerCase).isEmpty
+      .findFirstIn(SqlLexer.blankLiterals(text).toLowerCase).isEmpty
 
   /** Compile the ordered firing programs against image-column names
     * produced by `resolve` (e.g. NEW.x → `__new_x`), or None when any
@@ -3793,24 +3532,24 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val m = vecInsertRe.findFirstMatchIn(b.trim).getOrElse(return None)
     if (!vecPure(m.group(3))) return None
     val target = SqlScript.unquoteIdent(m.group(1))
-    val tuples = SqlScript.splitTopLevel(m.group(3))
+    val tuples = SqlLexer.splitTopLevel(m.group(3))
     if (tuples.length != 1) return None
     val tup = tuples.head.trim
     if (!(tup.startsWith("(") && tup.endsWith(")"))) return None
-    val exprs = SqlScript.splitTopLevel(tup.substring(1, tup.length - 1))
+    val exprs = SqlLexer.splitTopLevel(tup.substring(1, tup.length - 1))
     if (isView(target) || !tableNames.exists(_.equalsIgnoreCase(target)))
       return None // the general path raises SQLite's own error
     // content= fts targets and fts command inserts carry rowid/
     // command column mappings only insert() knows — general path
     // (r15; the canonical external-content sync-trigger shape)
     if (ftsDefOf(target).exists(fd => fd.content.isDefined) ||
-        Option(m.group(2)).exists(g => SqlScript.splitTopLevel(g)
+        Option(m.group(2)).exists(g => SqlLexer.splitTopLevel(g)
           .map(SqlScript.unquoteIdent)
           .exists(c => c.equalsIgnoreCase(target) || isRowidAlias(c))))
       return None
     val (bMeta, _) = load(target)
     val bFields = bMeta.schema.fields
-    val colList = Option(m.group(2)).map(SqlScript.splitTopLevel(_)
+    val colList = Option(m.group(2)).map(SqlLexer.splitTopLevel(_)
       .map(SqlScript.unquoteIdent)).getOrElse(bFields.map(_.name).toSeq)
     if (exprs.length != colList.length) return None // general path raises the arity error
     val aiName = bMeta.autoIncrement
@@ -3879,7 +3618,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   }
 
   private val vecSelfUpdateRe =
-    "(?is)^UPDATE\\s+([A-Za-z_\"`\\[][^\\s]*)\\s+SET\\s+(.+)$".r
+    "(?is)^UPDATE\\s+([A-Za-z_\"`\\[][^\\s]*)\\s+SET\\b\\s*(.+)$".r
 
   /** Compile one body statement as a [[VecSelfUpdate]] when it is the
     * self-row touch-up shape, else None (the caller then tries the
@@ -3904,7 +3643,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     if (meta.strict) return None
     if (activeTriggers(table, "UPDATE").nonEmpty) return None
     val body = m.group(2)
-    val whereAt = topLevelWhere(body)
+    val whereAt = SqlLexer.lastTopLevel(body, "WHERE")
     if (whereAt < 0) return None // unqualified UPDATE touches other rows
     val setPart = body.substring(0, whereAt)
     val predPart = body.substring(whereAt + 5).trim.stripSuffix(";").trim
@@ -3915,7 +3654,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val fieldsL = meta.schema.fieldNames
     val byName = fieldsL.zipWithIndex
       .map { case (n, i) => n.toLowerCase(java.util.Locale.ROOT) -> i }.toMap
-    val assigns = SqlScript.splitTopLevel(setPart).map { a =>
+    val assigns = SqlLexer.splitTopLevel(setPart).map { a =>
       val eqAt = topLevelEq(a)
       if (eqAt < 0) return None
       val colName = SqlScript.unquoteIdent(a.substring(0, eqAt).trim)
@@ -4080,25 +3819,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     case _ => dt == LongType || dt == DoubleType || dt == StringType
   }
 
-  /** Split on top-level AND keywords (paren-aware over literal-blanked
-    * text); conjuncts keep their original spelling. */
-  private def splitTopLevelAnd(text: String): Seq[String] = {
-    val blanked = SqliteDdl.blankLiterals(text)
-    val parts = mutable.ArrayBuffer[String]()
-    var depth = 0
-    var last = 0
-    val re = "(?i)[()]|(?<![A-Za-z0-9_$])and(?![A-Za-z0-9_$])".r
-    for (m <- re.findAllMatchIn(blanked)) m.matched match {
-      case "(" => depth += 1
-      case ")" => depth = math.max(0, depth - 1)
-      case _ if depth == 0 =>
-        parts += text.substring(last, m.start); last = m.end
-      case _ => ()
-    }
-    parts += text.substring(last)
-    parts.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   /** Rewrite every supported self-read aggregate subquery in `text` to
     * a placeholder column (appending its spec to `out`); None when the
     * text references `table` in any OTHER way — the caller then falls
@@ -4107,27 +3827,11 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       timing: String, text: String,
       out: mutable.ArrayBuffer[SelfAggSpec],
       corrKws: Set[String]): Option[String] = {
-    val sb = new StringBuilder
-    val n = text.length
-    var i = 0; var quote: Char = 0
-    while (i < n) {
-      val c = text.charAt(i)
-      if (quote != 0) { sb.append(c); if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"' || c == '`') { quote = c; sb.append(c); i += 1 }
-      else if (c == '(') {
-        // balanced span (quote-aware)
-        var j = i; var depth = 0; var q2: Char = 0; var end = -1
-        while (j < n && end < 0) {
-          val ch = text.charAt(j)
-          if (q2 != 0) { if (ch == q2) q2 = 0 }
-          else if (ch == '\'' || ch == '"' || ch == '`') q2 = ch
-          else if (ch == '(') depth += 1
-          else if (ch == ')') { depth -= 1; if (depth == 0) end = j }
-          j += 1
-        }
-        val span = if (end < 0) null else text.substring(i, end + 1)
-        val m = if (span == null) None else selfAggRe.findFirstMatchIn(span.trim)
-        m match {
+    val rewritten = SqlLexer.rewrite(text) { (toks, i) =>
+      val close = if (toks(i).isPunct('(')) SqlLexer.matchParen(toks, i) else -1
+      val span = if (close < 0) null else text.substring(toks(i).start, toks(close).end)
+      val m = if (span == null) None else selfAggRe.findFirstMatchIn(span)
+      m match {
           case Some(mm)
               if SqlScript.unquoteIdent(mm.group(3)).equalsIgnoreCase(table) =>
             val agg = mm.group(1).toLowerCase(java.util.Locale.ROOT)
@@ -4149,7 +3853,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
             val corrKwords = mutable.ArrayBuffer[String]()
             val residual = mutable.ArrayBuffer[String]()
             predText0.foreach { p =>
-              splitTopLevelAnd(p).foreach { conj =>
+              SqlLexer.splitTopLevelAt(p)(_.is("AND")).foreach { conj =>
                 corrRe.findFirstMatchIn(conj) match {
                   case Some(cm) =>
                     val a = Option(cm.group(1)).getOrElse(cm.group(6))
@@ -4167,7 +3871,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
             val predText =
               if (residual.isEmpty) None else Some(residual.mkString(" AND "))
             val predOk = predText.forall { p =>
-              val blank = SqliteDdl.blankLiterals(p).toLowerCase(java.util.Locale.ROOT)
+              val blank = SqlLexer.blankLiterals(p).toLowerCase(java.util.Locale.ROOT)
               !"(^|[^a-z0-9_])(select|raise)([^a-z0-9_]|$)".r.findFirstIn(blank).isDefined &&
                 !"(^|[^a-z0-9_])(new|old)\\s*\\.".r.findFirstIn(blank).isDefined
             }
@@ -4179,20 +3883,14 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
             out += SelfAggSpec(name, agg,
               argField.map(_.get.name), predText, timing, corrCols.toSeq,
               corrKwords.toSeq)
-            sb.append('`').append(name).append('`')
-            i = end + 1
-          case Some(_) => // subquery over ANOTHER table: copy verbatim
-            sb.append(span); i = end + 1
-          case None => // ordinary parens: consume '(' only, scan inside
-            sb.append(c); i += 1
+            Some((close + 1, s"`$name`"))
+          case Some(_) => Some((close + 1, span)) // subquery over ANOTHER table: copy verbatim
+          case None => None // ordinary parens: scan inside
         }
-      }
-      else { sb.append(c); i += 1 }
     }
-    val rewritten = sb.toString
     val pat = ("(^|[^a-z0-9_])" +
       java.util.regex.Pattern.quote(table.toLowerCase) + "([^a-z0-9_]|$)").r
-    if (pat.findFirstIn(SqliteDdl.blankLiterals(rewritten).toLowerCase).isDefined)
+    if (pat.findFirstIn(SqlLexer.blankLiterals(rewritten).toLowerCase).isDefined)
       None // a target reference that is not a supported self-read agg
     else Some(rewritten)
   }
@@ -5001,18 +4699,18 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       upsertClause.map { clause =>
         val m = onConflictRe.findFirstMatchIn(clause.trim).getOrElse(
           throw new IllegalArgumentException(s"cannot parse ON CONFLICT clause: $clause"))
-        val target = Option(m.group(1)).map(SqlScript.splitTopLevel(_).map(c =>
+        val target = Option(m.group(1)).map(SqlLexer.splitTopLevel(_).map(c =>
           SqlScript.unquoteIdent(c.trim.split("\\s+").head)))
         val doNothing = m.group(2).equalsIgnoreCase("NOTHING")
         val (sets, predText) =
           if (doNothing) (Seq.empty[(Int, String)], None)
           else {
             val setBody = m.group(3)
-            val whereAt = topLevelWhere(setBody)
+            val whereAt = SqlLexer.lastTopLevel(setBody, "WHERE")
             val (setPart, pp) =
               if (whereAt < 0) (setBody, None)
               else (setBody.substring(0, whereAt), Some(setBody.substring(whereAt + 5)))
-            (SqlScript.splitTopLevel(setPart).map { a =>
+            (SqlLexer.splitTopLevel(setPart).map { a =>
               val eq = topLevelEq(a)
               (fieldIdx(SqlScript.unquoteIdent(a.substring(0, eq).trim)),
                 a.substring(eq + 1).trim)
@@ -5165,9 +4863,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       }
       opCount += 1
       if (opCount % 64 == 0) {
-        val t0 = System.nanoTime()
         cur = cur.localCheckpoint(true)
-        WriteTxn.profAdd("loop.checkpoint", System.nanoTime() - t0)
       }
     }
     def checkpointMaybe(): Unit = foldOrCheckpoint()
@@ -5175,14 +4871,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     // adopting any target mutation the body made (self-DML is legal)
     def fire(t: SqliteDdl.TriggerDef, resolve: (String, String) => String,
         raw: (String, String) => Any): Boolean = {
-      val t0 = System.nanoTime()
       if (perRow) { stage(table, meta, cur) }
       val ok = runTriggerProgram(t, resolve, raw)
       if (perRow && (working(table)._2 ne cur)) {
         cur = working(table)._2
         foldOrCheckpoint()
       }
-      WriteTxn.profAdd("loop.fire", System.nanoTime() - t0)
       ok
     }
     def keyEq(key: Seq[Any]): Column =
@@ -5223,12 +4917,21 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         val k = secKeyOf(s, r)
         if (k != null) secOcc(si)(k) = r
       }
+    // NOT NULL columns and their DEFAULT values, evaluated once: OR
+    // IGNORE skips a row with a NULL there, OR REPLACE takes the default
+    // (none: the NULL stays and the commit gate refuses it) —
+    // lang_conflict.html, after the BEFORE triggers have fired
+    val nnDefaults: Seq[(Int, Option[Any])] =
+      if (mode != "IGNORE" && mode != "REPLACE") Nil
+      else meta.notNull.map(fieldIdx).map { i =>
+        i -> defaultExpr(meta, fields(i).name).map(e =>
+          spark.range(1).select(dexpr(e).cast(fields(i).dataType)).head().get(0))
+      }
+    def nnDefaulted(r: IndexedSeq[Any]): IndexedSeq[Any] =
+      nnDefaults.foldLeft(r) { case (acc, (i, d)) =>
+        if (acc(i) == null && d.isDefined) acc.updated(i, d.get) else acc }
     def processRow(row0: IndexedSeq[Any]): Unit = {
       var row = row0
-      val key: Seq[Any] =
-        if (keyIdx.nonEmpty && keyIdx.forall(row(_) != null))
-          WriteTxn.normKeyOf(fields, keyIdx, row) else null
-      val secKeys: Seq[Seq[Any]] = secSets.map(s => secKeyOf(s, row))
       def resolveIns(before: Boolean)(kw: String, c: String): String = kw match {
         case "new" =>
           val i = fieldIdx(c)
@@ -5252,7 +4955,13 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         if (!ignored && !fire(t, resolveIns(before = true),
           rawIns(before = true))) ignored = true
       }
+      if (!ignored && mode == "IGNORE") ignored = nnDefaults.exists { case (i, _) => row(i) == null }
+      if (!ignored && mode == "REPLACE") row = nnDefaulted(row)
       if (!ignored) {
+        val key: Seq[Any] =
+          if (keyIdx.nonEmpty && keyIdx.forall(row(_) != null))
+            WriteTxn.normKeyOf(fields, keyIdx, row) else null
+        val secKeys: Seq[Seq[Any]] = secSets.map(s => secKeyOf(s, row))
         def fireAfterInsert(): Unit =
           insTrigs.withFilter(_.timing == "AFTER").foreach { t =>
             if (!ignored && !fire(t, resolveIns(before = false),
@@ -5368,7 +5077,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     }
     rowIter.grouped(FoldBatchRows).foreach { g =>
       val batchRows = g.toIndexedSeq
-      prescanBatch(batchRows)
+      // a REPLACE row's defaulted NOT NULL values are keys too
+      prescanBatch(if (mode == "REPLACE") batchRows.map(nnDefaulted) else batchRows)
       batchRows.foreach(processRow)
       if (!perRow) foldBatch()
     }
@@ -5697,20 +5407,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
 private[graft] object WriteTxn {
   val selectMutex = new Object
 
-  /** Debug-only phase profiler for the trigger tiers (GRAFT_TRIG_PROF):
-    * nanos accumulated per label, dumped by [[profDump]]. Zero-cost
-    * no-op when the env var is unset. */
-  private val profOn = sys.env.contains("GRAFT_TRIG_PROF")
-  private val prof = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private[engine] def profAdd(label: String, nanos: Long): Unit =
-    if (profOn) prof.computeIfAbsent(label,
-      _ => new java.util.concurrent.atomic.AtomicLong()).addAndGet(nanos)
-  def profDump(): String = {
-    import scala.jdk.CollectionConverters._
-    prof.asScala.toSeq.sortBy(-_._2.get())
-      .map { case (k, v) => f"$k=${v.get() / 1e9}%.2fs" }.mkString(" ")
-  }
-
   /** How long ATTACH waits for a busy segment's script lock before
     * refusing with 'database is locked' — python sqlite3's default
     * busy_timeout (5 s), the stack the reference runs on. Tests that
@@ -5741,102 +5437,39 @@ private[graft] object WriteTxn {
     idxs.map(i => collNorm(fields(i), row(i)))
 
   /** Rewrite `kw.<ident>` row references (NEW./OLD./excluded., any
-    * SQLite ident quoting) through `resolve` — quote-aware so string
-    * literals mentioning "new." survive untouched ([[rewriteExcluded]]'s
-    * scanner generalized over a keyword set). */
+    * SQLite ident quoting) through `resolve` — token-level, so string
+    * literals mentioning "new." survive untouched. */
   private[engine] def rewriteRowRefs(s: String, keywords: Set[String],
-      resolve: (String, String) => String): String = {
-    val out = new StringBuilder
-    var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { out.append(c); if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out.append(c); i += 1 }
-      else if ((c.isLetter || c == '_') &&
-          (i == 0 || { val p = s.charAt(i - 1); !p.isLetterOrDigit && p != '_' && p != '.' })) {
-        val kw = keywords.find(k => s.regionMatches(true, i, k, 0, k.length) &&
-          (i + k.length >= s.length || {
-            val n = s.charAt(i + k.length); !n.isLetterOrDigit && n != '_' }))
-        kw match {
-          case Some(k) =>
-            var j = i + k.length
-            while (j < s.length && s.charAt(j).isWhitespace) j += 1
-            if (j < s.length && s.charAt(j) == '.') {
-              j += 1
-              while (j < s.length && s.charAt(j).isWhitespace) j += 1
-              val (name, end) =
-                if (j >= s.length) (null, j)
-                else s.charAt(j) match {
-                  case '`' => val e = s.indexOf('`', j + 1); (s.substring(j + 1, e), e + 1)
-                  case '[' => val e = s.indexOf(']', j + 1); (s.substring(j + 1, e), e + 1)
-                  case '"' => val e = s.indexOf('"', j + 1); (s.substring(j + 1, e), e + 1)
-                  case ch if ch.isLetter || ch == '_' =>
-                    var e = j
-                    while (e < s.length && (s.charAt(e).isLetterOrDigit || s.charAt(e) == '_')) e += 1
-                    (s.substring(j, e), e)
-                  case _ => (null, j)
-                }
-              if (name == null) { out.append(c); i += 1 }
-              else { out.append(resolve(k.toLowerCase, name)); i = end }
-            } else { out.append(c); i += 1 }
-          case None =>
-            // copy the whole identifier so its interior can't match
-            var e = i
-            while (e < s.length && (s.charAt(e).isLetterOrDigit || s.charAt(e) == '_')) e += 1
-            out.append(s.substring(i, e)); i = e
-        }
-      } else { out.append(c); i += 1 }
+      resolve: (String, String) => String): String =
+    SqlLexer.rewrite(s) { (toks, i) =>
+      val kw = toks(i)
+      if (kw.kind == SqlLexer.Word && keywords.exists(_.equalsIgnoreCase(kw.text)) &&
+          !(i > 0 && toks(i - 1).isPunct('.')) && i + 2 < toks.length &&
+          toks(i + 1).isPunct('.') && toks(i + 2).isName)
+        Some((i + 3, resolve(kw.lower, toks(i + 2).value)))
+      else None
     }
-    out.toString
-  }
 
   /** Rewrite `RAISE(IGNORE)` / `RAISE(ABORT|FAIL|ROLLBACK, msg)` into
     * `graft_trigger_raise(kind, msg)` UDF calls, so RAISE works
     * anywhere in a body expression — `SELECT CASE WHEN … THEN
     * RAISE(ABORT, '…') END` is the idiomatic SQLite guard shape. */
-  private[engine] def rewriteRaise(s: String): String = {
-    val out = new StringBuilder
-    var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { out.append(c); if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; out.append(c); i += 1 }
-      else if ((c == 'r' || c == 'R') &&
-          (i == 0 || { val p = s.charAt(i - 1); !p.isLetterOrDigit && p != '_' && p != '.' }) &&
-          s.regionMatches(true, i, "raise", 0, 5) &&
-          (i + 5 >= s.length || { val n = s.charAt(i + 5); !n.isLetterOrDigit && n != '_' })) {
-        var j = i + 5
-        while (j < s.length && s.charAt(j).isWhitespace) j += 1
-        var matched = false
-        if (j < s.length && s.charAt(j) == '(') {
-          var depth = 0; var k = j; var q: Char = 0; var end = -1
-          while (k < s.length && end < 0) {
-            val ch = s.charAt(k)
-            if (q != 0) { if (ch == q) q = 0 }
-            else ch match {
-              case '\'' | '"' => q = ch
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) end = k
-              case _ => ()
-            }
-            k += 1
-          }
-          if (end >= 0) {
-            val args = SqlScript.splitTopLevel(s.substring(j + 1, end))
-            val kind = args.head.trim.toUpperCase
-            require(Set("IGNORE", "ABORT", "FAIL", "ROLLBACK").contains(kind),
-              s"unknown RAISE form: ${args.head.trim}")
-            val msg = if (args.length > 1) args(1).trim else "''"
-            out.append(s"graft_trigger_raise('$kind', $msg)")
-            i = end + 1
-            matched = true
-          }
-        }
-        if (!matched) { out.append(c); i += 1 }
-      } else { out.append(c); i += 1 }
+  private[engine] def rewriteRaise(s: String): String =
+    SqlLexer.rewrite(s) { (toks, i) =>
+      val close =
+        if (toks(i).is("raise") && !(i > 0 && toks(i - 1).isPunct('.')) &&
+            toks.lift(i + 1).exists(_.isPunct('('))) SqlLexer.matchParen(toks, i + 1)
+        else -1
+      if (close < 0) None
+      else {
+        val args = SqlLexer.splitTopLevel(s.substring(toks(i + 1).end, toks(close).start))
+        val kind = args.head.trim.toUpperCase
+        require(Set("IGNORE", "ABORT", "FAIL", "ROLLBACK").contains(kind),
+          s"unknown RAISE form: ${args.head.trim}")
+        val msg = if (args.length > 1) args(1).trim else "''"
+        Some((close + 1, s"graft_trigger_raise('$kind', $msg)"))
+      }
     }
-    out.toString
-  }
 
 
   /** Leading-numeric prefix for SQLite text→NUMERIC truthiness. */

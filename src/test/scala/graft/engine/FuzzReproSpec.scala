@@ -17,6 +17,13 @@ import graft.SparkSpecBase
   *    rejects.
   *  - [749] a plain UPDATE whose WHERE compares a COLLATE RTRIM
   *    column against a trailing-space literal missed the match.
+  *  - [69]/[151] (fresh-seed sweep 20261019): under INSERT triggers
+  *    the row loop let a NULL into a NOT NULL column through to the
+  *    commit gate, where OR IGNORE skips the row and OR REPLACE takes
+  *    the column's DEFAULT.
+  *  - [lexer] spellings sqlite3's tokenizer accepts that hand-written
+  *    scanners got wrong: quoted column names containing a space, and
+  *    keywords directly followed by `(`, a quote or a `[name]`.
   */
 class FuzzReproSpec extends SparkSpecBase {
 
@@ -28,9 +35,10 @@ class FuzzReproSpec extends SparkSpecBase {
 
   /** Run `script` against a fresh segment + a fresh sqlite3 db over
     * `ddl`; outcomes (error vs success) must agree, and on success the
-    * full content of `tables` must render identically. */
+    * full content of `tables` and the answers to `queries` must render
+    * identically. */
   private def differential(ddl: String, script: String,
-      tables: Seq[String]): Unit = {
+      tables: Seq[String], queries: Seq[String] = Nil): Unit = {
     n += 1
     val segId = s"frepro-$n"
     engine.schemas.put(s"frepro-schema-$n", ddl)
@@ -42,14 +50,13 @@ class FuzzReproSpec extends SparkSpecBase {
       ".bail on\nBEGIN;\n" + script + "\nCOMMIT;")
     assert(engineErr.isDefined == (rc != 0),
       s"outcome diverged: engine=${engineErr.map(_.getMessage)} sqlite3 rc=$rc")
-    if (engineErr.isEmpty) tables.foreach { tbl =>
-      val q = s"SELECT * FROM $tbl ORDER BY 1;"
+    if (engineErr.isEmpty) (tables.map(t => s"SELECT * FROM $t ORDER BY 1;") ++ queries).foreach { q =>
       val ours = engine.read(segId, q).collect().map { r =>
         (0 until r.length).map(i =>
           if (r.isNullAt(i)) "" else r.get(i).toString).mkString("|")
       }.mkString("\n")
       val theirs = SqliteCli.query(db.toString, q)
-      assert(ours == theirs, s"$tbl diverged\n-- engine --\n$ours\n-- sqlite3 --\n$theirs")
+      assert(ours == theirs, s"$q diverged\n-- engine --\n$ours\n-- sqlite3 --\n$theirs")
     }
   }
 
@@ -111,6 +118,59 @@ class FuzzReproSpec extends SparkSpecBase {
         "CREATE TRIGGER tg1 BEFORE INSERT ON t BEGIN INSERT INTO log (msg) VALUES ('I' || NEW.id); END;" +
         "UPDATE t SET c3 = 'c c' WHERE c1 = 't2';" +
         "CREATE TRIGGER tg2 BEFORE UPDATE ON t BEGIN INSERT INTO log (msg) VALUES ('U' || NEW.id); END;",
+      Seq("t", "log"))
+  }
+
+  test("[lexer] quoted column names with a space, in all three quoting forms") {
+    differential(
+      "CREATE TABLE base (x INTEGER);",
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, \"a b\" TEXT, `c d` INTEGER, [e f] REAL);" +
+        "INSERT INTO t (id, \"a b\", `c d`, [e f]) VALUES (1, 'x', 2, 3.5), (2, 'y', 4, 0.5);" +
+        "UPDATE t SET [c d] = 9 WHERE \"a b\" = 'y';",
+      Seq("t"),
+      Seq("SELECT [a b], \"c d\", `e f` FROM t ORDER BY id;"))
+  }
+
+  private val lexerDdl = "CREATE TABLE t (id INTEGER PRIMARY KEY, c INTEGER);"
+  private val lexerRows = "INSERT INTO t VALUES (1, 0), (2, 0), (3, 0), (4, 0);"
+
+  test("[lexer] UPDATE … WHERE directly followed by a paren or a quote") {
+    differential(lexerDdl,
+      lexerRows + "UPDATE t SET c = 5 WHERE(id = 1);UPDATE t SET c = 6 WHERE`id` = 4;",
+      Seq("t"))
+  }
+
+  test("[lexer] DELETE … WHERE directly followed by a paren") {
+    differential(lexerDdl, lexerRows + "DELETE FROM t WHERE(id = 2);", Seq("t"))
+  }
+
+  test("[lexer] a [name] right after a keyword, in a write and in a read") {
+    differential(lexerDdl,
+      lexerRows + "UPDATE t SET c = 7 WHERE id IN (1,3) AND[c] = 0;",
+      Seq("t"),
+      Seq("SELECT [c] FROM t ORDER BY id;"))
+  }
+
+  test("[69] OR IGNORE skips a NULL into NOT NULL with triggers active") {
+    differential(
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, c1 TEXT NOT NULL DEFAULT 'Aa', c2 TEXT);\n" +
+        "CREATE TABLE log (lid INTEGER PRIMARY KEY AUTOINCREMENT, msg TEXT);",
+      "CREATE TRIGGER tg1 BEFORE INSERT ON t BEGIN INSERT INTO log (msg) VALUES ('B' || NEW.id); END;" +
+        "CREATE TRIGGER tg2 AFTER INSERT ON t BEGIN INSERT INTO log (msg) VALUES ('A' || NEW.id); END;" +
+        "INSERT INTO t VALUES (2, 't0', 't0');" +
+        "INSERT OR IGNORE INTO t VALUES (3, NULL, 'bb');" +
+        "INSERT OR IGNORE INTO t VALUES (4, 'x', NULL);",
+      Seq("t", "log"))
+  }
+
+  test("[151] OR REPLACE fills a NULL into NOT NULL from the DEFAULT with triggers active") {
+    differential(
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, c1 INTEGER NOT NULL DEFAULT 5 UNIQUE, c2 REAL);\n" +
+        "CREATE TABLE log (lid INTEGER PRIMARY KEY AUTOINCREMENT, msg TEXT);",
+      "CREATE TRIGGER tg1 AFTER INSERT ON t BEGIN INSERT INTO log (msg) VALUES (NEW.id || ':' || NEW.c1); END;" +
+        "INSERT INTO t VALUES (2, 19, 5.1);" +
+        "INSERT INTO t VALUES (7, 5, 1.5);" +
+        "INSERT OR REPLACE INTO t VALUES (2, NULL, 6.225);",
       Seq("t", "log"))
   }
 }

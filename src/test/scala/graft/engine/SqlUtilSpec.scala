@@ -74,7 +74,7 @@ class SqlUtilSpec extends AnyFunSuite {
   }
 
   test("splitTopLevel: respects parens and quotes") {
-    assert(SqlScript.splitTopLevel("a, f(b, c), 'x,y'") == Seq("a", "f(b, c)", "'x,y'"))
+    assert(SqlLexer.splitTopLevel("a, f(b, c), 'x,y'") == Seq("a", "f(b, c)", "'x,y'"))
   }
 
   // ------------------------------------------------------------- SqliteDdl
@@ -122,6 +122,16 @@ class SqlUtilSpec extends AnyFunSuite {
     val td = SqliteDdl.parseCreateTable(
       "CREATE TABLE t (a INT NOT NULL, b TEXT DEFAULT 'x', UNIQUE (b), CHECK (a > 0))")
     assert(td.schema.fieldNames.toSeq == Seq("a", "b"))
+  }
+
+  test("column names that start with a constraint keyword stay columns") {
+    val td = SqliteDdl.parseCreateTable("CREATE TABLE t (id INTEGER PRIMARY KEY, " +
+      "unique_id TEXT, check_ts TEXT, constraints INT, \"primary key\" TEXT, " +
+      "CONSTRAINT pos CHECK (id > 0), UNIQUE (unique_id))")
+    assert(td.schema.fieldNames.toSeq ==
+      Seq("id", "unique_id", "check_ts", "constraints", "primary key"))
+    assert(td.uniques == Seq(Seq("unique_id")))
+    assert(td.checks.map(_.label) == Seq("pos"))
   }
 
   // ------------------------------------------------------------ JsonShape

@@ -23,6 +23,12 @@ import graft.SparkSpecBase
   * REPLACE merge on a STRICT table, a nocase UNIQUE collision under
   * OR IGNORE, a DROP COLUMN refused by a trigger body, …).
   *
+  * Identifiers come in all four SQLite spellings (bare, "…", `…`,
+  * […]; some column names hold a space and are always quoted), and a
+  * keyword is sometimes glued to a following paren or quote
+  * (`WHERE(…)`, `SET"c1" = …`), so the lexing of every write-path
+  * scanner is fuzzed along with the semantics.
+  *
   * Stays on the engine's documented domain: no double-quoted string
   * literals, typed comparisons, explicit PK values (the engine
   * auto-assigns only OMITTED rowid-alias columns, not explicit
@@ -44,6 +50,24 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
   }
 
   private case class Col(name: String, tpe: String)
+
+  /** A column reference in a random SQLite spelling; a name with a
+    * space is always quoted. */
+  private def q(name: String): String =
+    rng.nextInt(if (name.contains(' ')) 3 else 4) match {
+      case 0 => "\"" + name + "\""
+      case 1 => s"`$name`"
+      case 2 => s"[$name]"
+      case _ => name
+    }
+
+  /** `kw rest`, sometimes with no space when `rest` opens with a paren
+    * or a quote (SQLite's tokenizer needs none there). */
+  private def glue(kw: String, rest: String): String =
+    if ("(\"`['".contains(rest.head) && rng.nextBoolean()) kw + rest else s"$kw $rest"
+
+  private def where(pred: String): String =
+    glue("WHERE", if (rng.nextInt(3) == 0) s"($pred)" else pred)
 
   private def intLit: String = (rng.nextInt(26) - 5).toString
   // the pool deliberately contains NOCASE case-variants and RTRIM
@@ -80,7 +104,8 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
     val nCols = 2 + rng.nextInt(3)
     val types = Seq("INTEGER", "TEXT", "REAL")
     val cols = Col("id", "INTEGER") +:
-      (1 to nCols).map(i => Col(s"c$i", types(rng.nextInt(types.length))))
+      (1 to nCols).map(i => Col(if (rng.nextInt(4) == 0) s"c $i" else s"c$i",
+        types(rng.nextInt(types.length))))
     val defs = cols.zipWithIndex.map { case (c, i) =>
       if (i == 0) s"${c.name} INTEGER PRIMARY KEY"
       else {
@@ -96,16 +121,16 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
             case "REAL" => realLit
             case _ => textLit
           }
-          if (rng.nextInt(3) == 0) extras ++= s" NOT NULL DEFAULT $d"
-          else extras ++= s" DEFAULT $d"
+          if (rng.nextInt(3) == 0) extras ++= " NOT NULL " + glue("DEFAULT", d)
+          else extras ++= " " + glue("DEFAULT", d)
         }
         if (c.tpe == "INTEGER" && rng.nextInt(5) == 0)
-          extras ++= s" CHECK (${c.name} > -900)"
+          extras ++= " " + glue("CHECK", s"(${q(c.name)} > -900)")
         // collated TEXT columns get UNIQUE more often: that's where
         // the collation-aware conflict detection lives
         val uniqueOdds = if (extras.toString.contains("COLLATE")) 3 else 8
         if (rng.nextInt(uniqueOdds) == 0) extras ++= " UNIQUE"
-        s"${c.name} ${c.tpe}$extras"
+        s"${q(c.name)} ${c.tpe}$extras"
       }
     }
     // occasional composite table-level UNIQUE over the first two data
@@ -113,7 +138,7 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
     // table-error refusal
     val tableConstraint =
       if (nCols >= 2 && rng.nextInt(5) == 0)
-        Seq(s"UNIQUE (${cols(1).name}, ${cols(2).name})")
+        Seq(glue("UNIQUE", s"(${q(cols(1).name)}, ${q(cols(2).name)})"))
       else Nil
     val gen =
       if (strict || rng.nextInt(4) != 0) Nil
@@ -145,7 +170,7 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
             case 1 => ("DELETE", "OLD")
             case _ => ("UPDATE", "NEW")
           }
-          val when = if (rng.nextInt(3) == 0) s" WHEN $row.id > ${rng.nextInt(6)}" else ""
+          val when = if (rng.nextInt(3) == 0) s" WHEN $row.${q("id")} > ${rng.nextInt(6)}" else ""
           // a third of INSERT-audit bodies READ THEIR OWN TARGET via an
           // aggregate subquery (r11 vectorized self-read tier; other
           // events/shapes take the general row loop — both must agree
@@ -153,27 +178,28 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
           val payload =
             if (event == "INSERT" && rng.nextInt(3) == 0) {
               val agg = Seq("count(*)", "count(id)", "max(id)", "min(id)")(rng.nextInt(4))
-              val pred = if (rng.nextBoolean()) s" WHERE id > ${rng.nextInt(4)}" else ""
+              val pred = if (rng.nextBoolean()) " " + where(s"${q("id")} > ${rng.nextInt(4)}") else ""
               s"(SELECT $agg FROM $table$pred) || '@' || $row.id"
-            } else s"'${event.take(1)}' || $row.id"
+            } else s"'${event.take(1)}' || $row.${q("id")}"
           s"CREATE TRIGGER tg$triggers $timing $event ON $table$when BEGIN " +
             s"INSERT INTO log (msg) VALUES ($payload); END;"
         case 13 if !madeView && cols.length > 1 =>
           madeView = true
           // the view pins its column names so the end-of-script compare
           // can query it identically on both engines even after renames
-          s"CREATE VIEW v (vid, vc) AS SELECT id, ${cols(1).name} FROM $table " +
-            s"WHERE id % ${2 + rng.nextInt(3)} = 0;"
+          s"CREATE VIEW v (vid, vc) AS SELECT id, ${q(cols(1).name)} FROM $table " +
+            where(s"id % ${2 + rng.nextInt(3)} = 0") + ";"
         case 14 if cols.exists(_.tpe == "TEXT") =>
           // text-predicate DML: the collation (if declared) governs the
           // comparison on the write path too
           val tc = pickText(cols)
           if (rng.nextBoolean())
-            s"DELETE FROM $table WHERE ${tc.name} = $textLit;"
+            s"DELETE FROM $table ${where(s"${q(tc.name)} = $textLit")};"
           else {
             val tgt = cols(1 + rng.nextInt(cols.length - 1))
             val rhs = litFor(tgt.tpe, strict)
-            s"UPDATE $table SET ${tgt.name} = $rhs WHERE ${tc.name} = $textLit;"
+            s"UPDATE $table ${glue("SET", s"${q(tgt.name)} = $rhs")} " +
+              where(s"${q(tc.name)} = $textLit") + ";"
           }
         case 0 | 1 | 2 | 3 =>
           val vals = cols.map {
@@ -188,7 +214,7 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
             case 1 => "OR REPLACE "
             case _ => ""
           }
-          s"INSERT $conflict INTO $table VALUES (${vals.mkString(", ")});"
+          s"INSERT $conflict INTO $table ${glue("VALUES", s"(${vals.mkString(", ")})")};"
         case 4 =>
           val vals = cols.map {
             case Col("id", _) =>
@@ -198,16 +224,16 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
           }
           val tgt = cols(1 + rng.nextInt(cols.length - 1))
           s"INSERT INTO $table VALUES (${vals.mkString(", ")}) " +
-            s"ON CONFLICT(id) DO UPDATE SET ${tgt.name} = excluded.${tgt.name};"
+            s"ON CONFLICT(id) DO UPDATE SET ${q(tgt.name)} = excluded.${q(tgt.name)};"
         case 5 | 6 =>
           val tgt = cols(1 + rng.nextInt(cols.length - 1))
           val rhs =
-            if (tgt.tpe == "INTEGER" && rng.nextInt(2) == 0) s"${tgt.name} + 1"
+            if (tgt.tpe == "INTEGER" && rng.nextInt(2) == 0) s"${q(tgt.name)} + 1"
             else litFor(tgt.tpe, strict)
-          s"UPDATE $table SET ${tgt.name} = $rhs WHERE id % ${2 + rng.nextInt(3)} " +
-            s"= ${rng.nextInt(2)};"
+          s"UPDATE $table ${glue("SET", s"${q(tgt.name)} = $rhs")} " +
+            where(s"${q("id")} % ${2 + rng.nextInt(3)} = ${rng.nextInt(2)}") + ";"
         case 7 =>
-          s"DELETE FROM $table WHERE id > ${rng.nextInt(12)};"
+          s"DELETE FROM $table ${where(s"${q("id")} > ${rng.nextInt(12)}")};"
         case 8 if added < 2 =>
           added += 1
           val tpe = Seq("INTEGER", "TEXT", "REAL")(rng.nextInt(3))
@@ -223,14 +249,14 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
           // members), which is itself differential signal
           val victim = cols(1 + rng.nextInt(cols.length - 1))
           cols = cols.filterNot(_.name == victim.name)
-          s"ALTER TABLE $table DROP COLUMN ${victim.name};"
+          s"ALTER TABLE $table DROP COLUMN ${q(victim.name)};"
         case 10 if cols.length > 2 =>
           val victim = cols(1 + rng.nextInt(cols.length - 1))
           val nn = victim.name + "r"
           cols = cols.map(c => if (c.name == victim.name) c.copy(name = nn) else c)
-          s"ALTER TABLE $table RENAME COLUMN ${victim.name} TO $nn;"
+          s"ALTER TABLE $table RENAME COLUMN ${q(victim.name)} TO ${q(nn)};"
         case _ =>
-          s"DELETE FROM $table WHERE id = ${rng.nextInt(10)};"
+          s"DELETE FROM $table ${where(s"${q("id")} = ${rng.nextInt(10)}")};"
       }
     }
     stmts.mkString("\n")

@@ -444,4 +444,20 @@ class HttpFacadeSpec extends SparkSpecBase
     assert(post(facade.boundReadPort, "/?segment=fan5",
       "select count(*) from fdocs;").body().contains("5"))
   }
+
+  test("stop() ends the facade's request threads") {
+    def facadeThreads(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .filter(t => t.isAlive && t.getName.startsWith(HttpFacade.ThreadPrefix)).toSet
+    val before = facadeThreads()
+    val f = new HttpFacade(engine, readPort = 0, writePort = 0, syncPort = 0).start()
+    Seq(f.boundReadPort, f.boundWritePort, f.boundSyncPort).foreach(p =>
+      send(req(p, "/nope").GET().build()))
+    assert((facadeThreads() -- before).size >= 3)
+    f.stop()
+    val deadline = System.nanoTime() + 2000000000L
+    while ((facadeThreads() -- before).nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert((facadeThreads() -- before).isEmpty)
+  }
 }
