@@ -145,6 +145,22 @@ class SegmentStore(
   private def swapLock(segmentId: String): Object =
     swapLocks.computeIfAbsent(segmentId, _ => new Object)
 
+  /** Run `body` with this segment's data swaps held off — a reader's
+    * consistent snapshot of metas and rows (TroughEngine.readCtx). */
+  def withSwapLock[A](segmentId: String)(body: => A): A =
+    swapLock(segmentId).synchronized(body)
+
+  /** Replace `p`'s contents in one rename: a concurrent reader sees the
+    * old file or the new one, never a half-written one. */
+  private def writeAtomically(p: Path, text: String): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = Files.createTempFile(p.getParent, "._" + p.getFileName, ".tmp")
+    try {
+      Files.writeString(tmp, text)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   // ------------------------------------------------------------------ paths
 
   def isCold(segmentId: String): Boolean = coldPredicate(segmentId)
@@ -1687,9 +1703,7 @@ class SegmentStore(
       meta.strictTypes.foreach { case (k, v) => o.put(k, v) }
     }
     meta.ftsSql.foreach(s => root.put("ftsSql", s))
-    val p = metaPath(tierRoot(segmentId), segmentId, table)
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, root.toString)
+    writeAtomically(metaPath(tierRoot(segmentId), segmentId, table), root.toString)
     tablePlanCache.remove(table) // schema may have widened
   }
 
@@ -1742,8 +1756,7 @@ class SegmentStore(
     else {
       val arr = mapper.createArrayNode()
       defs.foreach(v => arr.addObject().put("sql", v.sql))
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, arr.toString)
+      writeAtomically(p, arr.toString)
     }
   }
 
@@ -1790,8 +1803,7 @@ class SegmentStore(
     else {
       val arr = mapper.createArrayNode()
       defs.foreach(t => arr.addObject().put("sql", t.sql))
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, arr.toString)
+      writeAtomically(p, arr.toString)
     }
   }
 

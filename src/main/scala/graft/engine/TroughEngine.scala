@@ -11,6 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlInternals
 import org.apache.spark.sql.types._
 
 import graft.functions.TroughFunctions
@@ -167,44 +168,6 @@ class TroughEngine(
           e: java.util.Map.Entry[String, ReadCtx]): Boolean = size > 64
     }
 
-  /** Row cap for serving a table as a driver-local relation. Under it,
-    * a per-segment read plans as ONE single-partition stage (no file
-    * re-scan, no exchange — a trough segment is a small database);
-    * over it, the parquet-backed view serves unchanged. */
-  private val ServeLocalMaxRows = 65536
-
-  /** Snapshot a small table into a single-partition LocalRelation for
-    * the read cache; the parquet-backed frame when it exceeds the cap.
-    * The snapshot is as consistent as the fingerprint that keys it. */
-  private def localizeForServe(sess: SparkSession, df: DataFrame): DataFrame =
-    try {
-      import org.apache.spark.sql.graft.SqlInternals
-      // r19: read the partitions driver-side under one TaskContext —
-      // no job. The snapshot collect was the cold first-touch's
-      // dominant cost (ServeProbe: 40-110 ms of ~100 ms, CollectLimit
-      // escalating one job per round over the segment's tiny part
-      // files). Falls back to the one-job limit-collect for plans the
-      // driver-local path refuses (many partitions, over-cap rows).
-      // driver-local only when the scan is 1-2 splits (per-file open
-      // cost is ~3 ms and sequential on the driver — many-file tables
-      // read faster as ONE parallel job, below)
-      val rowsOpt = SqlInternals
-        .driverLocalInternalRows(df, ServeLocalMaxRows, maxPartitions = 2)
-        .orElse {
-          val r = df.limit(ServeLocalMaxRows + 1)
-            .queryExecution.executedPlan.executeCollect().toSeq
-          if (r.length > ServeLocalMaxRows) None else Some(r)
-        }
-      rowsOpt match {
-        case Some(rows) =>
-          SqlInternals.ofRows(sess,
-            org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-              df.queryExecution.analyzed.output.map(_.newInstance()), rows))
-            .coalesce(1)
-        case None => df
-      }
-    } catch { case scala.util.control.NonFatal(_) => df }
-
   private def readCtx(segmentId: String): ReadCtx = readCtxs.synchronized {
     val fp = store.readFingerprint(segmentId)
     val cached = readCtxs.get(segmentId)
@@ -216,11 +179,12 @@ class TroughEngine(
     // serve path's plans are tiny and local, so re-optimization has
     // no upside here (measured r19: 35 -> 100+ req/s)
     sess.conf.set("spark.sql.adaptive.enabled", "false")
-    // the context-build snapshot below is a `limit(cap+1)` collect, and
-    // CollectLimit's incremental escalation (1 partition, then 4×
-    // more, ...) costs one sequential JOB per round over the many tiny
-    // part files a small segment table typically has — measured 69 ms
-    // of the ~100 ms cold first-touch read (ServeProbe r19). One job
+    // a snapshot that SqlInternals.toLocal cannot read driver-side is
+    // a `limit(cap+1)` collect, and CollectLimit's incremental
+    // escalation (1 partition, then 4× more, ...) costs one sequential
+    // JOB per round over the many tiny part files a small segment
+    // table typically has — measured 69 ms of the ~100 ms cold
+    // first-touch read (ServeProbe r19). One job
     // over every partition at once: per-task output is still
     // LocalLimit-bounded, so memory stays capped either way.
     sess.conf.set("spark.sql.limit.initialNumPartitions", "10000")
@@ -241,9 +205,17 @@ class TroughEngine(
     sess.conf.set("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.PropagateEmptyRelation")
     val ftsDefs = ftsTablesOf(segmentId)
-    store.tables(segmentId).foreach { t =>
-      val df0 = store.loadTable(segmentId, t, sess)
-      val df = localizeForServe(sess, df0)
+    // the snapshot of metas and rows is taken under the segment's swap
+    // lock, so a concurrent commit's data swap and meta rewrite land
+    // wholly before or after it. A table within the driver-local cap is
+    // served from its rows; a larger one stays parquet-backed and is
+    // read lazily, outside the lock.
+    store.withSwapLock(segmentId) {
+      store.tables(segmentId).map { t =>
+        val df0 = store.loadTable(segmentId, t, sess)
+        t -> SqlInternals.toLocal(df0).getOrElse(df0)
+      }
+    }.foreach { case (t, df) =>
       ftsDefs.get(t.toLowerCase(java.util.Locale.ROOT)) match {
         case Some(fd) if fd.content.isDefined =>
           registerContentFts(segmentId, sess, t, fd, df)
@@ -863,11 +835,15 @@ class TroughEngine(
     // local relations compute on the driver thread — the local-mode
     // job floor (~10 ms) was the read path's whole remaining latency
     val rows: java.util.Iterator[Row] =
-      org.apache.spark.sql.graft.SqlInternals.driverLocalRows(df) match {
-        case Some(it) => new java.util.Iterator[Row] {
-          def hasNext: Boolean = it.hasNext
-          def next(): Row = it.next()
-        }
+      SqlInternals.driverLocalInternalRows(df, Int.MaxValue, maxPartitions = 1) match {
+        case Some(internal) =>
+          val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToScalaConverter(schema)
+          val it = internal.iterator
+          new java.util.Iterator[Row] {
+            def hasNext: Boolean = it.hasNext
+            def next(): Row = conv(it.next()).asInstanceOf[Row]
+          }
         case None => df.toLocalIterator()
       }
     new Iterator[String] {

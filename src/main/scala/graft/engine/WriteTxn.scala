@@ -437,11 +437,15 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       }
       val meta = backMeta(table)
       // bound into the write session: expressions referencing SQLite
-      // function names must resolve where SqliteCompat is registered
-      (meta, backLoad(table))
+      // function names must resolve where SqliteCompat is registered.
+      // A table within the driver-local cap is read once here; every
+      // statement of the script then works on its rows in memory
+      val df = backLoad(table)
+      (meta, SqlInternals.toLocal(df).getOrElse(df))
     })
 
-  private def stage(table: String, meta: TableMeta, df: DataFrame): Unit = {
+  private def stage(table: String, meta: TableMeta, df: DataFrame,
+      fold: Boolean = true): Unit = {
     // reject reserved columns at stage time — every CREATE/ALTER path
     // funnels through here, and commit-phase failures are the wrong
     // place to discover a schema problem
@@ -475,8 +479,47 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
           col(df3.columns.find(_.equalsIgnoreCase(f.name)).get)
             .as(f.name, f.metadata)).toSeq: _*)
       else df3
-    working(table) = (meta, collated(df4))
+    working(table) = (meta, if (fold) settled(collated(df4)) else collated(df4))
     dirty += table
+  }
+
+  /** A staged frame over driver-local leaves only (LocalRelation,
+    * OneRowRelation, a checkpointed LogicalRDD) held as one local
+    * relation when it fits the cap: evaluated once now, instead of its
+    * lineage re-running in every later job of the script. Frames that
+    * read a parquet scan (an over-cap table) stay lazy. */
+  private def settled(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val localLeaves = df.queryExecution.analyzed.collectLeaves().forall {
+      case _: LocalRelation | _: OneRowRelation | _: LogicalRDD => true
+      case _ => false
+    }
+    if (localLeaves) SqlInternals.toLocal(df).getOrElse(df) else df
+  }
+
+  /** `df` with a row id column `rid`, pinned so every later evaluation
+    * sees the same ids: folded into the frame's local relation when it
+    * is driver-local, else checkpointed. */
+  private def tagRows(df: DataFrame, rid: String): DataFrame = {
+    val tagged = settled(df.withColumn(rid, monotonically_increasing_id()))
+    if (SqlInternals.localRelation(tagged).isDefined) tagged
+    else tagged.localCheckpoint(true)
+  }
+
+  /** `rows` (values in `schema` order) appended to the local relation
+    * `lr`, each value placed by column name — a relation's column
+    * order need not be the declared one. `keep` filters the existing
+    * rows first. */
+  private def localAppend(lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+      schema: StructType, rows: Seq[IndexedSeq[Any]],
+      keep: org.apache.spark.sql.catalyst.InternalRow => Boolean = _ => true): DataFrame = {
+    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(lr.schema)
+    val at = lr.output.map(a => schema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name)))
+    SqlInternals.localFrame(spark, lr.output, lr.data.filter(keep) ++ rows.map(r =>
+      conv(org.apache.spark.sql.Row.fromSeq(at.map(r(_))))
+        .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
   }
 
   // ----------------------------------------------------------- RETURNING
@@ -1076,9 +1119,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     * can't leave a half-applied script). */
   private def gatherScope(seg: String): ScopeCommit = ScopeCommit(
     seg,
+    // a driver-local frame is already evaluated (and commits as one
+    // part file); anything else is forced once here
     dirty.toSeq.map { t =>
       val (meta, df) = working(t)
-      (t, meta, df.localCheckpoint(eager = true))
+      (t, meta,
+        if (SqlInternals.localRelation(df).isDefined) df else df.localCheckpoint(eager = true))
     },
     dropped.filterNot(created.contains).toSeq,
     if (viewsDirty) Some(stagedViews.values.toSeq) else None,
@@ -2040,22 +2086,9 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
           runSelect("SELECT NULL AS __dv").drop("__dv")
         else runSelect("SELECT " + cols.map(c =>
           s"${defaultExpr(meta0, c).getOrElse("NULL")} AS `$c`").mkString(", "))
-      } else if (body.toUpperCase.startsWith("VALUES")) {
-        // Evaluate each tuple as a SELECT so arbitrary expressions work
-        // (incl. the client's datetime('<iso>') literals, which are UDF
-        // calls and therefore not allowed in Spark inline VALUES tables).
-        val tuples = SqlLexer.splitTopLevel(m.group(6))
-        val targetCols = colList.getOrElse(baseCols)
-        val selects = tuples.map { t =>
-          val inner = t.trim.stripPrefix("(").stripSuffix(")")
-          val exprs = SqlLexer.splitTopLevel(inner)
-          require(exprs.length == targetCols.length,
-            s"INSERT arity mismatch: ${exprs.length} values for ${targetCols.length} columns")
-          "SELECT " + exprs.zip(targetCols)
-            .map { case (e, c) => s"$e AS `$c`" }.mkString(", ")
-        }
-        runSelect(selects.mkString(" UNION ALL "))
-      } else {
+      } else if (body.toUpperCase.startsWith("VALUES"))
+        valuesFrame(m.group(6), colList.getOrElse(baseCols))
+      else {
         val df = runSelect(body)
         val targetCols = colList.getOrElse(baseCols)
         require(df.columns.length == targetCols.length,
@@ -2723,7 +2756,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     }
     // rid-tagged pre-statement target, pinned so every later evaluation
     // sees the same row ids
-    val tagged = df.withColumn(rid, monotonically_increasing_id()).localCheckpoint(true)
+    val tagged = tagRows(df, rid)
     val matches0 = runSelect(sel.toString, overrides = Map(tName -> tagged))
     // STRICT: probe+coerce the assignment values taken from each
     // target row's first matching join row; ANY columns store the
@@ -2918,6 +2951,23 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       trigs.foreach(t => if (!ignored && !runTriggerProgram(t, resolve)) ignored = true)
     }
 
+  /** The rows of an `INSERT … VALUES` list: each tuple evaluates as a
+    * SELECT, so arbitrary expressions work (incl. the client's
+    * datetime('<iso>') literals, UDF calls that Spark's inline VALUES
+    * tables refuse), and the N-way UNION ALL folds into one local
+    * relation — one partition instead of N for every later job. */
+  private def valuesFrame(tuplesText: String, targetCols: Seq[String]): DataFrame = {
+    val selects = SqlLexer.splitTopLevel(tuplesText).map { t =>
+      val exprs = SqlLexer.splitTopLevel(t.trim.stripPrefix("(").stripSuffix(")"))
+      require(exprs.length == targetCols.length,
+        s"INSERT arity mismatch: ${exprs.length} values for ${targetCols.length} columns")
+      "SELECT " + exprs.zip(targetCols)
+        .map { case (e, c) => s"$e AS `$c`" }.mkString(", ")
+    }
+    val df = runSelect(selects.mkString(" UNION ALL "))
+    SqlInternals.toLocal(df).getOrElse(df)
+  }
+
   private def viewInsert(view: String, colList: Option[Seq[String]],
       body: String, valuesTail: String): Unit = {
     val trigs = insteadOfTriggers(view, "INSERT")
@@ -2930,18 +2980,9 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         // views have no defaults; SQLite binds all-NULL NEW values
         runSelect("SELECT " +
           viewCols.map(c => s"NULL AS `$c`").mkString(", "))
-      else if (body.toUpperCase.startsWith("VALUES")) {
-        val tuples = SqlLexer.splitTopLevel(valuesTail)
-        val selects = tuples.map { t =>
-          val inner = t.trim.stripPrefix("(").stripSuffix(")")
-          val exprs = SqlLexer.splitTopLevel(inner)
-          require(exprs.length == targetCols.length,
-            s"INSERT arity mismatch: ${exprs.length} values for ${targetCols.length} columns")
-          "SELECT " + exprs.zip(targetCols)
-            .map { case (e, c) => s"$e AS `$c`" }.mkString(", ")
-        }
-        runSelect(selects.mkString(" UNION ALL "))
-      } else {
+      else if (body.toUpperCase.startsWith("VALUES"))
+        valuesFrame(valuesTail, targetCols)
+      else {
         val df = runSelect(body)
         require(df.columns.length == targetCols.length,
           s"INSERT arity mismatch: ${df.columns.length} vs ${targetCols.length}")
@@ -3165,60 +3206,14 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
   // The row-at-a-time trigger tiers mutate the working table once per
   // FIRING. Keeping those mutations as layered lazy plans made every
   // 64th firing execute a 64-projection-deep union tree as a Spark job
-  // (r18: the general tier measured ~10 firings/s, ~95 ms/firing — 65%
-  // of it in those periodic localCheckpoints, the rest in analysis over
-  // the deepening tree). When the working table is SMALL — which the
-  // general tier's universe is: trough segments, not the 100 TB corpus
-  // (corpus-scale DML rides the vectorized tiers) — the frame instead
-  // rides a LocalRelation and every firing FOLDS eagerly through the
-  // optimizer: ConvertToLocalRelation evaluates the firing's
-  // projection/filter driver-side, no job, no codegen, and the plan
-  // never deepens. SQLite itself executes trigger programs eagerly
-  // row-at-a-time, so the eager fold is the closer execution model.
-
-  /** Row cap for the driver-local tier: past it the loop falls back to
-    * the layered-plan + periodic-checkpoint form (bounded memory
-    * beats per-firing speed once the table is genuinely large). */
-  private val LocalFoldMaxRows = 65536
-
-  /** Re-root `df` as a LocalRelation when its OPTIMIZED plan already
-    * folded to one (or to a union of them) within the row cap. Fresh
-    * attribute ids so a later self-read join can't alias-collide.
-    * Exceptions fold away to None — an expression that fails eager
-    * interpreted eval surfaces at the same lazy point it always did,
-    * on the layered fallback frame. */
-  private def foldToLocal(df: DataFrame, cap: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
-    df.queryExecution.logical match {
-      case _: LocalRelation => return Some(df) // already local (compiled tier)
-      case _ => ()
-    }
-    try {
-      val plan = df.queryExecution.optimizedPlan
-      val rows = plan match {
-        case l: LocalRelation => Some(l.data)
-        case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-          Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
-        case _ => None
-      }
-      rows.filter(_.length <= cap).map(data =>
-        SqlInternals.ofRows(spark,
-          LocalRelation(plan.output.map(_.newInstance()), data)))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** One bounded job materializing `df` into the driver-local tier, or
-    * None when it exceeds the cap (the caller keeps the distributed
-    * frame). */
-  private def materializeLocal(df: DataFrame, cap: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    try {
-      val rows = df.limit(cap + 1).queryExecution.executedPlan.executeCollect()
-      if (rows.length > cap) None
-      else Some(SqlInternals.ofRows(spark, LocalRelation(
-        df.queryExecution.analyzed.output.map(_.newInstance()), rows.toSeq)))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  // (r18: ~10 firings/s). A table within SqlInternals.LocalMaxRows —
+  // which a trough segment's table is — instead rides a LocalRelation
+  // (load() and stage() hold it so): appended rows go straight into
+  // the relation, and any other mutation folds eagerly back into one
+  // through stage(), so the plan never deepens. SQLite itself executes
+  // trigger programs eagerly row-at-a-time, so the eager fold is the
+  // closer execution model. Past the cap the loops fall back to the
+  // layered-plan + periodic-checkpoint form.
 
   // ------------------------------------- compiled trigger bodies (r19)
   //
@@ -4518,7 +4513,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
         val n = fields.find(_.name.equalsIgnoreCase(ai)).get.name
         df.withColumn(rid, col(n).cast("long"))
       case None =>
-        df.withColumn(rid, monotonically_increasing_id()).localCheckpoint(true)
+        tagRows(df, rid)
     }
     var images = tagged.where(firePred)
       .withColumn("__vec_seq", col(rid))
@@ -4823,59 +4818,39 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       }
     }
     var cur = existing
-    // driver-local tier (r19): per-row loops fold the working frame
-    // eagerly through the optimizer instead of layering lazy plans —
-    // see the foldToLocal scaladoc. Engages only when the table fits
-    // the cap; one bounded job decides.
-    var localTier = perRow && {
-      materializeLocal(existing, LocalFoldMaxRows) match {
-        case Some(l) => cur = l; true
-        case None => false
-      }
-    }
+    // driver-local tier (see "driver-local working frames"): cleared
+    // once the working table outgrows the cap
+    var localTier = perRow
     // append straight into the LocalRelation (a union + optimizer fold
     // per applied row was most of the loop's residual wall)
-    lazy val rowToInternal = {
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(meta.schema)
-      (r: IndexedSeq[Any]) =>
-        conv(org.apache.spark.sql.Row.fromSeq(r))
-          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
-    }
-    def appendLocal(row: IndexedSeq[Any]): Boolean = localTier && {
-      import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-      cur.queryExecution.logical match {
-        case lr: LocalRelation if lr.data.length < LocalFoldMaxRows =>
-          cur = SqlInternals.ofRows(spark,
-            LocalRelation(lr.output, lr.data :+ rowToInternal(row)))
-          true
+    def appendLocal(row: IndexedSeq[Any]): Boolean = localTier &&
+      (SqlInternals.localRelation(cur) match {
+        case Some(lr) if lr.data.length < SqlInternals.LocalMaxRows =>
+          cur = localAppend(lr, meta.schema, Seq(row)); true
         case _ => false
-      }
-    }
+      })
     var opCount = 0
     var folds = 0
-    def foldOrCheckpoint(): Unit = {
-      if (localTier) {
-        foldToLocal(cur, LocalFoldMaxRows) match {
-          case Some(l) => cur = l; return
-          case None => localTier = false
-        }
+    def checkpointMaybe(): Unit = {
+      if (localTier && SqlInternals.localRelation(cur).isEmpty) {
+        stage(table, meta, cur)
+        cur = working(table)._2
+        localTier = SqlInternals.localRelation(cur).isDefined
       }
-      opCount += 1
-      if (opCount % 64 == 0) {
-        cur = cur.localCheckpoint(true)
+      if (!localTier) {
+        opCount += 1
+        if (opCount % 64 == 0) cur = cur.localCheckpoint(true)
       }
     }
-    def checkpointMaybe(): Unit = foldOrCheckpoint()
     // run one program with the per-row state published for its bodies,
     // adopting any target mutation the body made (self-DML is legal)
     def fire(t: SqliteDdl.TriggerDef, resolve: (String, String) => String,
         raw: (String, String) => Any): Boolean = {
-      if (perRow) { stage(table, meta, cur) }
+      if (perRow) stage(table, meta, cur, fold = localTier)
       val ok = runTriggerProgram(t, resolve, raw)
       if (perRow && (working(table)._2 ne cur)) {
         cur = working(table)._2
-        foldOrCheckpoint()
+        checkpointMaybe()
       }
       ok
     }
@@ -5106,7 +5081,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val ridSchema = org.apache.spark.sql.types.StructType(
       fields :+ org.apache.spark.sql.types.StructField(
         rid, org.apache.spark.sql.types.LongType, nullable = false))
-    val tagged = df.withColumn(rid, monotonically_increasing_id()).localCheckpoint(true)
+    val tagged = tagRows(df, rid)
     val sel = (fields.map(f => col(f.name).as(s"__o_${f.name}")) ++
       fields.map(f => assignments.getOrElse(f.name, col(f.name)).as(s"__n_${f.name}"))) :+
       col(rid)
@@ -5139,7 +5114,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val ridSchema = org.apache.spark.sql.types.StructType(
       fields :+ org.apache.spark.sql.types.StructField(
         rid, org.apache.spark.sql.types.LongType, nullable = false))
-    val tagged = df.withColumn(rid, monotonically_increasing_id()).localCheckpoint(true)
+    val tagged = tagRows(df, rid)
     val aiIdx = meta.autoIncrement
       .map(ai => fields.indexWhere(_.name.equalsIgnoreCase(ai))).filter(_ >= 0)
     // SQLite's rowid scan order, sorted Spark-side; streamed (r17)
@@ -5167,39 +5142,18 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val fields = meta.schema.fields
     val perRow = touchesTarget(trigs, table)
     var cur = tagged
-    // driver-local tier (r19, see foldToLocal): the per-row loop's
-    // where + single-row-union per firing folds eagerly instead of
-    // layering 64-deep plans between checkpoints
-    var localTier = perRow && {
-      materializeLocal(tagged, LocalFoldMaxRows) match {
-        case Some(l) => cur = l; true
-        case None => false
-      }
-    }
-    // apply one change straight into the LocalRelation (rid is the
-    // last ridSchema column, non-null by construction) — a where +
-    // union + optimizer fold per change was the loop's residual wall
-    lazy val ridRowToInternal = {
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(ridSchema)
-      (r: IndexedSeq[Any]) =>
-        conv(org.apache.spark.sql.Row.fromSeq(r))
-          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
-    }
-    val ridOrd = ridSchema.fields.length - 1
+    // driver-local tier (see "driver-local working frames"): a local
+    // `tagged` takes each change straight into its LocalRelation — a
+    // where + union + fold per change was the loop's residual wall
     def applyLocal(ridV: Long, newVOpt: Option[IndexedSeq[Any]]): Boolean =
-      localTier && {
-        import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-        cur.queryExecution.logical match {
-          case lr: LocalRelation if lr.data.length < LocalFoldMaxRows =>
-            var data = lr.data.filterNot(r =>
-              !r.isNullAt(ridOrd) && r.getLong(ridOrd) == ridV)
-            newVOpt.foreach(nv => data = data :+ ridRowToInternal(nv :+ ridV))
-            cur = SqlInternals.ofRows(spark, LocalRelation(lr.output, data))
-            true
-          case _ => false
-        }
-      }
+      perRow && (SqlInternals.localRelation(cur) match {
+        case Some(lr) if lr.data.length < SqlInternals.LocalMaxRows =>
+          val ridOrd = lr.output.indexWhere(_.name == rid)
+          cur = localAppend(lr, ridSchema, newVOpt.map(_ :+ ridV).toSeq,
+            keep = r => r.isNullAt(ridOrd) || r.getLong(ridOrd) != ridV)
+          true
+        case _ => false
+      })
     var lastPublished: DataFrame = null
     def fire(t: SqliteDdl.TriggerDef, resolve: (String, String) => String,
         raw: (String, String) => Any): Boolean = {
@@ -5253,14 +5207,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
             cur = cur.where(col(rid) =!= ridV)
             newVOpt.foreach(nv =>
               cur = cur.unionByName(localDf(ridSchema, Seq(nv :+ ridV))))
-            if (localTier) foldToLocal(cur, LocalFoldMaxRows) match {
-              case Some(l) => cur = l
-              case None => localTier = false
-            }
-            if (!localTier) {
-              opCount += 1
-              if (opCount % 64 == 0) cur = cur.localCheckpoint(true)
-            }
+            opCount += 1
+            if (opCount % 64 == 0) cur = cur.localCheckpoint(true)
           }
         } else {
           batch(ridV) = newVOpt

@@ -1,8 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
 import org.apache.spark.sql.classic
 
 /** Narrow bridge to two `private[sql]` constructors the SQLite dialect
@@ -11,8 +11,10 @@ import org.apache.spark.sql.classic
   * publicly only through the SQL text path (`spark.sql`, `expr`), which
   * would bypass the dialect rewrite — this file exists solely so the
   * rewrite can sit between the parser and the analyzer, which is the
-  * injection point Spark itself uses for dialect work. No other Spark
-  * internals are touched.
+  * injection point Spark itself uses for dialect work. The other
+  * reach-in is driver-local execution: [[toLocal]] decides whether a
+  * frame is held on the driver, and [[driverLocalInternalRows]] computes
+  * a small plan's partitions in-process without a job.
   */
 object SqlInternals {
   /** DataFrame from an (unresolved) logical plan — the analyzer runs as
@@ -27,48 +29,103 @@ object SqlInternals {
   /** The expression tree under a Column. */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Evaluate a SINGLE-STAGE, single-partition physical plan ON THE
-    * DRIVER THREAD — no job, no task launch, no scheduler round trip.
-    *
-    * The serving path (TroughEngine.read over a per-segment cache of
-    * LocalRelation-backed views) plans tiny narrow pipelines whose only
-    * execution cost under normal `collect()` is the ~10 ms local-mode
-    * job floor — a 100× overhead against the reference's µs sqlite
-    * reads. Those pipelines need nothing from the cluster: this
-    * computes the RDD's one partition in-process under a real
-    * [[TaskContextImpl]] (with a live TaskMemoryManager, so codegen'd
-    * aggregates and sorters acquire pages normally) and converts the
-    * rows out. Returns None — caller falls back to the distributed
-    * path — when the plan shuffles, has >1 partition, or anything at
-    * all goes wrong mid-compute.
-    *
-    * Rows materialize eagerly inside the task-context window (lazy
-    * iteration after `unset` would strand memory-consumer callbacks);
-    * that matches `toLocalIterator`'s memory profile, which also holds
-    * one whole partition driver-side. */
+  /** Row cap for driver-local frames: a trough segment table (a small
+    * database) under it is held on the driver as one LocalRelation;
+    * over it, frames stay distributed. */
+  val LocalMaxRows = 65536
+
+  /** The one decision whether a frame is driver-local: within the cap,
+    * the same rows as a single-partition LocalRelation frame in the
+    * frame's own session (fresh attribute ids, so a later self-join
+    * cannot alias-collide); over it, None. Tries, in order:
+    *  1. an optimizer fold — OneRowRelation leaves become a one-row
+    *     LocalRelation, so a VALUES list (an N-way UNION ALL of
+    *     `SELECT <exprs>`) and any project/filter over local leaves
+    *     evaluate driver-side with no job and no codegen;
+    *  2. a driver-side read of a plan with at most 2 splits
+    *     ([[driverLocalInternalRows]]; per-file open cost is serial on
+    *     the driver, so wider scans read faster as one job);
+    *  3. one bounded `limit(LocalMaxRows + 1)` collect.
+    * Deciding that a frame is over the cap never reads more than
+    * LocalMaxRows + 1 rows. Anything that fails on the way answers None, so the
+    * caller keeps the lazy frame and a bad expression fails at the
+    * same point it always did. */
+  def toLocal(df: DataFrame): Option[DataFrame] = {
+    val cap = LocalMaxRows
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+      OneRowRelation, Union}
+    localRelation(df) match {
+      case Some(lr) => return if (lr.data.length <= cap) Some(df) else None
+      case None => ()
+    }
+    try {
+      // from the OPTIMIZED plan: a parsed N-way UNION ALL is N levels
+      // deep until CombineUnions flattens it, too deep to walk again
+      val leaves = df.queryExecution.optimizedPlan.transformUp {
+        case _: OneRowRelation => LocalRelation(Nil, Seq(InternalRow.empty))
+        case Repartition(1, false, lr: LocalRelation) => lr
+      }
+      val folded = df.sparkSession.sessionState.optimizer.execute(leaves) match {
+        case l: LocalRelation => Some(l.data)
+        case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+          Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
+        case _ => None
+      }
+      val rows = folded
+        .orElse(driverLocalInternalRows(df, cap + 1, maxPartitions = 2))
+        .getOrElse(df.limit(cap + 1).queryExecution.executedPlan.executeCollect().toSeq)
+      if (rows.length > cap) None
+      else Some(localFrame(df.sparkSession, df.queryExecution.analyzed.output, rows))
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** A single-partition frame over `rows` (fresh ids for `output`). */
+  def localFrame(spark: SparkSession, output: Seq[Attribute],
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    ofRows(spark, Repartition(1, shuffle = false,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        output.map(_.newInstance()), rows)))
+
+  /** The relation under a driver-local frame (a [[toLocal]] or
+    * [[localFrame]] result), else None. */
+  def localRelation(df: DataFrame)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
+    df.queryExecution.logical match {
+      case Repartition(1, false,
+          lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) => Some(lr)
+      case _ => None
+    }
+
   /** Compute a no-shuffle physical plan's InternalRows ON THE DRIVER,
     * iterating its partitions sequentially under one TaskContext — no
-    * job, no task launch. For the serving path's context-build
-    * snapshot of a SMALL table (a trough segment database), the
-    * scheduler round trips dominated: a `limit(cap).executeCollect()`
-    * over the handful of tiny part files a segment table has cost
-    * 40-110 ms (CollectLimit escalation = one sequential job per
-    * round; ServeProbe r19), vs single-digit ms reading the same
-    * partitions in-process. Returns None — caller falls back to the
-    * job path — when the plan shuffles, has more than `maxPartitions`
-    * partitions, yields more than `maxRows` rows (bails mid-iteration,
-    * so an over-cap table costs at most cap+1 rows of work), or
-    * anything at all goes wrong. */
-  def driverLocalInternalRows(df: DataFrame, maxRows: Int,
-      maxPartitions: Int = 64)
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    * job, no task launch. The serving path's pipelines over its
+    * LocalRelation-backed views, and the context-build snapshot of a
+    * small segment table, need nothing from the cluster: the ~10 ms
+    * local-mode job floor (and CollectLimit's one-job-per-round
+    * escalation over a segment's part files, 40-110 ms; ServeProbe
+    * r19) was their whole cost. A live TaskMemoryManager lets codegen'd
+    * aggregates and sorters acquire pages normally; rows are copied out
+    * inside the task-context window. Reads at most `limit` rows (then
+    * stops, so an over-cap table costs at most that much work). None —
+    * caller falls back to the job path — when the plan shuffles, is
+    * adaptive, has more than `maxPartitions` partitions, or anything at
+    * all goes wrong. Adaptive plans (the write session keeps AQE on)
+    * are refused: run this way under concurrent writers, they lost a
+    * whole INSERT's rows now and then. */
+  def driverLocalInternalRows(df: DataFrame, limit: Int,
+      maxPartitions: Int): Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     try {
       val plan = df.queryExecution.executedPlan
-      if (plan.exists(_.isInstanceOf[ShuffleExchangeLike])) return None
+      if (plan.exists(p => p.isInstanceOf[ShuffleExchangeLike] ||
+          p.isInstanceOf[AdaptiveSparkPlanExec])) return None
       val rdd = plan.execute()
       val parts = rdd.partitions
-      if (parts.length == 0) return Some(Seq.empty) // empty relation
+      // an empty relation's RDD has ZERO partitions — a trivially
+      // computable empty result, not a reason to schedule a job
+      if (parts.length == 0) return Some(Seq.empty)
       if (parts.length > maxPartitions) return None
       val env = org.apache.spark.SparkEnv.get
       if (env == null) return None
@@ -87,57 +144,12 @@ object SqlInternals {
         val buf = new scala.collection.mutable.ArrayBuffer[
           org.apache.spark.sql.catalyst.InternalRow]
         var p = 0
-        while (p < parts.length) {
+        while (p < parts.length && buf.length < limit) {
           val it = rdd.iterator(parts(p), ctx)
-          while (it.hasNext) {
-            buf += it.next().copy()
-            if (buf.length > maxRows) return None
-          }
+          while (it.hasNext && buf.length < limit) buf += it.next().copy()
           p += 1
         }
         Some(buf.toSeq)
-      } finally {
-        try ctx.markTaskCompleted(None)
-        catch { case scala.util.control.NonFatal(_) => () }
-        org.apache.spark.TaskContext.unset()
-        tmm.cleanUpAllAllocatedMemory()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  def driverLocalRows(df: DataFrame): Option[Iterator[org.apache.spark.sql.Row]] = {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    try {
-      val plan = df.queryExecution.executedPlan
-      if (plan.exists(_.isInstanceOf[ShuffleExchangeLike])) return None
-      val rdd = plan.execute()
-      // an empty relation's RDD has ZERO partitions (empty
-      // LocalTableScan) — that's a trivially computable empty result,
-      // not a reason to fall back to a scheduled job (r19: empty
-      // segment tables are the common case in a provisioned universe)
-      if (rdd.getNumPartitions == 0) return Some(Iterator.empty)
-      if (rdd.getNumPartitions != 1) return None
-      val env = org.apache.spark.SparkEnv.get
-      if (env == null) return None
-      val tmm = new org.apache.spark.memory.TaskMemoryManager(
-        env.memoryManager, Long.MaxValue)
-      // taskAttemptId MUST be BlockInfo.NON_TASK_WRITER (-1024): it is
-      // the only id BlockInfoManager pre-registers, and block-lock
-      // bookkeeping (e.g. the parquet scan's Hadoop-conf broadcast
-      // read) NPEs on any unregistered id — which silently kicked
-      // every parquet-backed snapshot off this fast path (r20).
-      val ctx = new org.apache.spark.TaskContextImpl(0, 0, 0, -1024L, 0, 1,
-        tmm, new java.util.Properties, null,
-        org.apache.spark.executor.TaskMetrics.empty, 1, Map.empty)
-      org.apache.spark.TaskContext.setTaskContext(ctx)
-      try {
-        val it = rdd.iterator(rdd.partitions(0), ctx)
-        val buf = new scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.catalyst.InternalRow]
-        while (it.hasNext) buf += it.next().copy()
-        val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(df.schema)
-        Some(buf.iterator.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]))
       } finally {
         try ctx.markTaskCompleted(None)
         catch { case scala.util.control.NonFatal(_) => () }

@@ -1,0 +1,136 @@
+package graft.engine
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
+
+import graft.SparkSpecBase
+
+/** Segment-sized frames are driver-local (SqlInternals.toLocal): an
+  * INSERT … VALUES list, a loaded table and a staged statement each
+  * become one single-partition local relation, so a write script's
+  * work no longer scales with its tuple count, a small table commits
+  * as one part file, and a read of it runs without a job. Counted with
+  * one SparkListener. */
+class DriverLocalSpec extends SparkSpecBase {
+
+  private lazy val root = Files.createTempDirectory("graft-local").toString
+  private lazy val store = new SegmentStore(spark, root)
+  private lazy val engine = new TroughEngine(spark, store, new SchemaRegistry)
+
+  private def segment(id: String, ddl: String): String = {
+    engine.schemas.put(s"$id-schema", ddl)
+    engine.provisionWritable(id, s"$id-schema")
+    id
+  }
+
+  /** (jobs, tasks) scheduled while `body` runs. */
+  private def counted(body: => Unit): (Long, Long) = {
+    val jobs, tasks = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, tasks.get)
+  }
+
+  private def values(rows: Seq[Int])(f: Int => String): String =
+    rows.map(i => s"(${f(i)})").mkString(", ")
+
+  test("three 500-tuple INSERTs into a triggered table schedule fewer tasks " +
+      "than they have VALUES tuples") {
+    // the shape of TriggerSpec's cascade test: AFTER INSERT on a
+    // cascades into b and c, with BEFORE programs and a RAISE(IGNORE)
+    val seg = segment("local-cascade",
+      "CREATE TABLE a (id INTEGER PRIMARY KEY, x INTEGER);\n" +
+        "CREATE TABLE b (id INTEGER PRIMARY KEY, ax INTEGER);\n" +
+        "CREATE TABLE c (id INTEGER PRIMARY KEY, note TEXT, v INTEGER);")
+    engine.write(seg,
+      "CREATE TRIGGER t1 AFTER INSERT ON a BEGIN " +
+        "INSERT INTO b (ax) VALUES (NEW.x * 10); " +
+        "INSERT INTO c (note, v) VALUES ('postA', NEW.x); END;" +
+        "CREATE TRIGGER tb BEFORE INSERT ON b WHEN NEW.ax % 70 = 20 " +
+        "BEGIN SELECT RAISE(IGNORE); END;" +
+        "CREATE TRIGGER t2 AFTER INSERT ON b BEGIN " +
+        "INSERT INTO c (note, v) VALUES ('afterB', NEW.ax); END;")
+    val tuples = 3 * 500
+    val script = (0 until 3).map { bk =>
+      "INSERT INTO a (x) VALUES " +
+        values(1 to 500)(i => s"${(bk * 500 + i) % 97}") + ";"
+    }.mkString
+    val (_, tasks) = counted(engine.write(seg, script))
+    assert(tasks < tuples, s"$tasks tasks for $tuples VALUES tuples")
+    val n = engine.read(seg, "SELECT count(*) FROM a;").collect()(0).getLong(0)
+    assert(n == tuples)
+  }
+
+  test("a 10-row INSERT OR IGNORE into an 800-row table commits one part " +
+      "file, and the next read of the segment schedules zero jobs") {
+    val seg = segment("local-commit",
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT);")
+    engine.write(seg, (0 until 2).map { half =>
+      "INSERT INTO t VALUES " +
+        values(half * 400 + 1 to half * 400 + 400)(i => s"$i, 'v$i'") + ";"
+    }.mkString)
+    engine.write(seg, "INSERT OR IGNORE INTO t VALUES " +
+      values(795 to 804)(i => s"$i, 'w$i'") + ";")
+    val live = Paths.get(root, "t", s"segment_id=$seg")
+    val parts = Files.list(live).iterator.asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+    assert(parts == 1, s"$parts part files in $live")
+    var json = ""
+    val (jobs, _) = counted {
+      json = engine.resultJson(engine.read(seg, "SELECT count(*) AS n FROM t;"))
+    }
+    assert(json == "[{\"n\":804}]\n")
+    assert(jobs == 0, s"$jobs jobs for a read of an 804-row table")
+  }
+
+  test("reads of a segment run beside commits to it without a failed read") {
+    val seg = segment("local-race",
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT);")
+    engine.write(seg, (0 until 2).map { half =>
+      "INSERT INTO t VALUES " +
+        values(half * 400 + 1 to half * 400 + 400)(i => s"$i, 'v$i'") + ";"
+    }.mkString)
+    val commits = 20
+    @volatile var writing = true
+    val reads, failures = new AtomicLong
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val readers = (1 to 2).map { _ =>
+      val th = new Thread(() => {
+        while (writing) {
+          try {
+            engine.resultJson(engine.read(seg, "SELECT count(*) FROM t;"))
+            reads.incrementAndGet()
+          } catch {
+            case e: Throwable =>
+              failures.incrementAndGet(); firstFailure.compareAndSet(null, e)
+          }
+        }
+      })
+      th.start(); th
+    }
+    try (0 until commits).foreach { k =>
+      // 10 rows, half of them already present (ignored)
+      engine.write(seg, "INSERT OR IGNORE INTO t VALUES " +
+        values(800 + 5 * k - 4 to 800 + 5 * k + 5)(i => s"$i, 'w$i'") + ";")
+    } finally {
+      writing = false
+      readers.foreach(_.join())
+    }
+    assert(failures.get == 0,
+      s"${failures.get} of ${reads.get + failures.get} reads failed: ${firstFailure.get}")
+    assert(reads.get > 0)
+    val n = engine.read(seg, "SELECT count(*) FROM t;").collect()(0).getLong(0)
+    assert(n == 800 + 5 * commits)
+  }
+}

@@ -21,6 +21,9 @@ import graft.SparkSpecBase
   *    the row loop let a NULL into a NOT NULL column through to the
   *    commit gate, where OR IGNORE skips the row and OR REPLACE takes
   *    the column's DEFAULT.
+  *  - [756] (same sweep): after ALTER TABLE … DROP COLUMN, OR IGNORE
+  *    under an AFTER INSERT trigger that reads its own target stored
+  *    the first two values in each other's columns.
   *  - [lexer] spellings sqlite3's tokenizer accepts that hand-written
   *    scanners got wrong: quoted column names containing a space, and
   *    keywords directly followed by `(`, a quote or a `[name]`.
@@ -172,5 +175,24 @@ class FuzzReproSpec extends SparkSpecBase {
         "INSERT INTO t VALUES (7, 5, 1.5);" +
         "INSERT OR REPLACE INTO t VALUES (2, NULL, 6.225);",
       Seq("t", "log"))
+  }
+
+  test("[756] OR IGNORE after DROP COLUMN keeps each value in its column " +
+      "under a self-reading AFTER INSERT trigger") {
+    differential(
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, \"c 1\" INTEGER UNIQUE, [c2] INTEGER, " +
+        "\"c3\" INTEGER NOT NULL DEFAULT 19, `c 4` REAL);\n" +
+        "CREATE TABLE log (lid INTEGER PRIMARY KEY AUTOINCREMENT, msg TEXT);",
+      "INSERT OR REPLACE  INTO t VALUES(2, 9, 13, 7, -4);" +
+        "INSERT OR IGNORE  INTO t VALUES (3, 11, 9, -3, 3.225);" +
+        "CREATE TRIGGER tg1 AFTER INSERT ON t BEGIN " +
+        "INSERT INTO log (msg) VALUES ((SELECT count(id) FROM t) || '@' || NEW.id); END;" +
+        "CREATE VIEW v (vid, vc) AS SELECT id, `c 1` FROM t WHERE (id % 4 = 0);" +
+        "ALTER TABLE t DROP COLUMN `c3`;" +
+        "INSERT OR IGNORE  INTO t VALUES (4, 16, 11, 9.75);" +
+        "INSERT  INTO t VALUES(5, 6, 0, 7.150);" +
+        "INSERT OR REPLACE  INTO t VALUES(3, -1, 7, 1.225);",
+      Seq("t", "log"),
+      Seq("SELECT * FROM v ORDER BY vid;"))
   }
 }
