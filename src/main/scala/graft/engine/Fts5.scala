@@ -231,7 +231,7 @@ object Fts5 {
   /** `prefix=` occurrences of a CREATE VIRTUAL TABLE text, in
     * declaration order (they define exported prefix-index ids 1…);
     * quoted lists hold several lengths, duplicates kept (probed).
-    * Shared by the driver-streamed and distributed export paths. */
+    * Read by the `.sqlite` exporter ([[SqliteExportKernel]]). */
   private[engine] def prefixLensOf(ddl: String): Seq[Int] =
     "(?i)\\bprefix\\s*=\\s*(?:'([0-9 ]*)'|\"([0-9 ]*)\"|([0-9]+))".r
       .findAllMatchIn(ddl).flatMap { m =>

@@ -49,12 +49,10 @@ import scala.collection.mutable.ArrayBuffer
   *    own pgsz=64 files).
   *
   * Pages spill to a driver-local temp file as they close — the
-  * builder holds ONE page in memory, so index size is disk-bounded,
-  * not heap-bounded (the export path's O(tree-depth) memory story
-  * survives fts tables). Feed order contract: `add` is called with
-  * terms ascending by UTF-8 bytes and rowids ascending within a term
-  * (the export path gets this from one Spark sort of the token
-  * table). */
+  * builder holds ONE page in memory. Feed order contract: `add` is
+  * called with terms ascending by UTF-8 bytes and rowids ascending
+  * within a term (the exporter, [[SqliteExportKernel]], sorts one
+  * table's postings in-process). */
 final class Fts5IndexBuilder(pgsz: Int = 4000) extends AutoCloseable {
   import Fts5IndexBuilder.{putVarint, varintLen}
 

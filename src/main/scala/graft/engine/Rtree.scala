@@ -124,10 +124,9 @@ object Rtree {
   /** The three PHYSICAL shadow tables behind one exported rtree
     * virtual table — `%_rowid`, `%_node`, `%_parent`, in real rtree's
     * own catalog order and with its probed DDL texts — built lazily on
-    * first row pull so `feed` (the caller's row pass, a Spark sorted
-    * stream on the driver path, an in-task buffer in the distributed
-    * one) runs exactly once, when the writer reaches the first shadow
-    * table. */
+    * first row pull so `feed` (the exporter's sorted pass over the
+    * table's rows) runs exactly once, when the writer reaches the
+    * first shadow table. */
   def exportTables(rd: RtreeDef, pageSize: Int = 4096)(
       feed: RtreeTreeBuilder => Unit): Seq[SqliteWriter.StreamedTable] = {
     lazy val built = {
@@ -263,8 +262,7 @@ object Rtree {
   * fill to capacity; node blobs spill to a local temp file in emission
   * order (leaves first, then each upper level, root last but numbered
   * 1) so heap stays O(nodeSize × depth) plus the (rowid, nodeno) pair
-  * buffer — 16 bytes per row, the same documented bound as the
-  * no-rowid-alias index export. */
+  * buffer — 16 bytes per row. */
 final class RtreeTreeBuilder(rd: Rtree.RtreeDef, pageSize: Int = 4096) {
   // `dims` counts COLUMNS (min and max both), i.e. 2 × dimension pairs
   private val dims = rd.coordCols.length

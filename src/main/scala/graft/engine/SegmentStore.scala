@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions}
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StructField, StructType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType, StringType}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -503,11 +503,8 @@ class SegmentStore(
         Files.createDirectories(marker(segmentId).getParent)
         Files.writeString(marker(segmentId), "")
       }
-      val root = tierRoot(segmentId)
       val names = masters.map { spec =>
-        val meta = TableMeta(spec.schema, spec.primaryKey, spec.autoIncrement,
-          spec.indexes, spec.notNull, spec.defaults, spec.uniques, spec.checks,
-          spec.generated, spec.strict, spec.strictTypes)
+        val meta = ingestedMeta(spec)
         SegmentStore.requireNoReservedColumns(meta)
         val rows = new java.util.ArrayList[Row]()
         SqliteIngest.decodedRows(file, spec).foreach(rows.add)
@@ -520,150 +517,10 @@ class SegmentStore(
         val df = if (virtuals.isEmpty) df0
           else GeneratedColumns.recompute(sess, df0, spec.schema,
             spec.generated, only = virtuals)
-        Files.createDirectories(tableRoot(root, spec.name))
-        prepareTableData(segmentId, spec.name, df)
-        swapPreparedData(segmentId, spec.name, Some(meta))
+        replaceTableData(segmentId, spec.name, df, Some(meta))
         spec.name
       }
-      // views travel in sqlite_master too (type='view', rootpage=0).
-      // Import semantics mirror tables: same-named views are replaced,
-      // others kept; a pre-existing view now shadowed by an ingested
-      // TABLE is dropped (tables win the namespace, as in SQLite).
-      val fileViews = SqliteIngest.viewDefs(file)
-      val existing = views(segmentId)
-      val merged = existing.filterNot(v =>
-        fileViews.exists(_.name.equalsIgnoreCase(v.name)) ||
-          names.exists(_.equalsIgnoreCase(v.name))) ++ fileViews
-      if (merged != existing) putViews(segmentId, merged)
-      // triggers travel in sqlite_master too (type='trigger',
-      // rootpage=0): same replace-by-name merge as views, except
-      // triggers occupy their OWN namespace (probed: a trigger may
-      // share a table's name), so ingested tables never shadow them
-      val fileTriggers = SqliteIngest.triggerDefs(file)
-      val existingTg = triggers(segmentId)
-      val mergedTg = existingTg.filterNot(t =>
-        fileTriggers.exists(_.name.equalsIgnoreCase(t.name))) ++ fileTriggers
-      if (mergedTg != existingTg) putTriggers(segmentId, mergedTg)
-      // fts5 virtual tables materialize from their ingested _content
-      // shadow (id, c0..cn-1 → the declared column names) so MATCH
-      // works over reference-written files (r11) — the reference
-      // merely preserved the shadow DATA; this makes it searchable.
-      // Unsupported fts definitions were skipped by ftsDefs (shadow
-      // data still loads, the pre-r11 behavior).
-      val ftsNames = SqliteIngest.ftsDefs(file).flatMap { fd =>
-        def materialize(df: DataFrame, withRowid: Boolean): String = {
-          val fields =
-            (if (withRowid) Seq(StructField(Fts5.RowidCol, LongType))
-             else Nil) ++ fd.columns.map(c => StructField(c, StringType))
-          val meta =
-            if (withRowid) TableMeta(StructType(fields),
-              Seq(Fts5.RowidCol), Some(Fts5.RowidCol), ftsSql = Some(fd.sql))
-            else TableMeta(StructType(fields), Nil, None, ftsSql = Some(fd.sql))
-          Files.createDirectories(tableRoot(root, fd.name))
-          prepareTableData(segmentId, fd.name, df)
-          swapPreparedData(segmentId, fd.name, Some(meta))
-          fd.name
-        }
-        if (fd.externalContent) {
-          // external content (r15): the file carries only the token
-          // index — rebuild the index state from the ingested content
-          // table (the supported deployment keeps them synced; real
-          // fts5's own results are undefined otherwise). Unresolvable
-          // rowid linkage skips the fts table like unsupported defs.
-          names.find(_.equalsIgnoreCase(fd.content.get)).flatMap { src =>
-            val srcMeta = tableMeta(segmentId, src)
-            val ridCol =
-              if (Set("rowid", "_rowid_", "oid").contains(
-                  fd.contentRowid.toLowerCase(java.util.Locale.ROOT)))
-                srcMeta.autoIncrement
-              else srcMeta.schema.fieldNames
-                .find(_.equalsIgnoreCase(fd.contentRowid))
-            ridCol.map { rc =>
-              val content = loadTable(segmentId, src)
-              materialize(content.select(
-                functions.col(rc).cast(LongType).as(Fts5.RowidCol) +:
-                  fd.columns.map(c => functions.col(c).cast(StringType)
-                    .as(c)): _*), withRowid = true)
-            }
-          }
-        } else if (fd.contentless) {
-          // contentless: the text is unrecoverable from the file's
-          // doclists without an index decoder — skipped like
-          // unsupported defs (shadow data still loads)
-          None
-        } else names.find(_.equalsIgnoreCase(fd.name + "_content")).map { cn =>
-          val content = loadTable(segmentId, cn)
-          materialize(content.select(fd.columns.zipWithIndex.map {
-            case (c, i) =>
-              functions.col(s"c$i").cast(StringType).as(c)
-          }: _*), withRowid = false)
-        }
-      }
-      // rtree virtual tables rebuild their queryable rows from the
-      // ingested %_node leaf blobs (r15 — probed cell layout,
-      // [[Rtree.decodeLeafCells]]); the decode is per-blob imperative
-      // work, a genuine RDD case. Leaves are found STRUCTURALLY (r16):
-      // only the ROOT node's header is nonzero (the tree depth), so a
-      // zero header cannot distinguish a non-root inner node from a
-      // leaf — a node is a leaf iff it is nobody's parent in the
-      // %_parent shadow table (anti-join; empty table = 1-node tree,
-      // whose root IS the sole leaf).
-      val rtreeNames = SqliteIngest.rtreeDefs(file).flatMap { rd0 =>
-        names.find(_.equalsIgnoreCase(rd0.name + "_node")).map { nn =>
-          val rd = rd0
-          val nodes = loadTable(segmentId, nn)
-            .where(functions.col("data").isNotNull)
-          val leaves =
-            names.find(_.equalsIgnoreCase(rd0.name + "_parent")) match {
-              case Some(pn) =>
-                // parentnode is UNTYPED in the shadow DDL, so it may
-                // ingest as the widened binary class (UTF-8 decimal
-                // text) — cast through string to cover both storages
-                val parents = loadTable(segmentId, pn)
-                  .select(functions.col("parentnode")
-                    .cast(org.apache.spark.sql.types.StringType)
-                    .cast(LongType).as("nodeno")).distinct()
-                nodes.join(functions.broadcast(parents), Seq("nodeno"),
-                  "left_anti")
-              case None => nodes
-            }
-          val rows = leaves
-            .select(functions.col("data"))
-            .rdd.flatMap(r => Rtree.decodeLeafCells(rd,
-              r.getAs[Array[Byte]](0)).map(Row.fromSeq))
-          val coordDf = spark.createDataFrame(rows,
-            Rtree.schemaOf(rd.copy(aux = Nil)))
-          // auxiliary +col values (r17) live in the %_rowid shadow as
-          // a0, a1, … — join them back by rowid; typeless shadow
-          // columns may ingest as the widened binary class, so cast
-          // through string (the parentnode pattern) to the aux type
-          val df =
-            if (rd.aux.isEmpty) coordDf
-            else names.find(_.equalsIgnoreCase(rd0.name + "_rowid")) match {
-              case Some(rn) =>
-                val auxCols = rd.aux.zipWithIndex.map { case ((c, decl), i) =>
-                  functions.col(s"a$i")
-                    .cast(org.apache.spark.sql.types.StringType)
-                    .cast(rd.auxType(decl)).as(c)
-                }
-                val ridDf = loadTable(segmentId, rn).select(
-                  functions.col("rowid").cast(LongType).as("__rt_rid") +:
-                    auxCols: _*)
-                coordDf.join(ridDf,
-                  coordDf(rd.idCol) === functions.col("__rt_rid"), "left")
-                  .drop("__rt_rid")
-              case None => // no rowid shadow in the file: aux read NULL
-                rd.aux.foldLeft(coordDf) { case (d, (c, decl)) =>
-                  d.withColumn(c, functions.lit(null).cast(rd.auxType(decl)))
-                }
-            }
-          Files.createDirectories(tableRoot(root, rd.name))
-          prepareTableData(segmentId, rd.name, df)
-          swapPreparedData(segmentId, rd.name, Some(Rtree.metaOf(rd)))
-          rd.name
-        }
-      }
-      names ++ ftsNames ++ rtreeNames
+      names ++ commitCatalog(segmentId, names, SqliteIngest.catalogDdl(file))
     } catch {
       case e: Throwable =>
         if (registeredHere && tables(segmentId).isEmpty)
@@ -672,30 +529,157 @@ class SegmentStore(
     } finally file.close()
   }
 
-  /** Inverse migration: export a segment as a well-formed `.sqlite`
-    * database file via the pure-Scala [[SqliteWriter]] — the real
-    * `sqlite3` opens, integrity-checks, and queries the output (spec-
-    * verified), so data can move back OUT of this engine into a trough
-    * deployment with no SQLite linkage in the JVM. The rowid-alias
-    * column (INTEGER PRIMARY KEY) keys the B-tree directly; tables
-    * without one get sequential rowids (a SQLite implementation detail
-    * when unaliased). Recorded secondary indexes (CREATE INDEX) and
-    * the autoindex implied by a non-alias PRIMARY KEY are materialized
-    * as real index B-trees, so the export's own SQLite query plans can
-    * use them.
-    *
-    * Memory shape: each pass is a Spark `orderBy` consumed through
-    * `toLocalIterator` into the streaming writer — the driver holds
-    * one result partition plus one page of cells, never a table.
-    * Spark's sort IS the writer's required key order (UTF8 memcmp
-    * strings, unsigned-lexicographic binary, numeric otherwise — all
-    * equal to SQLite BINARY within a single storage class, and a
-    * stored column has exactly one Spark type). The exception is a
-    * table with indexes but NO rowid alias: its rowids are positional,
-    * so index keys are collected during the single row pass (O(index
-    * keys) memory) and sorted in-process. Bounded like ingest: one
-    * segment = one file of driver-side work, parallelizable across
-    * segments. Returns the exported table names. */
+  private def ingestedMeta(spec: SqliteIngest.TableSpec): TableMeta =
+    TableMeta(spec.schema, spec.primaryKey, spec.autoIncrement,
+      spec.indexes, spec.notNull, spec.defaults, spec.uniques, spec.checks,
+      spec.generated, spec.strict, spec.strictTypes)
+
+  /** The post-table half of every `.sqlite` ingest, run once the file's
+    * plain tables (`names`) have committed: merge the file's views and
+    * triggers into the segment's registries, then rebuild its fts5 and
+    * rtree tables from their ingested shadow tables. Shared by
+    * [[ingestSqliteSegment]] and [[ingestSqliteSegmentsDistributed]], so
+    * both build the same segment from the same file. A file with only
+    * plain tables runs no job and writes no registry file. Returns the
+    * virtual tables built. */
+  private def commitCatalog(segmentId: String, names: Seq[String],
+      cat: SqliteIngest.CatalogDdl): Seq[String] = {
+    // views travel in sqlite_master too (type='view', rootpage=0).
+    // Import semantics mirror tables: same-named views are replaced,
+    // others kept; a pre-existing view now shadowed by an ingested
+    // TABLE is dropped (tables win the namespace, as in SQLite).
+    val fileViews = cat.viewDefs
+    val existing = views(segmentId)
+    val merged = existing.filterNot(v =>
+      fileViews.exists(_.name.equalsIgnoreCase(v.name)) ||
+        names.exists(_.equalsIgnoreCase(v.name))) ++ fileViews
+    if (merged != existing) putViews(segmentId, merged)
+    // triggers travel in sqlite_master too (type='trigger',
+    // rootpage=0): same replace-by-name merge as views, except
+    // triggers occupy their OWN namespace (probed: a trigger may
+    // share a table's name), so ingested tables never shadow them
+    val fileTriggers = cat.triggerDefs
+    val existingTg = triggers(segmentId)
+    val mergedTg = existingTg.filterNot(t =>
+      fileTriggers.exists(_.name.equalsIgnoreCase(t.name))) ++ fileTriggers
+    if (mergedTg != existingTg) putTriggers(segmentId, mergedTg)
+    // fts5 virtual tables materialize from their ingested _content
+    // shadow (id, c0..cn-1 → the declared column names) so MATCH
+    // works over reference-written files (r11) — the reference
+    // merely preserved the shadow DATA; this makes it searchable.
+    // Unsupported fts definitions were skipped by ftsDefs (shadow
+    // data still loads, the pre-r11 behavior).
+    val ftsNames = cat.ftsDefs.flatMap { fd =>
+      def materialize(df: DataFrame, withRowid: Boolean): String = {
+        val fields =
+          (if (withRowid) Seq(StructField(Fts5.RowidCol, LongType))
+           else Nil) ++ fd.columns.map(c => StructField(c, StringType))
+        val meta =
+          if (withRowid) TableMeta(StructType(fields),
+            Seq(Fts5.RowidCol), Some(Fts5.RowidCol), ftsSql = Some(fd.sql))
+          else TableMeta(StructType(fields), Nil, None, ftsSql = Some(fd.sql))
+        replaceTableData(segmentId, fd.name, df, Some(meta))
+        fd.name
+      }
+      if (fd.externalContent) {
+        // external content (r15): the file carries only the token
+        // index — rebuild the index state from the ingested content
+        // table (the supported deployment keeps them synced; real
+        // fts5's own results are undefined otherwise). Unresolvable
+        // rowid linkage skips the fts table like unsupported defs.
+        names.find(_.equalsIgnoreCase(fd.content.get)).flatMap { src =>
+          val srcMeta = tableMeta(segmentId, src)
+          val ridCol =
+            if (Set("rowid", "_rowid_", "oid").contains(
+                fd.contentRowid.toLowerCase(java.util.Locale.ROOT)))
+              srcMeta.autoIncrement
+            else srcMeta.schema.fieldNames
+              .find(_.equalsIgnoreCase(fd.contentRowid))
+          ridCol.map { rc =>
+            val content = loadTable(segmentId, src)
+            materialize(content.select(
+              functions.col(rc).cast(LongType).as(Fts5.RowidCol) +:
+                fd.columns.map(c => functions.col(c).cast(StringType)
+                  .as(c)): _*), withRowid = true)
+          }
+        }
+      } else if (fd.contentless) {
+        // contentless: the text is unrecoverable from the file's
+        // doclists without an index decoder — skipped like
+        // unsupported defs (shadow data still loads)
+        None
+      } else names.find(_.equalsIgnoreCase(fd.name + "_content")).map { cn =>
+        val content = loadTable(segmentId, cn)
+        materialize(content.select(fd.columns.zipWithIndex.map {
+          case (c, i) =>
+            functions.col(s"c$i").cast(StringType).as(c)
+        }: _*), withRowid = false)
+      }
+    }
+    // rtree virtual tables rebuild their queryable rows from the
+    // ingested %_node leaf blobs (r15 — probed cell layout,
+    // [[Rtree.decodeLeafCells]]); the decode is per-blob imperative
+    // work, a genuine RDD case. Leaves are found STRUCTURALLY (r16):
+    // only the ROOT node's header is nonzero (the tree depth), so a
+    // zero header cannot distinguish a non-root inner node from a
+    // leaf — a node is a leaf iff it is nobody's parent in the
+    // %_parent shadow table (anti-join; empty table = 1-node tree,
+    // whose root IS the sole leaf).
+    val rtreeNames = cat.rtreeDefs.flatMap { rd =>
+      names.find(_.equalsIgnoreCase(rd.name + "_node")).map { nn =>
+        val nodes = loadTable(segmentId, nn)
+          .where(functions.col("data").isNotNull)
+        val leaves =
+          names.find(_.equalsIgnoreCase(rd.name + "_parent")) match {
+            case Some(pn) =>
+              // parentnode is UNTYPED in the shadow DDL, so it may
+              // ingest as the widened binary class (UTF-8 decimal
+              // text) — cast through string to cover both storages
+              val parents = loadTable(segmentId, pn)
+                .select(functions.col("parentnode")
+                  .cast(StringType)
+                  .cast(LongType).as("nodeno")).distinct()
+              nodes.join(functions.broadcast(parents), Seq("nodeno"),
+                "left_anti")
+            case None => nodes
+          }
+        val rows = leaves
+          .select(functions.col("data"))
+          .rdd.flatMap(r => Rtree.decodeLeafCells(rd,
+            r.getAs[Array[Byte]](0)).map(Row.fromSeq))
+        val coordDf = spark.createDataFrame(rows,
+          Rtree.schemaOf(rd.copy(aux = Nil)))
+        // auxiliary +col values (r17) live in the %_rowid shadow as
+        // a0, a1, … — join them back by rowid; typeless shadow
+        // columns may ingest as the widened binary class, so cast
+        // through string (the parentnode pattern) to the aux type
+        val df =
+          if (rd.aux.isEmpty) coordDf
+          else names.find(_.equalsIgnoreCase(rd.name + "_rowid")) match {
+            case Some(rn) =>
+              val auxCols = rd.aux.zipWithIndex.map { case ((c, decl), i) =>
+                functions.col(s"a$i")
+                  .cast(StringType)
+                  .cast(rd.auxType(decl)).as(c)
+              }
+              val ridDf = loadTable(segmentId, rn).select(
+                functions.col("rowid").cast(LongType).as("__rt_rid") +:
+                  auxCols: _*)
+              coordDf.join(ridDf,
+                coordDf(rd.idCol) === functions.col("__rt_rid"), "left")
+                .drop("__rt_rid")
+            case None => // no rowid shadow in the file: aux read NULL
+              rd.aux.foldLeft(coordDf) { case (d, (c, decl)) =>
+                d.withColumn(c, functions.lit(null).cast(rd.auxType(decl)))
+              }
+          }
+        replaceTableData(segmentId, rd.name, df, Some(Rtree.metaOf(rd)))
+        rd.name
+      }
+    }
+    ftsNames ++ rtreeNames
+  }
+
   /** One table's `sqlite_master` material, shared by the `.sqlite`
     * export and [[masterCatalog]] so the file a trough deployment
     * receives and the relation the read path answers can never drift:
@@ -750,376 +734,50 @@ class SegmentStore(
     rows.result()
   }
 
+  /** Inverse migration: export a segment as a well-formed `.sqlite`
+    * database file via the pure-Scala [[SqliteWriter]] — the real
+    * `sqlite3` opens, integrity-checks, and queries the output (spec-
+    * verified), so data can move back OUT of this engine into a trough
+    * deployment with no SQLite linkage in the JVM. The rowid-alias
+    * column (INTEGER PRIMARY KEY) keys the B-tree directly; tables
+    * without one get sequential rowids (a SQLite implementation detail
+    * when unaliased). Recorded secondary indexes (CREATE INDEX) and
+    * the autoindex implied by a non-alias PRIMARY KEY are materialized
+    * as real index B-trees, so the export's own SQLite query plans can
+    * use them.
+    *
+    * Runs [[SqliteExportKernel]] on the calling thread, against the
+    * same spec the pooled and distributed exports build: the backing
+    * parquet is read directly and no Spark job runs. Memory bound: one
+    * table of the segment (plus, for an fts5 table, its postings) is
+    * held at a time, sorted in-process — segments are small by design
+    * (reference README.rst:23-25), and driver-local reads already hold
+    * whole tables. Returns the exported table names. */
   def exportSqliteSegment(segmentId: String, outPath: String): Seq[String] = {
     require(segmentExists(segmentId), s"segment $segmentId does not exist")
-    val tbls = tables(segmentId)
-    val (ftsTbls, plainTbls0) =
-      tbls.partition(t => tableMeta(segmentId, t).ftsSql.isDefined)
-    // shadow tables ingested alongside a virtual table (they stay
-    // queryable in the engine by design, SqliteIngestSpec) are REBUILT
-    // by the virtual-table export — writing the ingested plain copies
-    // too would duplicate schema names (malformed file) and contradict
-    // any post-ingest DML the rebuild reflects
-    val shadowNames: Set[String] = ftsTbls.flatMap { t =>
-      val sfx =
-        if (Rtree.parseCreateVirtual(tableMeta(segmentId, t).ftsSql.get).isDefined)
-          Seq("_node", "_rowid", "_parent")
-        else Seq("_content", "_docsize", "_config", "_data", "_idx")
-      sfx.map(s => (t + s).toLowerCase(java.util.Locale.ROOT))
-    }.toSet
-    val plainTbls = plainTbls0.filterNot(t =>
-      shadowNames.contains(t.toLowerCase(java.util.Locale.ROOT)))
-    val ftsStreamed = ftsTbls.flatMap(t =>
-      ftsExportTables(segmentId, t, tableMeta(segmentId, t).ftsSql.get))
-    val streamed = plainTbls.map { t =>
-      val meta = tableMeta(segmentId, t)
-      val fields = meta.schema.fields
-      val rowidIdx = meta.autoIncrement
-        .map(c => fields.indexWhere(_.name.equalsIgnoreCase(c))).getOrElse(-1)
-      def cellValue(r: Row, j: Int): Any =
-        if (r.isNullAt(j)) null
-        else fields(j).dataType match {
-          case LongType => r.getLong(j)
-          case DoubleType => r.getDouble(j)
-          case StringType => r.getString(j)
-          case BinaryType => r.getAs[Array[Byte]](j)
-          case other => throw new IllegalStateException(
-            s"table $t column ${fields(j).name}: unexpected store type $other")
-        }
-      // VIRTUAL generated columns occupy NO record slot (probed: the
-      // serial-type header skips them entirely); STORED ones carry the
-      // value. Real SQLite re-derives virtual values from the DDL.
-      val virtualIdx: Set[Int] = meta.generated.filterNot(_.stored)
-        .map(g => fields.indexWhere(_.name.equalsIgnoreCase(g.name)))
-        .filter(_ >= 0).toSet
-      def recordValues(r: Row): IndexedSeq[Any] =
-        // the rowid alias stores NULL in the record
-        fields.indices.filterNot(virtualIdx.contains)
-          .map(j => if (j == rowidIdx) null else cellValue(r, j)).toIndexedSeq
-      val parts = masterParts(t, meta)
-      val autoIdxSets = parts.autoIdxSets
-      val secondary = parts.secondary
-      val ddl = parts.ddl
-
-      if (rowidIdx >= 0) {
-        val rowidCol = fields(rowidIdx).name
-        def tableRows(): Iterator[(Long, IndexedSeq[Any])] = {
-          val it = loadTable(segmentId, t)
-            .orderBy(functions.col(rowidCol)).toLocalIterator().asScala
-          var prev = 0L
-          var any = false
-          it.map { r =>
-            if (r.isNullAt(rowidIdx))
-              throw new IllegalStateException(
-                s"table $t: null in rowid-alias column $rowidCol")
-            val rowid = r.getLong(rowidIdx)
-            // adjacent compare on the sorted stream — no sentinel (a
-            // seed would falsely flag a legitimate minimal rowid)
-            if (any && rowid <= prev)
-              throw new IllegalStateException(
-                s"table $t: duplicate rowid $rowid (alias column must be unique)")
-            any = true; prev = rowid
-            (rowid, recordValues(r))
-          }
-        }
-        def indexKeys(cols: Seq[Int]): () => Iterator[IndexedSeq[Any]] = () => {
-          // index entries over a COLLATEd column sort by the collation
-          // real sqlite3 searches with (collation-equal keys fall to
-          // the rowid tiebreak, like sqlite's own trees)
-          val sortCols = cols.map(j =>
-            SqliteCollation.indexSortKey(fields(j), functions.col(fields(j).name))) :+
-            functions.col(rowidCol)
-          loadTable(segmentId, t).orderBy(sortCols: _*).toLocalIterator().asScala
-            .map(r => (cols.map(j => cellValue(r, j)) :+ r.getLong(rowidIdx)).toIndexedSeq)
-        }
-        val indexes =
-          autoIdxSets.map { case (name, cols) =>
-            SqliteWriter.StreamedIndex(name, null, indexKeys(cols))
-          } ++
-            secondary.map { case (ix, cols) =>
-              SqliteWriter.StreamedIndex(ix.name, ix.sql, indexKeys(cols))
-            }
-        SqliteWriter.StreamedTable(t, ddl, tableRows _, indexes)
-      } else {
-        // positional rowids: assigned in PK order when one exists (a
-        // deterministic total order), else natural order. Index key
-        // tuples need each row's ASSIGNED rowid, so they're collected
-        // during the row pass — the one export shape that buffers
-        // (keys only), documented above.
-        val sortCols = meta.primaryKey
-          .map(c => fields.indexWhere(_.name.equalsIgnoreCase(c))).filter(_ >= 0)
-          .map(j => functions.col(fields(j).name))
-        val keyBufs: Seq[(String, String, Seq[Int], scala.collection.mutable.ArrayBuffer[IndexedSeq[Any]])] =
-          autoIdxSets.map { case (n, cols) => (n, null: String, cols) } ++
-            secondary.map { case (ix, cols) => (ix.name, ix.sql, cols) } map {
-            case (n, sql, cols) =>
-              (n, sql, cols, scala.collection.mutable.ArrayBuffer[IndexedSeq[Any]]())
-          }
-        def tableRows(): Iterator[(Long, IndexedSeq[Any])] = {
-          val base = loadTable(segmentId, t)
-          val it = (if (sortCols.nonEmpty) base.orderBy(sortCols: _*) else base)
-            .toLocalIterator().asScala
-          it.zipWithIndex.map { case (r, i) =>
-            val rowid = i + 1L
-            keyBufs.foreach { case (_, _, cols, buf) =>
-              buf += (cols.map(j => cellValue(r, j)) :+ rowid).toIndexedSeq
-            }
-            (rowid, recordValues(r))
-          }
-        }
-        val indexes = keyBufs.map { case (n, sql, cols, buf) =>
-          val colls = cols.map(j => SqliteDdl.collationOf(fields(j))
-            .filter(_ => fields(j).dataType == StringType)) :+ None
-          SqliteWriter.StreamedIndex(n, sql,
-            () => buf.sorted(SqliteWriter.keyOrderingWith(colls)).iterator)
-        }
-        SqliteWriter.StreamedTable(t, ddl, tableRows _, indexes)
-      }
-    }
-    SqliteWriter.writeStreamed(Paths.get(outPath), streamed ++ ftsStreamed,
-      views = views(segmentId).map(v => (v.name, v.sql)),
-      triggers = triggers(segmentId).map(t => (t.name, t.table, t.sql)),
-      virtualTables = ftsTbls.map(t =>
-        (t, tableMeta(segmentId, t).ftsSql.get)))
-    tbls
+    SqliteExportKernel.exportSegment(exportSpec(segmentId), Paths.get(outPath),
+      spark.sparkContext.hadoopConfiguration)
   }
 
-  /** The five PHYSICAL shadow tables behind one exported fts5 virtual
-    * table — `%_content`, `%_docsize`, `%_config` (WITHOUT ROWID),
-    * `%_data` (the inverted index, [[Fts5IndexBuilder]]) and `%_idx`
-    * (WITHOUT ROWID) — so real libsqlite3 serves MATCH/bm25/
-    * highlight/snippet over the exported file; files pass fts5's own
-    * integrity-check (Fts5ExportSpec). The engine's backing storage
-    * has no rowids, so ids are assigned 1..N by `row_number()` over
-    * all columns — deterministic across the two passes (ties are
-    * byte-identical rows, interchangeable). Pass 1 streams content
-    * rows (docsize blobs spill to driver disk as they stream); pass
-    * 2 runs ONE distributed
-    * tokenize+posexplode+sort job and streams the sorted postings
-    * into the builder, whose pages spill to driver disk — driver
-    * memory stays O(page), the export contract. Declared prefix=
-    * indexes are built too ('1'…-prefixed first-L-CHARS terms in
-    * declaration order, per-row merged position lists — probed
-    * shapes); columnsize=0 refuses by name (that config creates no
-    * %_docsize shadow at all). */
-  private def ftsExportTables(segmentId: String, t: String,
-      ddl: String): Seq[SqliteWriter.StreamedTable] = {
-    Rtree.parseCreateVirtual(ddl).foreach { rd =>
-      // rtree (r16): bulk-load a packed %_node tree from the backing
-      // rows, pre-sorted by first-dimension center (STR-lite — any
-      // order is valid, the sort buys query locality). One Spark sort
-      // job streamed through the driver like every other export pass;
-      // the builder spills node blobs to local disk.
-      return Rtree.exportTables(rd) { b =>
-        val df = loadTable(segmentId, t)
-        val sorted = df.orderBy(
-          (functions.col(rd.coordCols.head) +
-            functions.col(rd.coordCols(1))).asc,
-          functions.col(rd.idCol))
-        sorted.toLocalIterator().asScala.foreach { r =>
-          require(!r.isNullAt(0), s"rtree table $t: null id")
-          val nc = rd.coordCols.length
-          b.add(r.getLong(0),
-            (1 to nc).map(r.get(_)).toIndexedSeq,
-            (nc + 1 to nc + rd.aux.length).map(r.get(_)).toIndexedSeq)
+  /** One segment's [[SqliteExportKernel.SegmentSpec]]: table metas,
+    * views, triggers and each table's live parquet files (KBs). */
+  private def exportSpec(segmentId: String): SqliteExportKernel.SegmentSpec = {
+    val root = tierRoot(segmentId)
+    val slices = tables(segmentId).map { t =>
+      val live = recoveredLiveDir(root, segmentId, t)
+      val files =
+        if (!Files.isDirectory(live)) Nil
+        else {
+          val s = Files.list(live)
+          try s.iterator().asScala.map(_.toString)
+            .filter(_.endsWith(".parquet")).toSeq.sorted
+          finally s.close()
         }
-      }
+      SqliteExportKernel.TableSlice(t, tableMeta(segmentId, t), files)
     }
-    val prefixLens: Seq[Int] = Fts5.prefixLensOf(ddl)
-    if (Fts5.parseCreateVirtual(ddl).exists(_.detail != "full"))
-      throw new UnsupportedOperationException(
-        s"cannot export fts5 table '$t': detail=none/column tables use " +
-          "position-less doclist encodings this exporter does not build; " +
-          "recreate with detail=full")
-    val meta = tableMeta(segmentId, t)
-    // UNINDEXED columns store and render but contribute no postings,
-    // no docsize counts and no totals (probed: sz = 0 entries)
-    val fdOpt = Fts5.parseCreateVirtual(ddl)
-    // content= tables (r15): the backing's hidden __rowid carries the
-    // REAL rowids (the exported index must agree with the content
-    // table real sqlite3 will read values from); no %_content shadow
-    // is written — real fts5 creates none for them
-    val isContent = fdOpt.exists(_.content.isDefined)
-    val cols = meta.schema.fields.map(_.name).toSeq
-      .filterNot(c => isContent && c == Fts5.RowidCol)
-    val nCols = cols.length
-    val unidx: Set[Int] = fdOpt
-      .map(fd => cols.indices.filter(i => fd.unindexed
-        .contains(cols(i).toLowerCase(java.util.Locale.ROOT))).toSet)
-      .getOrElse(Set.empty)
-    // the table's tokenizer shapes the exported index terms so real
-    // sqlite3's query-side tokenization agrees on the exported file
-    // (porter stems r12, trigram windows r13)
-    val exportTok = fdOpt.map(_.tok).getOrElse(Fts5.Tok.u61)
-    import org.apache.spark.sql.expressions.Window
-    val rid = functions.row_number()
-      .over(Window.orderBy(cols.map(functions.col): _*)).cast(LongType)
-    def withRid =
-      if (isContent) loadTable(segmentId, t).select(
-        cols.map(functions.col) :+
-          functions.col(Fts5.RowidCol).cast(LongType).as("__rid"): _*)
-      else loadTable(segmentId, t).withColumn("__rid", rid)
-    // pass-1 side effects, consumed by later tables in write order;
-    // docsize blobs spill to driver disk like the index pages do, so
-    // no export structure is heap-proportional to the segment
-    val docsizeSpill = Files.createTempFile("graft-fts5-docsize", ".spill")
-    val docsizeOut = new java.io.DataOutputStream(
-      new java.io.BufferedOutputStream(Files.newOutputStream(docsizeSpill)))
-    val colTotals = new Array[Long](nCols)
-    var nRow = 0L
-    // pass 1 (docsize spill + column totals) normally drains through
-    // the %_content write; tables that emit no %_content (content=)
-    // or no %_docsize (columnsize=0) drain it explicitly before the
-    // first consumer that needs the side effects
-    var pass1Drained = false
-    def drainPass1(): Unit =
-      if (!pass1Drained) contentRows().foreach(_ => ())
-    def contentRows(): Iterator[(Long, IndexedSeq[Any])] = {
-      pass1Drained = true
-      withRid.orderBy(functions.col("__rid")).toLocalIterator().asScala
-        .map { r =>
-          val rowid = r.getLong(nCols)
-          val values = (0 until nCols).map(j =>
-            if (r.isNullAt(j)) null else r.getString(j))
-          val sz = new scala.collection.mutable.ArrayBuffer[Byte](nCols)
-          values.zipWithIndex.foreach { case (v, j) =>
-            val n = if (v == null || unidx.contains(j)) 0
-            else Fts5.tokenize(v, exportTok).length
-            colTotals(j) += n
-            Fts5IndexBuilder.putVarint(sz, n.toLong)
-          }
-          docsizeOut.writeLong(rowid)
-          docsizeOut.writeInt(sz.length)
-          docsizeOut.write(sz.toArray)
-          nRow += 1
-          (rowid, (null +: values).toIndexedSeq)
-        }
-    }
-    def docsizeRows(): Iterator[(Long, IndexedSeq[Any])] = {
-      drainPass1() // content= tables emit no %_content
-      docsizeOut.flush(); docsizeOut.close()
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        Files.newInputStream(docsizeSpill)))
-      var i = 0L
-      new Iterator[(Long, IndexedSeq[Any])] {
-        def hasNext: Boolean = {
-          val more = i < nRow
-          if (!more) { in.close(); Files.deleteIfExists(docsizeSpill) }
-          more
-        }
-        def next(): (Long, IndexedSeq[Any]) = {
-          i += 1
-          val rowid = in.readLong()
-          val sz = new Array[Byte](in.readInt())
-          in.readFully(sz)
-          (rowid, IndexedSeq[Any](null, sz))
-        }
-      }
-    }
-    val builder = new Fts5IndexBuilder()
-    var idxKeys: Seq[IndexedSeq[Any]] = Nil
-    def dataRows(): Iterator[(Long, IndexedSeq[Any])] = {
-      drainPass1() // columnsize=0 content= tables reach here undrained
-      if (fdOpt.exists(!_.columnsize)) { // no %_docsize consumed it
-        docsizeOut.close(); Files.deleteIfExists(docsizeSpill)
-      }
-      // one distributed job: per-column token posexplode (plus one
-      // branch per declared prefix index: first-L-CHARS terms), then
-      // a cluster sort by (id-prefixed term bytes, rowid, col, pos);
-      // the driver only folds consecutive (term, rowid) runs into
-      // poslists
-      val base = withRid
-      val tokenBranches = cols.zipWithIndex
-        .filterNot { case (_, i) => unidx.contains(i) }
-        .map { case (c, i) =>
-          base.select(
-            functions.col("__rid").as("rid"),
-            functions.lit(i).as("col"),
-            functions.posexplode(org.apache.spark.sql.graft.SqlInternals
-              .column(Fts5Tokens(org.apache.spark.sql.graft.SqlInternals
-                .expression(functions.col(c)), exportTok)))
-              .as(Seq("pos", "term")))
-        }
-      if (tokenBranches.isEmpty) { // every column UNINDEXED
-        val res = builder.finish(nRow, colTotals.toSeq)
-        idxKeys = res.idxRows
-        return res.dataRows.map { case (id, bytes) =>
-          (id, IndexedSeq[Any](null, bytes))
-        }
-      }
-      val rawTokens = tokenBranches.reduce(_ unionAll _)
-      def branch(idByte: Char, termCol: org.apache.spark.sql.Column) =
-        rawTokens.select(functions.col("rid"), functions.col("col"),
-          functions.col("pos"),
-          functions.concat(functions.lit(idByte.toString), termCol)
-            .as("term"))
-      val tokens = (branch('0', functions.col("term")) +:
-        prefixLens.zipWithIndex.map { case (len, pi) =>
-          // tokens shorter than the prefix stay out (probed): after
-          // substring the branched term is id byte + min(len, tokLen)
-          // chars, so a full-length prefix means length == len + 1
-          branch(('1' + pi).toChar, functions.substring(
-            functions.col("term"), 1, len))
-            .where(functions.length(functions.col("term")) === len + 1)
-        }).reduce(_ unionAll _)
-      val it = tokens.orderBy("term", "rid", "col", "pos")
-        .toLocalIterator().asScala
-      var curTerm: String = null
-      var curRid = -1L
-      val entries = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-      def emit(): Unit = if (curTerm != null && entries.nonEmpty) {
-        builder.add(curTerm.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          curRid, Fts5IndexBuilder.poslist(entries.toSeq))
-        entries.clear()
-      }
-      it.foreach { r =>
-        val (ridV, colV, posV, termV) =
-          (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))
-        if (termV != curTerm || ridV != curRid) {
-          emit()
-          curTerm = termV
-          curRid = ridV
-        }
-        entries += ((colV, posV))
-      }
-      emit()
-      val res = builder.finish(nRow, colTotals.toSeq)
-      idxKeys = res.idxRows
-      res.dataRows.map { case (id, bytes) =>
-        (id, IndexedSeq[Any](null, bytes))
-      }
-    }
-    def q(n: String) = s"'$n'"
-    val contentTable =
-      if (isContent) Nil // real fts5 creates no %_content for content=
-      else Seq(SqliteWriter.StreamedTable(s"${t}_content",
-        s"CREATE TABLE ${q(s"${t}_content")}(id INTEGER PRIMARY KEY" +
-          (0 until nCols).map(i => s", c$i").mkString + ")",
-        contentRows _))
-    // columnsize=0 files carry no %_docsize shadow (probed — r15)
-    val docsizeTable =
-      if (fdOpt.exists(!_.columnsize)) Nil
-      else Seq(SqliteWriter.StreamedTable(s"${t}_docsize",
-        s"CREATE TABLE ${q(s"${t}_docsize")}(id INTEGER PRIMARY KEY, sz BLOB)",
-        docsizeRows _))
-    contentTable ++ docsizeTable ++ Seq(
-      SqliteWriter.StreamedTable(s"${t}_config",
-        s"CREATE TABLE ${q(s"${t}_config")}(k PRIMARY KEY, v) WITHOUT ROWID",
-        () => Iterator.empty,
-        withoutRowidKeys = Some(() =>
-          Iterator(IndexedSeq[Any]("version", 4L)))),
-      SqliteWriter.StreamedTable(s"${t}_data",
-        s"CREATE TABLE ${q(s"${t}_data")}(id INTEGER PRIMARY KEY, block BLOB)",
-        dataRows _),
-      SqliteWriter.StreamedTable(s"${t}_idx",
-        s"CREATE TABLE ${q(s"${t}_idx")}(segid, term, pgno, " +
-          "PRIMARY KEY(segid, term)) WITHOUT ROWID",
-        () => Iterator.empty,
-        withoutRowidKeys = Some { () =>
-          // the spill file has been fully drained by the _data pass
-          builder.close()
-          idxKeys.iterator
-        }))
+    SqliteExportKernel.SegmentSpec(segmentId, slices,
+      views(segmentId).map(v => (v.name, v.sql)),
+      triggers(segmentId).map(t => (t.name, t.table, t.sql)))
   }
 
   /** Bulk migration: ingest many `.sqlite` segment files with bounded
@@ -1149,11 +807,11 @@ class SegmentStore(
 
   /** Bulk inverse migration: export many segments as `.sqlite` files
     * with bounded parallelism and per-segment error isolation — the
-    * outbound mirror of [[ingestSqliteSegments]]. Each export is
-    * already a bounded unit of driver+cluster work (streamed passes,
-    * see [[exportSqliteSegment]]); the pool overlaps the Spark sort
-    * jobs of independent segments. Returns per-segment `Try`s of the
-    * written file path. */
+    * outbound mirror of [[ingestSqliteSegments]]. Each export is one
+    * [[exportSqliteSegment]] on a pool thread, holding one table of its
+    * segment at a time, so the pool bounds driver memory at
+    * `parallelism` tables. Returns per-segment `Try`s of the written
+    * file path. */
   def exportSqliteSegments(
       segmentIds: Seq[String], outDir: String,
       parallelism: Int = 4): Map[String, scala.util.Try[String]] = {
@@ -1185,8 +843,8 @@ class SegmentStore(
     *
     * Per-segment error isolation, like every bulk path: a segment that
     * fails to export reports its error; the rest of the batch lands.
-    * [[exportSqliteSegments]] remains the driver-streamed variant for
-    * small batches or single oversized segments (Spark sorts those). */
+    * Each task builds the same spec [[exportSqliteSegment]] exports on
+    * the driver, and holds one table of its segment at a time. */
   def exportSqliteSegmentsDistributed(segmentIds: Seq[String],
       outDir: String): Map[String, scala.util.Try[String]] = {
     import scala.util.{Failure, Success, Try}
@@ -1197,40 +855,16 @@ class SegmentStore(
       seg -> Failure[String](new IllegalArgumentException(
         s"segment $seg does not exist"))).toMap
     if (present.isEmpty) return missingResults
-    // per-segment spec: metadata + parquet file listings (KBs), with
-    // loadTable's crash-recovery check applied before listing. Pooled:
+    // per-segment spec: metadata + parquet file listings (KBs). Pooled:
     // a serial loop over 10⁵–10⁶ segments would make meta-file read
     // latency the migration's first bottleneck (same reasoning as the
     // distributed ingest's pooled commit phase).
     val specPool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    def buildSpec(seg: String): Try[SqliteExportKernel.SegmentSpec] =
-      Try {
-        val root = tierRoot(seg)
-        val slices = tables(seg).map { t =>
-          val live = liveDir(root, seg, t)
-          if (!Files.isDirectory(live)) swapLock(seg).synchronized {
-            if (!Files.isDirectory(live) && Files.isDirectory(oldDir(root, seg, t)))
-              Files.move(oldDir(root, seg, t), live, StandardCopyOption.ATOMIC_MOVE)
-          }
-          val files =
-            if (!Files.isDirectory(live)) Nil
-            else {
-              val s = Files.list(live)
-              try s.iterator().asScala.map(_.toString)
-                .filter(_.endsWith(".parquet")).toSeq.sorted
-              finally s.close()
-            }
-          SqliteExportKernel.TableSlice(t, tableMeta(seg, t), files)
-        }
-        SqliteExportKernel.SegmentSpec(seg, slices,
-          views(seg).map(v => (v.name, v.sql)),
-          triggers(seg).map(t => (t.name, t.table, t.sql)))
-      }
     val specs: Seq[(String, Try[SqliteExportKernel.SegmentSpec])] =
       try {
         val futures = present.map(seg =>
           seg -> java.util.concurrent.CompletableFuture.supplyAsync(
-            () => buildSpec(seg), specPool))
+            () => Try(exportSpec(seg)), specPool))
         futures.map { case (seg, f) => seg -> f.join() }
       } finally specPool.shutdown()
     val specErrors: Map[String, Try[String]] = specs.collect {
@@ -1280,8 +914,7 @@ class SegmentStore(
     * `*.sqlite`, sync.py:365-369, pulled per-node in parallel,
     * sync.py:941-1047) is bounded by the cluster, not a driver thread
     * pool. Paths must be visible from the executors (shared or
-    * distributed filesystem). [[ingestSqliteSegments]] remains the
-    * driver-local variant for small batches.
+    * distributed filesystem).
     *
     * Shape: one job catalogs every file, collecting only per-table
     * [[SqliteIngest.TableSpec]] metadata (KBs) to the driver; segments
@@ -1291,7 +924,10 @@ class SegmentStore(
     * same hive-partitioned parquet the scans want, produced with full
     * cluster parallelism. Commit is a per-segment metadata operation
     * on the driver (directory renames + meta files, through the same
-    * staged-swap path as every other write).
+    * staged-swap path as every other write), followed by the same
+    * views/triggers/virtual-table commit as [[ingestSqliteSegment]]
+    * (its catalog task ships that DDL text); fts5 and rtree tables
+    * rebuild from their shadow tables there, as Spark jobs.
     *
     * Per-file error isolation, strengthened to per-SEGMENT atomicity:
     * a file that fails catalog or decode reports its error (via an
@@ -1327,7 +963,7 @@ class SegmentStore(
     // ---- pass 1 (distributed): catalog every file ----
     // the TaskContext requirement is the executor-side guarantee the
     // specs lean on: this closure CANNOT run outside a Spark task
-    val cataloged: Map[String, Try[(Seq[SqliteIngest.TableSpec], Seq[String])]] =
+    val cataloged: Map[String, Try[(Seq[SqliteIngest.TableSpec], SqliteIngest.CatalogDdl)]] =
       sc.parallelize(candidates.toSeq, slicesFor(candidates.size)).map { case (seg, path) =>
         seg -> Try {
           require(org.apache.spark.TaskContext.get() != null,
@@ -1337,9 +973,9 @@ class SegmentStore(
             val specs = SqliteIngest.tableSpecs(f, widen)
             specs.foreach(s => SegmentStore.requireNoReservedColumns(
               SegmentStore.TableMeta(s.schema, s.primaryKey, s.autoIncrement)))
-            // views ship as their DDL text (the registry's own storage
-            // shape) — catalog-only, no decode pass needed
-            (specs, SqliteIngest.viewDefs(f).map(_.sql))
+            // views, triggers and virtual tables ship as their DDL
+            // text — catalog-only, no decode pass needed
+            (specs, SqliteIngest.catalogDdl(f))
           } finally f.close()
         }
       }.collect().toMap
@@ -1397,17 +1033,13 @@ class SegmentStore(
       // last bottleneck after the decode went distributed. ----
       val decodeErrsBySeg: Map[String, Seq[String]] = decodeErrors.value.asScala.toSeq
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-      def commitSegment(seg: String, specs: Seq[SqliteIngest.TableSpec],
-          viewSqls: Seq[String]): Seq[String] = {
+      def commitSegment(seg: String, specs: Seq[SqliteIngest.TableSpec]): Seq[String] = {
         if (!segmentExists(seg)) {
           Files.createDirectories(marker(seg).getParent)
           Files.writeString(marker(seg), "")
         }
         val root = tierRoot(seg)
         specs.map { sp =>
-          val meta = TableMeta(sp.schema, sp.primaryKey, sp.autoIncrement,
-            sp.indexes, sp.notNull, sp.defaults, sp.uniques, sp.checks,
-            sp.generated, sp.strict, sp.strictTypes)
           Files.createDirectories(tableRoot(root, sp.name))
           val tmp = tmpDir(root, seg, sp.name)
           if (Files.exists(tmp)) deleteRecursively(tmp)
@@ -1419,20 +1051,9 @@ class SegmentStore(
             spark.createDataFrame(
               java.util.Collections.emptyList[Row](), sp.schema)
               .write.mode("overwrite").parquet(tmp.toString)
-          swapPreparedData(seg, sp.name, Some(meta))
+          swapPreparedData(seg, sp.name, Some(ingestedMeta(sp)))
           sp.name
         }
-      }
-      def commitViews(seg: String, names: Seq[String], viewSqls: Seq[String]): Unit = {
-        // same merge as single-file ingest: file views replace
-        // same-named ones; views shadowed by an ingested table drop
-        val fileViews = viewSqls.flatMap(
-          sql => scala.util.Try(SqliteDdl.parseCreateView(sql)).toOption)
-        val existing = views(seg)
-        val merged = existing.filterNot(v =>
-          fileViews.exists(_.name.equalsIgnoreCase(v.name)) ||
-            names.exists(_.equalsIgnoreCase(v.name))) ++ fileViews
-        if (merged != existing) putViews(seg, merged)
       }
       val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
       val results: Map[String, Try[Seq[String]]] =
@@ -1445,12 +1066,11 @@ class SegmentStore(
               seg -> java.util.concurrent.CompletableFuture
                 .completedFuture(Failure[Seq[String]](new IllegalStateException(
                   decodeErrsBySeg(seg).mkString("; "))))
-            case (seg, Success((specs, viewSqls))) =>
+            case (seg, Success((specs, cat))) =>
               seg -> java.util.concurrent.CompletableFuture.supplyAsync(
                 () => Try {
-                  val names = commitSegment(seg, specs, viewSqls)
-                  commitViews(seg, names, viewSqls)
-                  names
+                  val names = commitSegment(seg, specs)
+                  names ++ commitCatalog(seg, names, cat)
                 }, pool)
           }
           futures.map { case (seg, f) => seg -> f.join() }.toMap
@@ -1816,17 +1436,7 @@ class SegmentStore(
   def loadTable(segmentId: String, table: String,
       session: SparkSession = spark): DataFrame = {
     val meta = tableMeta(segmentId, table)
-    val root = tierRoot(segmentId)
-    val live = liveDir(root, segmentId, table)
-    // crash recovery: swapPreparedData's rename pair has a window between
-    // moving live→._old_ and ._tmp_→live; if a crash landed there, serve
-    // (and restore) the previous committed state. Taken under the
-    // segment's swap lock: with an in-flight swap serialized out, the
-    // (live absent, ._old_ present) state can only mean a crash.
-    if (!Files.isDirectory(live)) swapLock(segmentId).synchronized {
-      if (!Files.isDirectory(live) && Files.isDirectory(oldDir(root, segmentId, table)))
-        Files.move(oldDir(root, segmentId, table), live, StandardCopyOption.ATOMIC_MOVE)
-    }
+    val live = recoveredLiveDir(tierRoot(segmentId), segmentId, table)
     // no live dir = no data ever committed (r17: createTable no longer
     // materializes an empty partition dir) — an empty frame of the
     // declared schema, exactly what an empty parquet dir served
@@ -1834,6 +1444,21 @@ class SegmentStore(
       session.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), meta.schema)
     else session.read.schema(meta.schema).parquet(live.toString)
+  }
+
+  /** The table's live directory, after crash recovery:
+    * swapPreparedData's rename pair has a window between moving
+    * live→._old_ and ._tmp_→live; if a crash landed there, serve (and
+    * restore) the previous committed state. Taken under the segment's
+    * swap lock: with an in-flight swap serialized out, the (live
+    * absent, ._old_ present) state can only mean a crash. */
+  private def recoveredLiveDir(root: Path, segmentId: String, table: String): Path = {
+    val live = liveDir(root, segmentId, table)
+    if (!Files.isDirectory(live)) swapLock(segmentId).synchronized {
+      if (!Files.isDirectory(live) && Files.isDirectory(oldDir(root, segmentId, table)))
+        Files.move(oldDir(root, segmentId, table), live, StandardCopyOption.ATOMIC_MOVE)
+    }
+    live
   }
 
   /** One scan over EVERY segment's slice of a table: the whole table

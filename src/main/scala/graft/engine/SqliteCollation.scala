@@ -68,19 +68,6 @@ object SqliteCollation {
       })
     })
 
-  /** Collation-aware Spark sort key for a `.sqlite` export's index
-    * B-tree over field `f`: entries must be laid out in the order real
-    * sqlite3 searches the index with (the declared collation —
-    * integrity_check verifies the tree against it). Identity for
-    * uncollated / non-string fields. */
-  def indexSortKey(f: org.apache.spark.sql.types.StructField,
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    SqliteDdl.collationOf(f) match {
-      case Some(coll) if f.dataType == StringType =>
-        SqlInternals.column(wrap(SqlInternals.expression(c), coll))
-      case _ => c
-    }
-
   /** The declared collation governing `e` as a comparison operand:
     * a string column reference, unwrapping casts and unary `+`
     * (SQLite's "still considered a column name" rule). */

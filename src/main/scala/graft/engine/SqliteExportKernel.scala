@@ -2,28 +2,28 @@ package graft.engine
 
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, StructType}
 
-/** Executor-side `.sqlite` segment export — the outbound mirror of the
-  * distributed ingest kernel ([[SqliteIngest]] run inside tasks by
-  * [[SegmentStore.ingestSqliteSegmentsDistributed]]). One call exports
-  * ONE segment with no SparkSession: the backing parquet is read
-  * directly (parquet-hadoop's record API over the same files the
-  * Spark scans use), each table is buffered and sorted IN-TASK with
-  * the writer's exact key orderings, and the streamed
-  * [[SqliteWriter]] emits the file. Buffering a segment's table is
-  * the documented contract of the distributed paths (segments are
-  * small by design, reference README.rst:23-25 — the ingest twin
-  * buffers each table's decoded rows the same way); the driver-
-  * streamed [[SegmentStore.exportSqliteSegment]] remains the path for
-  * a single oversized segment, where Spark does the sorting.
+/** The `.sqlite` segment exporter. One call exports ONE segment with
+  * no SparkSession: the backing parquet is read directly (parquet-
+  * hadoop's record API over the same files the Spark scans use), each
+  * table is buffered and sorted in-process with the writer's exact key
+  * orderings, and the streamed [[SqliteWriter]] emits the file.
+  * [[SegmentStore.exportSqliteSegment]] runs it on the calling thread,
+  * [[SegmentStore.exportSqliteSegmentsDistributed]] inside executor
+  * tasks; both build the same [[SegmentSpec]].
   *
-  * The two paths produce equivalently-shaped files (shared
-  * [[SegmentStore.masterParts]] catalog material, shared
-  * [[SqliteWriter]], shared [[Fts5IndexBuilder]]/[[RtreeTreeBuilder]]
-  * for virtual tables); both are differentially verified against real
-  * sqlite3. This is the true analog of the reference's parallel HDFS
-  * promotion (sync.py:1112-1188, per-node parallel sync
-  * sync.py:941-1047): each node builds its segment files locally and
-  * pushes them to the durable store. */
+  * Memory bound: one table of the segment (plus, for an fts5 table, its
+  * postings) per concurrent export — tables are written one after
+  * another and a table's buffer is dropped when the next one loads.
+  * Segments are small by design (reference README.rst:23-25); the
+  * ingest kernel buffers each table's decoded rows the same way.
+  *
+  * Catalog material is shared with the read path
+  * ([[SegmentStore.masterParts]]), and virtual tables are rebuilt with
+  * [[Fts5IndexBuilder]]/[[RtreeTreeBuilder]]; files are differentially
+  * verified against real sqlite3. This is the analog of the
+  * reference's parallel HDFS promotion (sync.py:1112-1188, per-node
+  * parallel sync sync.py:941-1047): each node builds its segment files
+  * locally and pushes them to the durable store. */
 object SqliteExportKernel {
 
   /** One table of a segment: its meta plus the parquet part files of
@@ -78,13 +78,16 @@ object SqliteExportKernel {
   }
 
   /** Export one segment to a LOCAL file. Returns the exported table
-    * names (the same contract as the driver-streamed export). */
+    * names. */
   def exportSegment(spec: SegmentSpec, out: java.nio.file.Path,
       conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
     val (ftsTbls, plainTbls0) =
       spec.tables.partition(_.meta.ftsSql.isDefined)
-    // same shadow-skip rule as the driver path: ingested plain copies
-    // of an exported virtual table's shadows are rebuilt, not copied
+    // shadow tables ingested alongside a virtual table (they stay
+    // queryable in the engine by design, SqliteIngestSpec) are REBUILT
+    // by the virtual-table export — writing the ingested plain copies
+    // too would duplicate schema names (malformed file) and contradict
+    // any post-ingest DML the rebuild reflects
     val shadowNames: Set[String] = ftsTbls.flatMap { t =>
       val sfx =
         if (Rtree.parseCreateVirtual(t.meta.ftsSql.get).isDefined)
@@ -95,17 +98,33 @@ object SqliteExportKernel {
     val plainTbls = plainTbls0.filterNot(t =>
       shadowNames.contains(t.name.toLowerCase(java.util.Locale.ROOT)))
 
-    val streamed = plainTbls.map(plainTable(_, conf)) ++
+    val current = new CurrentTable
+    val streamed = plainTbls.map(plainTable(_, conf, current)) ++
       ftsTbls.flatMap { t =>
         Rtree.parseCreateVirtual(t.meta.ftsSql.get) match {
           case Some(rd) => rtreeTables(t, rd, conf)
-          case None => ftsTables(t, conf)
+          case None => ftsTables(t, conf, current)
         }
       }
     SqliteWriter.writeStreamed(out, streamed,
       views = spec.views, triggers = spec.triggers,
       virtualTables = ftsTbls.map(t => (t.name, t.meta.ftsSql.get)))
     spec.tables.map(_.name)
+  }
+
+  /** The buffer of the table being written. The writer consumes tables
+    * one after another, so loading the next table's buffer drops the
+    * previous one: an export holds one table at a time. */
+  private final class CurrentTable {
+    private var owner: String = null
+    private var held: Any = null
+    def apply[A](table: String)(load: => A): A = {
+      if (owner != table) {
+        owner = null; held = null // collectable while the next one loads
+        held = load; owner = table
+      }
+      held.asInstanceOf[A]
+    }
   }
 
   // ------------------------------------------------------------- plain
@@ -119,7 +138,8 @@ object SqliteExportKernel {
   }
 
   private def plainTable(slice: TableSlice,
-      conf: org.apache.hadoop.conf.Configuration): SqliteWriter.StreamedTable = {
+      conf: org.apache.hadoop.conf.Configuration,
+      current: CurrentTable): SqliteWriter.StreamedTable = {
     val t = slice.name
     val meta = slice.meta
     val fields = meta.schema.fields
@@ -134,68 +154,49 @@ object SqliteExportKernel {
         .toIndexedSeq
     val parts = SegmentStore.masterParts(t, meta)
     // index key columns sort with the column's declared collation,
-    // exactly the writer's in-process ordering (the same one the
-    // driver path uses for its buffered no-alias branch)
+    // exactly the writer's in-process ordering
     def collsOf(cols: Seq[Int]): Seq[Option[String]] =
       cols.map(j => SqliteDdl.collationOf(fields(j))
         .filter(_ => fields(j).dataType == StringType)) :+ None
 
-    // buffered ONCE per table, reused by the row pass and every index
-    // pass — the distributed paths' documented per-task bound
-    lazy val rows: IndexedSeq[IndexedSeq[Any]] =
-      readParquetRows(slice.parquetFiles, meta.schema, conf).toIndexedSeq
-
-    if (rowidIdx >= 0) {
-      def withRowids: Iterator[(Long, IndexedSeq[Any])] = {
-        val sorted = rows.sortBy { r =>
+    // buffered ONCE per table in record order, each row beside its
+    // rowid: the rowid alias's value, else positional rowids assigned
+    // in PK order when one exists (a deterministic total order), else
+    // natural order; reused by the row pass and every index pass
+    def rows: IndexedSeq[(Long, IndexedSeq[Any])] = current(t) {
+      val raw = readParquetRows(slice.parquetFiles, meta.schema, conf).toIndexedSeq
+      if (rowidIdx >= 0) {
+        val keyed = raw.map { r =>
           require(r(rowidIdx) != null,
             s"table $t: null in rowid-alias column ${fields(rowidIdx).name}")
-          r(rowidIdx).asInstanceOf[Long]
-        }
-        var prev = 0L; var any = false
-        sorted.iterator.map { r =>
-          val rowid = r(rowidIdx).asInstanceOf[Long]
-          if (any && rowid <= prev) throw new IllegalStateException(
-            s"table $t: duplicate rowid $rowid (alias column must be unique)")
-          any = true; prev = rowid
-          (rowid, r)
-        }
+          (r(rowidIdx).asInstanceOf[Long], r)
+        }.sortBy(_._1)
+        keyed.iterator.zip(keyed.iterator.drop(1)).find { case (a, b) => a._1 == b._1 }
+          .foreach { case (_, (rowid, _)) => throw new IllegalStateException(
+            s"table $t: duplicate rowid $rowid (alias column must be unique)") }
+        keyed
+      } else {
+        val pkCols = meta.primaryKey
+          .map(c => fields.indexWhere(_.name.equalsIgnoreCase(c))).filter(_ >= 0)
+        val ordered =
+          if (pkCols.isEmpty) raw
+          else raw.sorted(SqliteWriter.keyOrderingWith(collsOf(pkCols))
+            .on[IndexedSeq[Any]](r => pkCols.map(r(_)).toIndexedSeq))
+        ordered.zipWithIndex.map { case (r, i) => (i + 1L, r) }
       }
-      def indexKeys(cols: Seq[Int]): () => Iterator[IndexedSeq[Any]] = () =>
-        rows.map(r => (cols.map(j => cellOk(t, fields, r(j), j)) :+
-            r(rowidIdx).asInstanceOf[Long]).toIndexedSeq)
-          .sorted(SqliteWriter.keyOrderingWith(collsOf(cols))).iterator
-      val indexes = parts.autoIdxSets.map { case (name, cols) =>
-        SqliteWriter.StreamedIndex(name, null, indexKeys(cols))
-      } ++ parts.secondary.map { case (ix, cols) =>
-        SqliteWriter.StreamedIndex(ix.name, ix.sql, indexKeys(cols))
-      }
-      SqliteWriter.StreamedTable(t, parts.ddl,
-        () => withRowids.map { case (rid, r) => (rid, recordValues(r)) },
-        indexes)
-    } else {
-      // positional rowids, assigned in PK order when one exists (the
-      // driver path's deterministic total order), else natural order
-      val pkCols = meta.primaryKey
-        .map(c => fields.indexWhere(_.name.equalsIgnoreCase(c))).filter(_ >= 0)
-      lazy val ordered: IndexedSeq[IndexedSeq[Any]] =
-        if (pkCols.isEmpty) rows
-        else rows.sorted(SqliteWriter.keyOrderingWith(collsOf(pkCols))
-          .on[IndexedSeq[Any]](r => pkCols.map(r(_)).toIndexedSeq))
-      def indexKeys(cols: Seq[Int]): () => Iterator[IndexedSeq[Any]] = () =>
-        ordered.zipWithIndex.map { case (r, i) =>
-          (cols.map(j => cellOk(t, fields, r(j), j)) :+ (i + 1L)).toIndexedSeq
-        }.sorted(SqliteWriter.keyOrderingWith(collsOf(cols))).iterator
-      val indexes = parts.autoIdxSets.map { case (name, cols) =>
-        SqliteWriter.StreamedIndex(name, null, indexKeys(cols))
-      } ++ parts.secondary.map { case (ix, cols) =>
-        SqliteWriter.StreamedIndex(ix.name, ix.sql, indexKeys(cols))
-      }
-      SqliteWriter.StreamedTable(t, parts.ddl,
-        () => ordered.iterator.zipWithIndex.map { case (r, i) =>
-          (i + 1L, recordValues(r))
-        }, indexes)
     }
+    def indexKeys(cols: Seq[Int]): () => Iterator[IndexedSeq[Any]] = () =>
+      rows.map { case (rowid, r) =>
+        (cols.map(j => cellOk(t, fields, r(j), j)) :+ rowid).toIndexedSeq
+      }.sorted(SqliteWriter.keyOrderingWith(collsOf(cols))).iterator
+    val indexes = parts.autoIdxSets.map { case (name, cols) =>
+      SqliteWriter.StreamedIndex(name, null, indexKeys(cols))
+    } ++ parts.secondary.map { case (ix, cols) =>
+      SqliteWriter.StreamedIndex(ix.name, ix.sql, indexKeys(cols))
+    }
+    SqliteWriter.StreamedTable(t, parts.ddl,
+      () => rows.iterator.map { case (rowid, r) => (rowid, recordValues(r)) },
+      indexes)
   }
 
   // ------------------------------------------------------------- rtree
@@ -203,8 +204,8 @@ object SqliteExportKernel {
   private def rtreeTables(slice: TableSlice, rd: Rtree.RtreeDef,
       conf: org.apache.hadoop.conf.Configuration): Seq[SqliteWriter.StreamedTable] =
     Rtree.exportTables(rd) { b =>
-      // STR-lite: pre-sort by first-dimension center like the driver
-      // path (any order is valid; the sort buys query locality)
+      // STR-lite: pre-sort by first-dimension center (any order is
+      // valid; the sort buys query locality)
       val rows = readParquetRows(slice.parquetFiles, slice.meta.schema, conf)
         .toArray
       rows.sortInPlaceBy { r =>
@@ -221,13 +222,18 @@ object SqliteExportKernel {
 
   // --------------------------------------------------------------- fts
 
-  /** In-task fts5 shadow-table build: same five physical tables, same
-    * [[Fts5IndexBuilder]], same tokenizer as the driver-streamed
-    * [[SegmentStore]] path — but the posting sort happens in the task
-    * (postings of one segment, the documented per-task bound) instead
-    * of in a Spark job. */
+  /** The five PHYSICAL shadow tables behind one exported fts5 virtual
+    * table — `%_content`, `%_docsize`, `%_config` (WITHOUT ROWID),
+    * `%_data` (the inverted index, [[Fts5IndexBuilder]]) and `%_idx`
+    * (WITHOUT ROWID) — so real libsqlite3 serves MATCH/bm25/
+    * highlight/snippet over the exported file; files pass fts5's own
+    * integrity-check (Fts5ExportSpec). Declared prefix= indexes are
+    * built too ('1'…-prefixed first-L-CHARS terms in declaration
+    * order, per-row merged position lists — probed shapes). The
+    * postings of the table are sorted in-process. */
   private def ftsTables(slice: TableSlice,
-      conf: org.apache.hadoop.conf.Configuration): Seq[SqliteWriter.StreamedTable] = {
+      conf: org.apache.hadoop.conf.Configuration,
+      current: CurrentTable): Seq[SqliteWriter.StreamedTable] = {
     val t = slice.name
     val ddl = slice.meta.ftsSql.get
     val fdOpt = Fts5.parseCreateVirtual(ddl)
@@ -248,88 +254,92 @@ object SqliteExportKernel {
     val exportTok = fdOpt.map(_.tok).getOrElse(Fts5.Tok.u61)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
 
-    // rows with rowids: content= tables carry them in the hidden
-    // backing column; others assign 1..N in the driver path's
-    // deterministic order (sorted by all columns — ties are
-    // byte-identical rows, interchangeable)
-    lazy val withRid: IndexedSeq[(Long, IndexedSeq[Any])] = {
-      val raw = readParquetRows(slice.parquetFiles, slice.meta.schema, conf)
-        .toIndexedSeq
-      if (isContent) {
-        val ridIdx = slice.meta.schema.fieldNames.indexOf(Fts5.RowidCol)
-        val colIdx = cols.map(slice.meta.schema.fieldNames.indexOf(_))
-        raw.map(r => (r(ridIdx).asInstanceOf[Long],
-            colIdx.map(r(_)).toIndexedSeq))
-          .sortBy(_._1)
-      } else {
-        raw.sorted(SqliteWriter.keyOrderingWith(cols.map(_ => None)))
-          .zipWithIndex.map { case (r, i) => (i + 1L, r) }
+    // the table's rows and postings, built once on the first shadow
+    // pass and held until the next table loads
+    final class Built {
+      // rows with rowids: content= tables carry them in the hidden
+      // backing column; others assign 1..N in a deterministic order
+      // (sorted by all columns — ties are byte-identical rows,
+      // interchangeable)
+      lazy val withRid: IndexedSeq[(Long, IndexedSeq[Any])] = {
+        val raw = readParquetRows(slice.parquetFiles, slice.meta.schema, conf)
+          .toIndexedSeq
+        if (isContent) {
+          val ridIdx = slice.meta.schema.fieldNames.indexOf(Fts5.RowidCol)
+          val colIdx = cols.map(slice.meta.schema.fieldNames.indexOf(_))
+          raw.map(r => (r(ridIdx).asInstanceOf[Long],
+              colIdx.map(r(_)).toIndexedSeq))
+            .sortBy(_._1)
+        } else {
+          raw.sorted(SqliteWriter.keyOrderingWith(cols.map(_ => None)))
+            .zipWithIndex.map { case (r, i) => (i + 1L, r) }
+        }
       }
-    }
 
-    lazy val builtParts: (Seq[(Long, Array[Byte])], Seq[(Long, Array[Byte])],
-        Seq[IndexedSeq[Any]], Long, Seq[Long]) = {
-      val colTotals = new Array[Long](nCols)
-      val docsizes = Seq.newBuilder[(Long, Array[Byte])]
-      // postings: ('idByte + term' utf-8 bytes, rid, col, pos)
-      val postings = scala.collection.mutable.ArrayBuffer[(Array[Byte], Long, Int, Int)]()
-      var nRow = 0L
-      withRid.foreach { case (rid, values) =>
-        val sz = new scala.collection.mutable.ArrayBuffer[Byte](nCols)
-        values.zipWithIndex.foreach { case (v0, j) =>
-          val v = v0.asInstanceOf[String]
-          val toks = if (v == null || unidx.contains(j)) Array.empty[String]
-            else Fts5.tokenize(v, exportTok).toArray
-          colTotals(j) += toks.length
-          Fts5IndexBuilder.putVarint(sz, toks.length.toLong)
-          var pos = 0
-          while (pos < toks.length) {
-            val term = toks(pos)
-            postings += ((("0" + term).getBytes(utf8), rid, j, pos))
-            prefixLens.zipWithIndex.foreach { case (len, pi) =>
-              // tokens shorter than the prefix stay out (probed);
-              // prefix lengths count CODEPOINTS, like the driver
-              // path's Spark substring/length
-              if (term.codePointCount(0, term.length) >= len)
-                postings += (((('1' + pi).toChar.toString +
-                  term.substring(0, term.offsetByCodePoints(0, len)))
-                  .getBytes(utf8), rid, j, pos))
+      lazy val parts: (Seq[(Long, Array[Byte])], Seq[(Long, Array[Byte])],
+          Seq[IndexedSeq[Any]], Long, Seq[Long]) = {
+        val colTotals = new Array[Long](nCols)
+        val docsizes = Seq.newBuilder[(Long, Array[Byte])]
+        // postings: ('idByte + term' utf-8 bytes, rid, col, pos)
+        val postings = scala.collection.mutable.ArrayBuffer[(Array[Byte], Long, Int, Int)]()
+        var nRow = 0L
+        withRid.foreach { case (rid, values) =>
+          val sz = new scala.collection.mutable.ArrayBuffer[Byte](nCols)
+          values.zipWithIndex.foreach { case (v0, j) =>
+            val v = v0.asInstanceOf[String]
+            val toks = if (v == null || unidx.contains(j)) Array.empty[String]
+              else Fts5.tokenize(v, exportTok).toArray
+            colTotals(j) += toks.length
+            Fts5IndexBuilder.putVarint(sz, toks.length.toLong)
+            var pos = 0
+            while (pos < toks.length) {
+              val term = toks(pos)
+              postings += ((("0" + term).getBytes(utf8), rid, j, pos))
+              prefixLens.zipWithIndex.foreach { case (len, pi) =>
+                // tokens shorter than the prefix stay out (probed);
+                // prefix lengths count CODEPOINTS
+                if (term.codePointCount(0, term.length) >= len)
+                  postings += (((('1' + pi).toChar.toString +
+                    term.substring(0, term.offsetByCodePoints(0, len)))
+                    .getBytes(utf8), rid, j, pos))
+              }
+              pos += 1
             }
-            pos += 1
           }
+          docsizes += ((rid, sz.toArray))
+          nRow += 1
         }
-        docsizes += ((rid, sz.toArray))
-        nRow += 1
-      }
-      // the driver path's Spark sort: (term bytes, rid, col, pos)
-      val sorted = postings.sortInPlaceWith { (a, b) =>
-        val c = java.util.Arrays.compareUnsigned(a._1, b._1)
-        if (c != 0) c < 0
-        else if (a._2 != b._2) a._2 < b._2
-        else if (a._3 != b._3) a._3 < b._3
-        else a._4 < b._4
-      }
-      val builder = new Fts5IndexBuilder()
-      var curTerm: Array[Byte] = null
-      var curRid = -1L
-      val entries = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-      def emit(): Unit = if (curTerm != null && entries.nonEmpty) {
-        builder.add(curTerm, curRid, Fts5IndexBuilder.poslist(entries.toSeq))
-        entries.clear()
-      }
-      sorted.foreach { case (termB, rid, c, p) =>
-        if (curTerm == null || !java.util.Arrays.equals(termB, curTerm) ||
-            rid != curRid) {
-          emit(); curTerm = termB; curRid = rid
+        // sorted by (term bytes, rid, col, pos)
+        val sorted = postings.sortInPlaceWith { (a, b) =>
+          val c = java.util.Arrays.compareUnsigned(a._1, b._1)
+          if (c != 0) c < 0
+          else if (a._2 != b._2) a._2 < b._2
+          else if (a._3 != b._3) a._3 < b._3
+          else a._4 < b._4
         }
-        entries += ((c, p))
+        val builder = new Fts5IndexBuilder()
+        var curTerm: Array[Byte] = null
+        var curRid = -1L
+        val entries = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+        def emit(): Unit = if (curTerm != null && entries.nonEmpty) {
+          builder.add(curTerm, curRid, Fts5IndexBuilder.poslist(entries.toSeq))
+          entries.clear()
+        }
+        sorted.foreach { case (termB, rid, c, p) =>
+          if (curTerm == null || !java.util.Arrays.equals(termB, curTerm) ||
+              rid != curRid) {
+            emit(); curTerm = termB; curRid = rid
+          }
+          entries += ((c, p))
+        }
+        emit()
+        val res = builder.finish(nRow, colTotals.toIndexedSeq)
+        val dataRows = res.dataRows.toIndexedSeq
+        builder.close()
+        (dataRows, docsizes.result(), res.idxRows, nRow, colTotals.toIndexedSeq)
       }
-      emit()
-      val res = builder.finish(nRow, colTotals.toIndexedSeq)
-      val dataRows = res.dataRows.toIndexedSeq
-      builder.close()
-      (dataRows, docsizes.result(), res.idxRows, nRow, colTotals.toIndexedSeq)
     }
+    def built: Built = current(t)(new Built)
 
     def q(n: String) = s"'$n'"
     val contentTable =
@@ -337,14 +347,14 @@ object SqliteExportKernel {
       else Seq(SqliteWriter.StreamedTable(s"${t}_content",
         s"CREATE TABLE ${q(s"${t}_content")}(id INTEGER PRIMARY KEY" +
           (0 until nCols).map(i => s", c$i").mkString + ")",
-        () => withRid.iterator.map { case (rid, values) =>
+        () => built.withRid.iterator.map { case (rid, values) =>
           (rid, (null +: values).toIndexedSeq)
         }))
     val docsizeTable =
       if (fdOpt.exists(!_.columnsize)) Nil
       else Seq(SqliteWriter.StreamedTable(s"${t}_docsize",
         s"CREATE TABLE ${q(s"${t}_docsize")}(id INTEGER PRIMARY KEY, sz BLOB)",
-        () => builtParts._2.iterator.map { case (rid, sz) =>
+        () => built.parts._2.iterator.map { case (rid, sz) =>
           (rid, IndexedSeq[Any](null, sz))
         }))
     contentTable ++ docsizeTable ++ Seq(
@@ -355,13 +365,13 @@ object SqliteExportKernel {
           Iterator(IndexedSeq[Any]("version", 4L)))),
       SqliteWriter.StreamedTable(s"${t}_data",
         s"CREATE TABLE ${q(s"${t}_data")}(id INTEGER PRIMARY KEY, block BLOB)",
-        () => builtParts._1.iterator.map { case (id, bytes) =>
+        () => built.parts._1.iterator.map { case (id, bytes) =>
           (id, IndexedSeq[Any](null, bytes))
         }),
       SqliteWriter.StreamedTable(s"${t}_idx",
         s"CREATE TABLE ${q(s"${t}_idx")}(segid, term, pgno, " +
           "PRIMARY KEY(segid, term)) WITHOUT ROWID",
         () => Iterator.empty,
-        withoutRowidKeys = Some(() => builtParts._3.iterator)))
+        withoutRowidKeys = Some(() => built.parts._3.iterator)))
   }
 }

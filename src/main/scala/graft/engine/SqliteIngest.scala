@@ -69,44 +69,44 @@ object SqliteIngest {
       .flatMap(m => SqliteDdl.parseCreateIndex(m.sql))
       .groupBy(_.table)
 
-  /** View definitions from master rows of type 'view' (rootpage=0, sql
-    * = the CREATE VIEW text). SQLite stores view TEXT and resolves at
-    * query time; ingest carries the text into the segment's view
-    * registry the same way. Unparseable text is skipped rather than
-    * failing the file — the tables still load. */
-  def viewDefs(file: SqliteFile): Seq[SqliteDdl.ViewDef] =
-    file.master.filter(m => m.tpe == "view" && m.sql != null)
-      .flatMap(m => scala.util.Try(SqliteDdl.parseCreateView(m.sql)).toOption)
+  /** The file's non-table catalog as its DDL text: views and triggers
+    * (rootpage 0) and virtual tables (type 'table', rootpage < 2).
+    * Plain strings, so a catalog task ships them to the driver beside
+    * the table specs; the defs below parse them where they commit. */
+  private[engine] final case class CatalogDdl(views: Seq[String], triggers: Seq[String],
+      virtualTables: Seq[String]) {
+    /** SQLite stores view TEXT and resolves it at query time; ingest
+      * carries the text into the segment's view registry the same
+      * way. Unparseable text is skipped rather than failing the file —
+      * the tables still load. */
+    def viewDefs: Seq[SqliteDdl.ViewDef] =
+      views.flatMap(sql => scala.util.Try(SqliteDdl.parseCreateView(sql)).toOption)
 
-  /** The file's triggers, parsed from their catalog DDL. Shapes this
-    * engine can't run (INSTEAD OF) are skipped, like non-plain
-    * indexes — ingest stays total over real-world files. */
-  def triggerDefs(file: SqliteFile): Seq[SqliteDdl.TriggerDef] =
-    file.master.filter(m => m.tpe == "trigger" && m.sql != null)
-      .flatMap(m => scala.util.Try(SqliteDdl.parseCreateTrigger(m.sql)).toOption)
+    /** Shapes this engine can't run (INSTEAD OF) are skipped, like
+      * non-plain indexes — ingest stays total over real-world files. */
+    def triggerDefs: Seq[SqliteDdl.TriggerDef] =
+      triggers.flatMap(sql => scala.util.Try(SqliteDdl.parseCreateTrigger(sql)).toOption)
 
-  /** The file's fts5 virtual tables (type='table', rootpage < 2, sql =
-    * the CREATE VIRTUAL TABLE text): their DATA lives in the
-    * `<name>_content` shadow table (columns id, c0..cn-1), which
-    * ingests as a plain table; the caller materializes the searchable
-    * table from it. fts5 definitions this engine's subset can't serve
-    * (tokenize=/content=/… options) are skipped — the shadow data
-    * still loads, exactly the pre-r11 behavior. */
-  def ftsDefs(file: SqliteFile): Seq[graft.engine.Fts5.FtsTableDef] =
-    file.master.filter(m => m.tpe == "table" && !m.name.startsWith("sqlite_") &&
-        m.rootPage < 2 && m.sql != null)
-      .flatMap(m =>
-        scala.util.Try(graft.engine.Fts5.parseCreateVirtual(m.sql))
-          .toOption.flatten)
+    /** fts5 tables: their DATA lives in the `<name>_content` shadow
+      * table (columns id, c0..cn-1), which ingests as a plain table;
+      * the caller materializes the searchable table from it. fts5
+      * definitions this engine's subset can't serve are skipped — the
+      * shadow data still loads, exactly the pre-r11 behavior. */
+    def ftsDefs: Seq[Fts5.FtsTableDef] =
+      virtualTables.flatMap(sql => scala.util.Try(Fts5.parseCreateVirtual(sql)).toOption.flatten)
 
-  /** rtree/rtree_i32 virtual tables of the file (r15), same shape as
-    * [[ftsDefs]]. */
-  def rtreeDefs(file: SqliteFile): Seq[graft.engine.Rtree.RtreeDef] =
-    file.master.filter(m => m.tpe == "table" && !m.name.startsWith("sqlite_") &&
-        m.rootPage < 2 && m.sql != null)
-      .flatMap(m =>
-        scala.util.Try(graft.engine.Rtree.parseCreateVirtual(m.sql))
-          .toOption.flatten)
+    /** rtree/rtree_i32 tables (r15), same shape as [[ftsDefs]]. */
+    def rtreeDefs: Seq[Rtree.RtreeDef] =
+      virtualTables.flatMap(sql => scala.util.Try(Rtree.parseCreateVirtual(sql)).toOption.flatten)
+  }
+
+  private[engine] def catalogDdl(file: SqliteFile): CatalogDdl = {
+    def sqlOf(tpe: String): Seq[String] =
+      file.master.filter(m => m.tpe == tpe && m.sql != null).map(_.sql)
+    CatalogDdl(sqlOf("view"), sqlOf("trigger"),
+      file.master.filter(m => m.tpe == "table" && !m.name.startsWith("sqlite_") &&
+        m.rootPage < 2 && m.sql != null).map(_.sql))
+  }
 
   /** [[tableSpec]] for every user table of the file, with secondary
     * indexes attached. */

@@ -18,8 +18,8 @@ import scala.collection.mutable.ArrayBuffer
   * Memory shape: pages stream to the target [[FileChannel]] as they
   * fill — the writer holds one page of cells in flight plus O(#leaves)
   * bookkeeping per tree ((page, max-key) pairs and promoted index
-  * dividers), never the table. Fed from `orderBy(...).toLocalIterator`
-  * the whole export is O(tree depth + one page) in driver memory.
+  * dividers), never the table; what its callers buffer is theirs
+  * ([[SqliteExportKernel]] holds one table at a time).
   *
   * Scope mirrors the reader plus what a valid schema REQUIRES: rowid
   * table B-trees built bottom-up (packed leaves, interior levels over

@@ -466,7 +466,7 @@ class TroughEngine(
     // projection: `SELECT * FROM t WHERE rowid = 5` must still DROP
     // the star-leaked hidden column (r16 — the old any-token-anywhere
     // heuristic kept it as a phantom output column).
-    val projected = rowidProjected(SqlLexer.blankLiterals(sql))
+    val projected = rowidProjected(sql)
     out.columns.filter(Fts5.isHiddenCol).foreach { c =>
       out =
         if (c.startsWith("__rid#") && projected)
@@ -488,47 +488,28 @@ class TroughEngine(
     * output column and must not count). Tokens in WHERE/ORDER BY/JOIN
     * conditions or inside function calls don't count either: they
     * resolve but the output column is named after the whole
-    * expression. Literals must already be blanked. */
-  private def rowidProjected(blanked: String): Boolean = {
-    val tok = ("(?i)[()]|(?<![A-Za-z0-9_$])" +
-      "(select|from|rowid|_rowid_|oid)(?![A-Za-z0-9_$])").r
-    val matches = tok.findAllMatchIn(blanked).toSeq
-    // pass 1: the MAIN query's depth (minimum depth of any SELECT) and
-    // the position of its first SELECT — CTE bodies sit textually
-    // before it, subqueries of the main query after it
-    var depth = 0
-    var mainDepth = Int.MaxValue
-    var mainPos = Int.MaxValue
-    matches.foreach { m =>
-      m.matched match {
-        case "(" => depth += 1
-        case ")" => depth = math.max(0, depth - 1)
-        case w if w.equalsIgnoreCase("select") =>
-          if (depth < mainDepth) { mainDepth = depth; mainPos = m.start }
-        case _ =>
-      }
-    }
-    val isWith = blanked.trim.toLowerCase(java.util.Locale.ROOT).startsWith("with")
-    // pass 2: a token counts in the main query's own select list, or
-    // (for WITH statements) at the top level of a CTE body's list —
-    // both feed output columns; deeper subqueries never do
-    depth = 0
+    * expression. */
+  private def rowidProjected(sql: String): Boolean = {
+    val toks = SqlLexer.tokens(sql)
+    // the MAIN query: the first SELECT at the least depth — CTE bodies
+    // sit textually before it, subqueries of the main query after it
+    val selects = toks.filter(_.is("select"))
+    if (selects.isEmpty) return false
+    val main = selects.minBy(_.depth)
+    val isWith = toks.headOption.exists(_.is("with"))
+    // a token counts in the main query's own select list, or (for WITH
+    // statements) at the top level of a CTE body's list — both feed
+    // output columns; deeper subqueries never do
     val inSelectList = scala.collection.mutable.Map[Int, Boolean]()
-    matches.foreach { m =>
-      m.matched match {
-        case "(" => depth += 1
-        case ")" => inSelectList.remove(depth); depth = math.max(0, depth - 1)
-        case w => w.toLowerCase(java.util.Locale.ROOT) match {
-          case "select" => inSelectList(depth) = true
-          case "from" => inSelectList(depth) = false
-          case _ =>
-            if (inSelectList.getOrElse(depth, false) &&
-                (depth == mainDepth || (isWith && m.start < mainPos)))
-              return true
-        }
-      }
+    toks.exists { t =>
+      if (t.isPunct(')')) inSelectList.remove(t.depth + 1)
+      else if (t.is("select")) inSelectList(t.depth) = true
+      else if (t.is("from")) inSelectList(t.depth) = false
+      t.kind == SqlLexer.Word &&
+        Set("rowid", "_rowid_", "oid").contains(t.lower) &&
+        inSelectList.getOrElse(t.depth, false) &&
+        (t.depth == main.depth || (isWith && t.start < main.start))
     }
-    false
   }
 
   /** SQLite's `pragma_table_info('t')` / `pragma_table_xinfo('t')`

@@ -4905,6 +4905,21 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     def nnDefaulted(r: IndexedSeq[Any]): IndexedSeq[Any] =
       nnDefaults.foldLeft(r) { case (acc, (i, d)) =>
         if (acc(i) == null && d.isDefined) acc.updated(i, d.get) else acc }
+    // an upsert checks NOT NULL and CHECK before its uniqueness
+    // diversion, so a row diverted to DO UPDATE / DO NOTHING still
+    // fails them, as on the trigger-free path (an omitted rowid alias
+    // is assigned later and never NULL)
+    val nnIdx = meta.notNull.map(c => fields.indexWhere(_.name.equalsIgnoreCase(c)))
+      .filter(i => i >= 0 && !aiIdx.contains(i))
+    def enforceIncomingRow(r: IndexedSeq[Any]): Unit = {
+      nnIdx.find(r(_) == null).foreach { i =>
+        throw new IllegalArgumentException(
+          s"NOT NULL constraint failed: $table.${fields(i).name}")
+      }
+      if (meta.checks.nonEmpty)
+        enforceIncomingConstraints(table, meta.copy(notNull = Nil),
+          localDf(meta.schema, Seq(r)))
+    }
     def processRow(row0: IndexedSeq[Any]): Unit = {
       var row = row0
       def resolveIns(before: Boolean)(kw: String, c: String): String = kw match {
@@ -4932,6 +4947,8 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       }
       if (!ignored && mode == "IGNORE") ignored = nnDefaults.exists { case (i, _) => row(i) == null }
       if (!ignored && mode == "REPLACE") row = nnDefaulted(row)
+      // after the BEFORE programs: a row they drop is never checked
+      if (!ignored && upsert.isDefined) enforceIncomingRow(row)
       if (!ignored) {
         val key: Seq[Any] =
           if (keyIdx.nonEmpty && keyIdx.forall(row(_) != null))

@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.sys.process._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 import graft.SparkSpecBase
 
@@ -14,7 +15,9 @@ import graft.SparkSpecBase
   * decode closures `require(TaskContext.get() != null)`, so ANY
   * driver-side decode fails the whole call — the listener below
   * additionally proves Spark tasks actually ran the work. Fixtures are
-  * all written by the real sqlite3 CLI. */
+  * all written by the real sqlite3 CLI. Both ingest entry points build
+  * the same segment from the same file: views, triggers and virtual
+  * tables included. */
 class BulkIngestSpec extends SparkSpecBase {
 
   private lazy val root = Files.createTempDirectory("graft-bulk-ingest").toString
@@ -237,5 +240,102 @@ class BulkIngestSpec extends SparkSpecBase {
       Map("cold-x" -> "/nonexistent.sqlite", "_bad id" -> "/nonexistent.sqlite"))
     assert(res("cold-x").failed.get.getMessage.contains("read-only"))
     assert(res("_bad id").failed.get.getMessage.contains("must match"))
+  }
+
+  /** Jobs scheduled while `body` runs. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      ListenerDrain(spark.sparkContext)
+      (a, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def rowsOf(seg: String, t: String): Seq[String] =
+    engine.store.loadTable(seg, t).collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  private def answer(seg: String, sql: String): Seq[String] =
+    engine.read(seg, sql).collect().map(_.mkString("|")).toSeq
+
+  test("single-file and distributed ingest build the same segment: " +
+      "trigger, view, fts5 and rtree included") {
+    val dir = Files.createTempDirectory("bulk-parity")
+    val db = makeDb(dir, "parity",
+      """CREATE TABLE docs (id INTEGER PRIMARY KEY, body TEXT, n INTEGER);
+        |CREATE TABLE audit (aid INTEGER PRIMARY KEY AUTOINCREMENT, msg TEXT);
+        |CREATE TRIGGER docs_ai AFTER INSERT ON docs BEGIN
+        |  INSERT INTO audit (msg) VALUES ('ins ' || NEW.id); END;
+        |CREATE VIEW big AS SELECT id, body FROM docs WHERE n > 1;
+        |CREATE VIRTUAL TABLE ft USING fts5(body);
+        |INSERT INTO ft VALUES ('the quick brown fox'), ('lazy dogs sleep'),
+        |  ('quick quick slow');
+        |CREATE VIRTUAL TABLE boxes USING rtree(id, minX, maxX, minY, maxY, +label);
+        |INSERT INTO boxes VALUES (1, 0, 1, 0, 1, 'a'), (2, 5, 6, 5, 6, 'b'),
+        |  (3, 0.5, 2, 0.5, 2, 'c');
+        |INSERT INTO docs (body, n) VALUES ('alpha', 1), ('beta', 2), ('gamma', 3);""".stripMargin)
+    val single = engine.store.ingestSqliteSegment(db.toString, "par-single")
+    val dist = engine.store.ingestSqliteSegmentsDistributed(
+      Map("par-dist" -> db.toString))("par-dist").get
+    assert(dist.sorted == single.sorted)
+    assert(Set("docs", "audit", "ft", "boxes").subsetOf(single.toSet), single)
+    assert(engine.store.masterCatalog("par-dist") ==
+      engine.store.masterCatalog("par-single"))
+    val tables = engine.store.tables("par-single")
+    assert(engine.store.tables("par-dist") == tables)
+    tables.foreach(t => assert(rowsOf("par-dist", t) == rowsOf("par-single", t), t))
+
+    Seq(
+      "SELECT body FROM ft WHERE ft MATCH 'quick' ORDER BY body;",
+      "SELECT id, label FROM boxes WHERE minX >= 0 AND maxX <= 2 ORDER BY id;",
+      "SELECT id, body FROM big ORDER BY id;"
+    ).foreach { q =>
+      val want = answer("par-single", q)
+      assert(want.nonEmpty, q)
+      assert(answer("par-dist", q) == want, q)
+    }
+    // the trigger fires on both (provision on an existing segment only
+    // takes its write lock)
+    engine.schemas.put("par-lock", "CREATE TABLE unused_ (x INTEGER);")
+    Seq("par-single", "par-dist").foreach { seg =>
+      engine.provisionWritable(seg, "par-lock")
+      engine.write(seg, "INSERT INTO docs (body, n) VALUES ('delta', 4);")
+    }
+    val audit = "SELECT msg FROM audit ORDER BY aid;"
+    assert(answer("par-single", audit).last == "ins 4")
+    assert(answer("par-dist", audit) == answer("par-single", audit))
+  }
+
+  test("a file of plain tables ingests with one write job per table and " +
+      "writes no views or triggers file") {
+    val dir = Files.createTempDirectory("bulk-plain")
+    val db = makeDb(dir, "plain",
+      """CREATE TABLE crawl (id INTEGER PRIMARY KEY, url TEXT, status INTEGER);
+        |INSERT INTO crawl (url, status) VALUES ('http://p.example/a', 200),
+        |  ('http://p.example/b', 404);
+        |CREATE TABLE kv (k TEXT PRIMARY KEY, v TEXT);
+        |INSERT INTO kv VALUES ('a', 'x');""".stripMargin)
+    val (single, singleJobs) =
+      jobsDuring(engine.store.ingestSqliteSegment(db.toString, "plain-single"))
+    val (dist, distJobs) = jobsDuring(engine.store.ingestSqliteSegmentsDistributed(
+      Map("plain-dist" -> db.toString))("plain-dist").get)
+    assert(single.sorted == Seq("crawl", "kv") && dist.sorted == single.sorted)
+    assert(singleJobs == 2, s"$singleJobs jobs for two tables")
+    // one catalog job, then one decode+write job per table
+    assert(distJobs == 3, s"$distJobs jobs for two tables")
+    Seq("plain-single", "plain-dist").foreach { seg =>
+      Seq("_views", "_triggers").foreach { d =>
+        val f = java.nio.file.Paths.get(root, d, s"$seg.json")
+        assert(!Files.exists(f), s"$f written")
+      }
+    }
   }
 }

@@ -14,8 +14,9 @@ import graft.SparkSpecBase
   * INSERT … VALUES list, a loaded table and a staged statement each
   * become one single-partition local relation, so a write script's
   * work no longer scales with its tuple count, a small table commits
-  * as one part file, and a read of it runs without a job. Counted with
-  * one SparkListener. */
+  * as one part file, and a read of it runs without a job. A `.sqlite`
+  * export reads the segment's parquet on the calling thread and runs
+  * no job either. Counted with one SparkListener. */
 class DriverLocalSpec extends SparkSpecBase {
 
   private lazy val root = Files.createTempDirectory("graft-local").toString
@@ -132,5 +133,41 @@ class DriverLocalSpec extends SparkSpecBase {
     assert(reads.get > 0)
     val n = engine.read(seg, "SELECT count(*) FROM t;").collect()(0).getLong(0)
     assert(n == 800 + 5 * commits)
+  }
+
+  test("a .sqlite export of one segment schedules zero jobs and passes " +
+      "integrity_check") {
+    val seg = segment("local-export",
+      "CREATE TABLE docs (id INTEGER PRIMARY KEY, body TEXT, " +
+        "tag TEXT COLLATE NOCASE);\n" +
+        "CREATE INDEX docs_tag ON docs (tag);\n" +
+        "CREATE TABLE kv (k TEXT PRIMARY KEY, v INTEGER);\n" +
+        "CREATE VIRTUAL TABLE ft USING fts5(body, prefix=2);\n" +
+        "CREATE VIRTUAL TABLE boxes USING rtree(id, minX, maxX, minY, maxY);")
+    engine.write(seg,
+      "INSERT INTO docs (body, tag) VALUES " +
+        values(1 to 40)(i => s"'body $i', '${if (i % 2 == 0) "Red" else "red"}$i'") + ";" +
+        "INSERT INTO kv VALUES " + values(1 to 30)(i => s"'k${31 - i}', $i") + ";" +
+        "INSERT INTO ft (body) VALUES ('quick brown fox'), ('quiet lazy dog'), " +
+        "('slow quick turtle');" +
+        "INSERT INTO boxes VALUES (1, 0, 1, 0, 1), (2, 5, 6, 5, 6), (3, 0.5, 2, 0.5, 2);")
+    val out = Files.createTempDirectory("local-export").resolve(s"$seg.sqlite")
+    var exported = Seq.empty[String]
+    val (jobs, _) = counted {
+      exported = store.exportSqliteSegment(seg, out.toString)
+    }
+    assert(jobs == 0, s"$jobs jobs for the export of one segment")
+    assert(exported.sorted == Seq("boxes", "docs", "ft", "kv"))
+    assert(SqliteCli.query(out.toString, "PRAGMA integrity_check;").trim == "ok")
+    assert(SqliteCli.query(out.toString,
+      "SELECT count(*) FROM docs WHERE tag = 'RED2';").trim == "1")
+    assert(SqliteCli.query(out.toString,
+      "SELECT group_concat(k, ',') FROM (SELECT k FROM kv ORDER BY k LIMIT 3);")
+      .trim == "k1,k10,k11")
+    assert(SqliteCli.query(out.toString,
+      "SELECT count(*) FROM ft WHERE ft MATCH 'qu*';").trim == "3")
+    assert(SqliteCli.query(out.toString,
+      "SELECT group_concat(id, ',') FROM (SELECT id FROM boxes " +
+        "WHERE minX >= 0 AND maxX <= 2 ORDER BY id);").trim == "1,3")
   }
 }

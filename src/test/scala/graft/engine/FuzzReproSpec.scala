@@ -24,6 +24,9 @@ import graft.SparkSpecBase
   *  - [756] (same sweep): after ALTER TABLE … DROP COLUMN, OR IGNORE
   *    under an AFTER INSERT trigger that reads its own target stored
   *    the first two values in each other's columns.
+  *  - [159] (sweep 20261102): an upsert DO UPDATE under a BEFORE
+  *    INSERT trigger skipped the incoming-row NOT NULL/CHECK check
+  *    and committed a NULL into a NOT NULL column.
   *  - [lexer] spellings sqlite3's tokenizer accepts that hand-written
   *    scanners got wrong: quoted column names containing a space, and
   *    keywords directly followed by `(`, a quote or a `[name]`.
@@ -194,5 +197,49 @@ class FuzzReproSpec extends SparkSpecBase {
         "INSERT OR REPLACE  INTO t VALUES(3, -1, 7, 1.225);",
       Seq("t", "log"),
       Seq("SELECT * FROM v ORDER BY vid;"))
+  }
+
+  test("[159] upsert DO UPDATE under a BEFORE INSERT trigger refuses a NULL " +
+      "into NOT NULL") {
+    differential(
+      "CREATE TABLE t (id INTEGER PRIMARY KEY, c1 REAL UNIQUE, c2 INTEGER, " +
+        "[c 3] INTEGER NOT NULL DEFAULT 4 UNIQUE, [c4] INTEGER NOT NULL DEFAULT 10 UNIQUE) STRICT;\n" +
+        "CREATE TABLE log (lid INTEGER PRIMARY KEY AUTOINCREMENT, msg TEXT);",
+      "CREATE TRIGGER tg1 BEFORE INSERT ON t BEGIN INSERT INTO log (msg) VALUES " +
+        "((SELECT count(*) FROM t) || '@' || NEW.id); END;\n" +
+        "INSERT OR IGNORE  INTO t VALUES(2, 8.200, NULL, 6, 10);\n" +
+        "INSERT  INTO t VALUES (1, 14, 12, '7', 0);\n" +
+        "INSERT INTO t VALUES (2, 16, 8, 13, -1) ON CONFLICT(id) DO UPDATE SET `c1` = excluded.\"c1\";\n" +
+        "ALTER TABLE t ADD COLUMN x1 REAL DEFAULT 7.50;\n" +
+        "INSERT INTO t VALUES (1, 2.25, 6, 15, NULL, 11) ON CONFLICT(id) DO UPDATE SET [c1] = excluded.`c1`;\n" +
+        "DELETE FROM t WHERE`id` = 6;",
+      Seq("t", "log"))
+  }
+
+  private val upsertDdl =
+    "CREATE TABLE t (id INTEGER PRIMARY KEY, c1 INTEGER NOT NULL, " +
+      "c2 INTEGER CHECK (c2 > 0), c3 TEXT);\n" +
+      "CREATE TABLE log (lid INTEGER PRIMARY KEY AUTOINCREMENT, msg TEXT);"
+  private val upsertTriggers =
+    "INSERT INTO t VALUES (1, 5, 1, 'a');" +
+      "CREATE TRIGGER tg1 BEFORE INSERT ON t WHEN NEW.c1 IS NULL " +
+      "BEGIN SELECT RAISE(IGNORE); END;" +
+      "CREATE TRIGGER tg2 BEFORE INSERT ON t BEGIN " +
+      "INSERT INTO log (msg) VALUES ('B' || NEW.id); END;"
+
+  test("[159] a row a BEFORE RAISE(IGNORE) drops is never checked, " +
+      "even when it carries the NULL") {
+    differential(upsertDdl,
+      upsertTriggers +
+        "INSERT INTO t VALUES (1, NULL, 2, 'b') ON CONFLICT(id) DO UPDATE SET c3 = excluded.c3;" +
+        "INSERT INTO t VALUES (1, 7, 3, 'c') ON CONFLICT(id) DO UPDATE SET c3 = excluded.c3;",
+      Seq("t", "log"))
+  }
+
+  test("[159] a diverted upsert row failing a CHECK errors under triggers") {
+    differential(upsertDdl,
+      upsertTriggers +
+        "INSERT INTO t VALUES (1, 6, -2, 'd') ON CONFLICT(id) DO UPDATE SET c3 = excluded.c3;",
+      Seq("t", "log"))
   }
 }
