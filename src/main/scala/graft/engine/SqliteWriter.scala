@@ -631,10 +631,6 @@ final class SqliteWriter(pageSize: Int, channel: FileChannel) {
     children.head
   }
 
-  /** Buffered form: sorts in memory, then streams. */
-  private[engine] def buildIndexTree(keys: Seq[IndexedSeq[Any]]): Int =
-    buildIndexTreeSorted(keys.sorted(SqliteWriter.keyOrdering).iterator)
-
   // ---------------------------------------------------------------- render
 
   /** Stamp the 100-byte header (§1.3) over the front of page 1 (whose

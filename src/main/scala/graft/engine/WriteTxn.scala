@@ -1861,13 +1861,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     anyCols.foreach { c =>
       val cur = schema.fields.find(_.name.equalsIgnoreCase(c)).get
       incoming.schema.fields.find(_.name.equalsIgnoreCase(c)).foreach { inF =>
-        val inT = inF.dataType match {
-          case IntegerType | ShortType | ByteType | LongType | BooleanType => LongType
-          case _: DecimalType | FloatType | DoubleType => DoubleType
-          case BinaryType => BinaryType
-          case NullType => cur.dataType
-          case _ => StringType
-        }
+        val inT = anyClassOf(inF.dataType, cur.dataType)
         val adopted =
           if (inT == cur.dataType) cur.dataType
           else if (isEmpty) inT
@@ -1891,6 +1885,35 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     if (schema eq meta.schema) (meta, existing)
     else (meta.copy(schema = schema), ex)
   }
+
+  /** The storage class an ANY column holds a value of Spark type `dt`
+    * as (`cur`, the column's own, for a NULL). */
+  private def anyClassOf(dt: DataType, cur: DataType): DataType = dt match {
+    case IntegerType | ShortType | ByteType | LongType | BooleanType => LongType
+    case _: DecimalType | FloatType | DoubleType => DoubleType
+    case BinaryType => BinaryType
+    case NullType => cur
+    case _ => StringType
+  }
+
+  /** The storage class of an external value held on the driver. */
+  private def classOfValue(v: Any): DataType = v match {
+    case _: java.lang.Long => LongType
+    case _: java.lang.Double => DoubleType
+    case _: Array[Byte] => BinaryType
+    case _ => StringType
+  }
+
+  /** An external value of an ANY column cast to `to` as a column cast
+    * would (the adoption of rows already held on the driver). */
+  private def castValue(v: Any, to: DataType): Any =
+    if (v == null || classOfValue(v) == to) v
+    else {
+      import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      CatalystTypeConverters.convertToScala(
+        Cast(Literal.create(v, classOfValue(v)), to, Some("UTC")).eval(), to)
+    }
 
   /** Storage-class coercion of a value (evaluated Spark type `in`) into
     * a STRICT column declared `declared`: (stored value, per-row
@@ -2016,6 +2039,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       value.as(f.name, f.metadata) }.toSeq: _*)
   }
 
+  /** INSERT [OR IGNORE | OR REPLACE] … [ON CONFLICT …] [RETURNING …].
+    * A plain INSERT that fires no trigger is one union under the
+    * statement-time constraint gate; every other INSERT — any conflict
+    * clause, any INSERT trigger — takes the one row loop,
+    * [[insertRows]], which resolves conflicts the way SQLite does, row
+    * by row in arrival order. */
   private def insert(stmt00: String): Unit = {
     val (stmt0, retText) = splitReturning(stmt00)
     val (stmt, upsertClause) = splitOnConflict(stmt0)
@@ -2130,84 +2159,20 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       // SQLite's grammar rejects the combination too
       throw new IllegalArgumentException(
         s"cannot combine INSERT OR ... with an ON CONFLICT clause: $stmt0")
-    // trigger path: INSERT programs, plus UPDATE programs when an
-    // upsert DO UPDATE can divert rows (probed firing shapes)
     val insTrigs = activeTriggers(table, "INSERT")
-    val upsertDoUpdate = upsertClause.exists(c =>
-      !c.trim.toUpperCase.matches("(?s).*DO\\s+NOTHING\\s*;?\\s*$"))
-    if (insTrigs.nonEmpty ||
-        (upsertDoUpdate && activeTriggers(table, "UPDATE").nonEmpty)) {
-      refuseReturningWithTriggers(retText, haveTriggers = true)
-      insertWithTriggers(table, meta, existing, aligned0, conflict,
-        upsertClause, insTrigs, aiAssigned, aiBase)
+    if (conflict.isEmpty && upsertClause.isEmpty && insTrigs.isEmpty) {
+      // a plain INSERT: one union, gated at statement time (SQLite's
+      // timing) — a commit-only check can be WASHED by a later DELETE /
+      // UPDATE / ALTER in the same script (fuzz-caught)
+      val merged = existing.unionByName(aligned0)
+      enforceUnique(table, meta, merged)
+      stage(table, meta, merged)
+      retText.foreach(t => applyReturning(aligned0, meta, t))
       return
     }
-    // merged = the staged table state; affected = the rows RETURNING
-    // reports. OR REPLACE reports EVERY value row (each insert succeeds,
-    // later dup keys replacing earlier — probed); OR IGNORE / DO NOTHING
-    // report only the rows actually kept.
-    // Conflict resolution over ALL unique constraints (PK + declared
-    // UNIQUEs + unique indexes), with the per-mode constraint behaviors
-    // probed from sqlite3 (lang_conflict.html):
-    //  - upsert: incoming rows are NOT NULL/CHECK-checked BEFORE the
-    //    uniqueness diversion (a NULL into NOT NULL errors even when
-    //    the row would divert to DO UPDATE / DO NOTHING);
-    //  - OR IGNORE: silently drops rows failing NOT NULL, CHECK, or
-    //    conflicting on ANY unique key (existing or earlier in batch);
-    //    STRICT type errors are NOT ignored (alignToSchema ran above);
-    //  - OR REPLACE: NULL in a NOT NULL column takes the declared
-    //    DEFAULT (no default → the commit gate's error); conflicting
-    //    EXISTING rows on any unique key are deleted; batch keeps the
-    //    last arrival per key.
-    val keySets = uniqueKeySets(meta)
-    // DO UPDATE SET onto an ANY column may widen the schema mid-
-    // statement; everything downstream stages under the returned meta
-    var metaS = meta
-    val (merged, affected) = (conflict, upsertClause) match {
-      case (_, Some(clause)) =>
-        enforceIncomingConstraints(table, meta, aligned0)
-        val (m2, mg, af) = applyUpsert(table, meta, existing, aligned0, clause)
-        metaS = m2
-        (mg, af)
-      case (Some("REPLACE"), None) =>
-        val defaulted = meta.notNull
-          .flatMap(c => meta.schema.fields.find(_.name.equalsIgnoreCase(c)))
-          .foldLeft(aligned0) { (d, f) =>
-            defaultExpr(meta, f.name) match {
-              case Some(e) => d.withColumn(f.name,
-                coalesce(col(f.name), dexpr(e).cast(f.dataType)))
-              case None => d
-            }
-          }
-        // still-NULL NOT NULLs (no default) and CHECK failures error at
-        // the statement, like sqlite3's REPLACE mode (probed) — the
-        // commit gate alone could be washed by a later DELETE/ALTER
-        enforceIncomingConstraints(table, meta, defaulted)
-        if (keySets.isEmpty) (existing.unionByName(defaulted), defaulted)
-        else {
-          val aligned = dedupByArrivalSets(defaulted, keySets, keepLast = true)
-          (removeConflicting(existing, aligned, keySets).unionByName(aligned),
-            defaulted)
-        }
-      case (Some("IGNORE"), None) =>
-        val passing = ignorePassFilter(meta).map(aligned0.where).getOrElse(aligned0)
-        if (keySets.isEmpty) (existing.unionByName(passing), passing)
-        else {
-          val aligned = dedupByArrivalSets(passing, keySets, keepLast = false)
-          val kept = antiConflicts(aligned, existing, keySets)
-          (existing.unionByName(kept), kept)
-        }
-      case _ => (existing.unionByName(aligned0), aligned0)
-    }
-    // statement-time constraint gate (SQLite's timing): a commit-only
-    // check can be WASHED by a later DELETE / UPDATE / ALTER in the
-    // same script (fuzz-caught) — plain INSERTs and upserts validate
-    // the post-statement state now; OR IGNORE / OR REPLACE states are
-    // conflict-free by construction (their violators were dropped,
-    // replaced, or errored above)
-    if (conflict.isEmpty) enforceUnique(table, metaS, merged)
-    stage(table, metaS, merged)
-    retText.foreach(t => applyReturning(affected, metaS, t))
+    val (metaS, affected) = insertRows(table, meta, existing, aligned0,
+      conflict, upsertClause, insTrigs, aiAssigned, aiBase, retText)
+    retText.foreach(t => applyReturning(localDf(metaS.schema, affected), metaS, t))
   }
 
   /** fts5 special INSERT commands (fts5.html §4.4.3/§7): 'delete'
@@ -2335,18 +2300,9 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       .flatMap(resolve).distinct
   }
 
-  /** Rows passing NOT NULL + CHECK — what OR IGNORE silently keeps. */
-  private def ignorePassFilter(meta: TableMeta): Option[Column] = {
-    val fields = meta.schema.fieldNames
-    val nn = meta.notNull.flatMap(c => fields.find(_.equalsIgnoreCase(c)))
-      .map(col(_).isNotNull)
-    val cks = meta.checks.map(c => coalesce(checkPred(meta, c.expr), lit(true)))
-    (nn ++ cks).reduceOption(_ && _)
-  }
-
-  /** Statement-time NOT NULL/CHECK gate on INCOMING rows (one bounded
-    * aggregate job) — the upsert paths need it because a diverted row
-    * never reaches the commit-time gate yet still errors in SQLite. */
+  /** Statement-time NOT NULL/CHECK gate on a statement's new rows (one
+    * bounded aggregate job), for the set-based paths: a commit-time
+    * gate alone could be washed by a later statement of the script. */
   private def enforceIncomingConstraints(table: String, meta: TableMeta,
       rows: DataFrame): Unit = {
     val fields = meta.schema.fieldNames
@@ -2367,51 +2323,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     }
   }
 
-  /** Batch-internal conflict resolution across every key set (first or
-    * last arrival wins; NULL-keyed rows never conflict — SQLite's
-    * distinct-NULLs rule). Sets resolve in constraint order; the
-    * cross-set resurrection corner (a multi-tuple batch row eliminated
-    * only by an already-eliminated row) resolves per-set — documented,
-    * unobservable for single-tuple statements. */
-  private def dedupByArrivalSets(df: DataFrame, keySets: Seq[Seq[String]],
-      keepLast: Boolean): DataFrame = {
-    var d = df.withColumn("__seq", monotonically_increasing_id())
-    val ord = if (keepLast) col("__seq").desc else col("__seq").asc
-    keySets.zipWithIndex.foreach { case (ks, i) =>
-      val w = Window.partitionBy(ks.map(col): _*).orderBy(ord)
-      val anyNull = ks.map(col(_).isNull).reduce(_ || _)
-      d = d.withColumn(s"__rn$i", row_number().over(w))
-        .where(anyNull || col(s"__rn$i") === 1).drop(s"__rn$i")
-    }
-    d.drop("__seq")
-  }
-
-  /** Incoming rows NOT conflicting with an existing row on any key set
-    * (equality anti-joins — NULL keys never match, hence never
-    * conflict). */
-  private def antiConflicts(incoming: DataFrame, existing: DataFrame,
-      keySets: Seq[Seq[String]]): DataFrame =
-    keySets.foldLeft(incoming)((d, ks) =>
-      d.join(existing.select(ks.map(col): _*), ks.toSeq, "left_anti"))
-
-  /** Existing rows minus those conflicting with a survivor on any key
-    * set — OR REPLACE's delete step. */
-  private def removeConflicting(existing: DataFrame, survivors: DataFrame,
-      keySets: Seq[Seq[String]]): DataFrame =
-    keySets.foldLeft(existing)((ex, ks) =>
-      ex.join(survivors.select(ks.map(col): _*), ks.toSeq, "left_anti"))
-
-  /** Intra-statement duplicate keys: SQLite's OR REPLACE keeps the LAST
-    * occurrence, OR IGNORE (and DO NOTHING) the FIRST — arrival order
-    * tracked with a monotonic id (union order for VALUES tuples). */
-  private def dedupByArrival(df: DataFrame, keys: Seq[String], keepLast: Boolean): DataFrame = {
-    val ord = if (keepLast) col("__seq").desc else col("__seq").asc
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord)
-    df.withColumn("__seq", monotonically_increasing_id())
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__seq", "__rn")
-  }
-
   /** Find the last top-level `ON CONFLICT` (outside quotes/parens) and
     * split the statement there. Returns (insert-part, Some(clause)). */
   private def splitOnConflict(s: String): (String, Option[String]) = {
@@ -2422,147 +2333,16 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     else (s.substring(0, toks(at).start), Some(s.substring(toks(at).start)))
   }
 
+  /** The SQLite 3.24 upsert (lang_upsert.html): `ON CONFLICT [(cols)]
+    * DO NOTHING | DO UPDATE SET ... [WHERE ...]`. The target names the
+    * PRIMARY KEY or a recorded UNIQUE ([[upsertKeyCols]]); SET/WHERE
+    * read the conflicting row as bare columns and the incoming row as
+    * `excluded.*`; [[insertRows]] resolves it row by row. */
   private val onConflictRe =
     """(?is)^ON\s+CONFLICT\s*(?:\(([^)]*)\))?\s*DO\s+(NOTHING|UPDATE\s+SET\s+(.+))\s*$""".r
 
-  /** The SQLite 3.24 upsert (lang_upsert.html): `ON CONFLICT [(cols)]
-    * DO NOTHING | DO UPDATE SET ... [WHERE ...]`. The conflict target
-    * must name the PRIMARY KEY or a recorded UNIQUE index (SQLite's own
-    * rule, with SQLite's own error text); DO UPDATE's SET/WHERE see the
-    * EXISTING row as bare columns and the incoming row as `excluded.*`,
-    * evaluated against pre-statement state like UPDATE. Deviation: a
-    * statement whose rows conflict with EACH OTHER under DO UPDATE is
-    * refused (SQLite folds them one at a time — a batch engine would
-    * silently compute something else for accumulator patterns like
-    * `SET n = n + excluded.n`). */
-  /** Returns (possibly ANY-adapted meta, new table state, RETURNING-
-    * affected rows): DO NOTHING reports only the rows actually
-    * inserted; DO UPDATE reports the post-update image of guard-passing
-    * conflict rows plus the fresh inserts (SQLite lang_returning.html
-    * §2: new values). The meta comes back because DO UPDATE SET onto a
-    * STRICT ANY column can widen its observed class — the caller must
-    * stage under the adapted schema. */
-  private def applyUpsert(table: String, meta: TableMeta, existing: DataFrame,
-      aligned0: DataFrame, clause: String): (TableMeta, DataFrame, DataFrame) = {
-    val m = onConflictRe.findFirstMatchIn(clause.trim).getOrElse(
-      throw new IllegalArgumentException(s"cannot parse ON CONFLICT clause: $clause"))
-    val target = Option(m.group(1)).map(SqlLexer.splitTopLevel(_).map(c =>
-      // strip per-column COLLATE/direction, as in index/pk parsing
-      SqlScript.unquoteIdent(c.trim.split("\\s+").head)))
-    val doNothing = m.group(2).equalsIgnoreCase("NOTHING")
-    val keyCols: Seq[String] =
-      upsertKeyCols(meta, target, requireMatch = !doNothing)
-    if (doNothing) {
-      // untargeted DO NOTHING ignores conflicts on ANY unique
-      // constraint (probed); targeted, only the named one — a conflict
-      // on another constraint then errors via the commit gate
-      val sets: Seq[Seq[String]] =
-        if (target.isEmpty) uniqueKeySets(meta)
-        else Seq(keyCols).filter(_.nonEmpty)
-      if (sets.isEmpty) // nothing can conflict
-        (meta, existing.unionByName(aligned0), aligned0)
-      else {
-        val aligned = dedupByArrivalSets(aligned0, sets, keepLast = false)
-        val kept = antiConflicts(aligned, existing, sets)
-        (meta, existing.unionByName(kept), kept)
-      }
-    } else {
-      if (keyCols.isEmpty)
-        throw new IllegalArgumentException(
-          "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint")
-      val dups = collated(aligned0.groupBy(keyCols.map(col): _*).count()
-        .where(col("count") > 1)).limit(1).count()
-      if (dups > 0)
-        throw new UnsupportedOperationException(
-          "ON CONFLICT DO UPDATE with rows that conflict with each other in " +
-            "one statement is not supported (SQLite folds them one at a time); " +
-            "pre-aggregate the inserted rows instead")
-      val setBody = m.group(3)
-      val whereAt = SqlLexer.lastTopLevel(setBody, "WHERE")
-      val (setPart, predPart) =
-        if (whereAt < 0) (setBody, None)
-        else (setBody.substring(0, whereAt), Some(setBody.substring(whereAt + 5)))
-      val rawAssigns: Seq[(StructField, Column)] =
-        SqlLexer.splitTopLevel(setPart).map { assignment =>
-          val eq = topLevelEq(assignment)
-          val colName = SqlScript.unquoteIdent(assignment.substring(0, eq).trim)
-          val rhs = dexpr(rewriteExcluded(assignment.substring(eq + 1).trim))
-          requireNotGenerated(meta, colName, "UPDATE")
-          val field = meta.schema.fields.find(_.name.equalsIgnoreCase(colName)).getOrElse(
-            throw new IllegalArgumentException(s"no such column: $colName"))
-          field -> rhs
-        }
-      val pred = predPart.map(p => dpred(rewriteExcluded(p))).getOrElse(lit(true))
-      // incoming side renamed __exc_* so bare names stay the EXISTING row
-      def mkJoined(ex: DataFrame, al: DataFrame): DataFrame = {
-        val exc = al.select(
-          (al.columns.map(c => col(c).as(s"__exc_$c")) :+
-            lit(true).as("__exc_match")).toSeq: _*)
-        ex.join(exc, keyCols.map(k => col(k) === col(s"__exc_$k")).reduce(_ && _), "left")
-      }
-      val hit = col("__exc_match").isNotNull && coalesce(pred, lit(false))
-      // STRICT ANY adoption for DO UPDATE SET targets (ADVICE r10):
-      // a SET value of a new storage class adapts the column type
-      // before coercion — strictCoerce's ANY fallback is a plain cast,
-      // which would silently store NULL where sqlite3 stores the value
-      // verbatim. Adoption only from rows an actual conflict diverts
-      // (one bounded probe job, ANY-SET path only) — a no-hit upsert
-      // must not retype the column.
-      val (metaU, existingU, alignedU, joined) = {
-        val joined0 = mkJoined(existing, aligned0)
-        val anyAssigns = rawAssigns.filter { case (f, _) =>
-          meta.strict && declOf(meta, f.name).equalsIgnoreCase("ANY") }
-        val incoming =
-          if (anyAssigns.isEmpty) null
-          else joined0.where(hit).select(
-            anyAssigns.map { case (f, v) => v.as(f.name) }: _*)
-        if (incoming == null || incoming.limit(1).count() == 0)
-          (meta, existing, aligned0, joined0)
-        else {
-          val (m2, ex2) = adaptAnyTypes(table, meta, existing, incoming)
-          if (m2 eq meta) (meta, existing, aligned0, joined0)
-          else {
-            val al2 = aligned0.select(m2.schema.fields.map(f =>
-              col(f.name).cast(f.dataType).as(f.name, f.metadata)).toSeq: _*)
-            (m2, ex2, al2, mkJoined(ex2, al2))
-          }
-        }
-      }
-      // STRICT: DO UPDATE SET values go through the same storage-class
-      // gate as plain UPDATE, probed only on the diverted (hit) rows;
-      // ANY columns store the (possibly widened) adopted class directly
-      val coercedUp: Seq[(StructField, (Column, Option[Column]))] =
-        rawAssigns.map { case (f0, v) =>
-          val f = metaU.schema.fields.find(_.name.equalsIgnoreCase(f0.name)).get
-          if (!metaU.strict) f -> (v.cast(f.dataType), None)
-          else if (declOf(metaU, f.name).equalsIgnoreCase("ANY"))
-            f -> (v.cast(f.dataType), None)
-          else {
-            val in = joined.select(v).schema.head.dataType
-            f -> strictCoerce(declOf(metaU, f.name), f.dataType, in, v)
-          }
-        }
-      if (metaU.strict)
-        strictProbe(table, metaU, joined.where(hit),
-          coercedUp.collect { case (f, (_, Some(c))) => f.name -> c })
-      val assignments: Map[String, Column] =
-        coercedUp.map { case (f, (v, _)) => f.name -> v }.toMap
-      val updatedExisting = joined.select(metaU.schema.fields.map { f =>
-        assignments.get(f.name)
-          .map(v => when(hit, v).otherwise(col(f.name)).as(f.name))
-          .getOrElse(col(f.name))
-      }.toSeq: _*)
-      val updatedHit = joined.where(hit).select(metaU.schema.fields.map { f =>
-        assignments.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
-      }.toSeq: _*)
-      val inserts = alignedU.join(
-        existingU.select(keyCols.map(col): _*), keyCols.toSeq, "left_anti")
-      (metaU, updatedExisting.unionByName(inserts), updatedHit.unionByName(inserts))
-    }
-  }
-
   /** Rewrite `excluded.<ident>` references (any SQLite ident quoting) to
-    * the join's `__exc_<ident>` columns. */
+    * the upsert probe's `__exc_<ident>` columns. */
   private def rewriteExcluded(s: String): String =
     WriteTxn.rewriteRowRefs(s, Set("excluded"), (_, name) => s"`__exc_$name`")
 
@@ -3194,11 +2974,13 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     })
   }
 
-  private def localDf(schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[IndexedSeq[Any]]): DataFrame = {
-    val jrows = new java.util.ArrayList[org.apache.spark.sql.Row](rows.length)
-    rows.foreach(v => jrows.add(org.apache.spark.sql.Row.fromSeq(v)))
-    spark.createDataFrame(jrows, schema)
+  /** A driver-local frame of `rows` (external values in `schema` order). */
+  private def localDf(schema: StructType, rows: Seq[IndexedSeq[Any]]): DataFrame = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    val conv = CatalystTypeConverters.createToCatalystConverter(schema)
+    SqlInternals.localFrame(spark,
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+      rows.map(r => conv(org.apache.spark.sql.Row.fromSeq(r)).asInstanceOf[InternalRow]))
   }
 
   // ---------------------------------------- driver-local working frames
@@ -3255,9 +3037,7 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     })
 
   private def buildCompiledBody(template: String): Option[CompiledBody] = {
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate => CPredicate, SafeProjection}
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.sql.catalyst.expressions.{Predicate => CPredicate, SafeProjection}
     val kind = SqlScript.firstWord(template)
     if (kind != "UPDATE" && kind != "DELETE") return None
     // no subqueries / RAISE anywhere in the statement
@@ -3323,21 +3103,12 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     val assignMap = assigns.map { case (f, v) => f.name -> v }.toMap
     // ONE analysis over a probe relation of (table columns ++ image
     // columns); the bound expressions then serve every firing
-    val probeSchema = StructType(fields ++ markerFields)
-    val probe = SqlInternals.ofRows(spark,
-      LocalRelation(DataTypeUtils.toAttributes(probeSchema)))
     val outCols = fields.map { f =>
       assignMap.get(f.name).map(_.cast(f.dataType).as(f.name))
         .getOrElse(col(s"`${f.name}`"))
     }.toSeq :+ coalesce(pred.cast("boolean"), lit(false)).as("__trg_pred")
-    val analyzed = probe.select(outCols: _*).queryExecution.analyzed
-    val (exprs, inputAttrs) = analyzed match {
-      case Project(pl, child: LocalRelation) => (pl, child.output)
-      case _ => return None
-    }
-    val bound: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      exprs.map(e => BindReferences.bindReference(
-        e: org.apache.spark.sql.catalyst.expressions.Expression, inputAttrs))
+    val bound = bindOverProbe(StructType(fields ++ markerFields), outCols)
+      .getOrElse(return None)
     Some(CompiledBody(table, kind, meta.schema,
       assigns.map(_._1.name), markerSeq.map(_._2),
       markerSeq.map { case (_, (_, c)) =>
@@ -3347,6 +3118,56 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       },
       CPredicate.create(bound.last),
       SafeProjection.create(bound.init)))
+  }
+
+  /** `outs` analysed ONCE over a probe relation of `probeSchema` (the
+    * declared collations applied) and bound to the probe's ordinals,
+    * for evaluation over driver-side rows with no parse, analysis or
+    * job per row. None when the outputs do not analyse over the probe
+    * alone, or analyse to anything but a plain projection of it (a
+    * subquery, an aggregate). */
+  private def bindOverProbe(probeSchema: StructType,
+      outs: Seq[Column]): Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]] = {
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, SubqueryExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val probe = SqlInternals.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(probeSchema)))
+    val analyzed =
+      try collated(probe.select(outs: _*)).queryExecution.analyzed
+      catch { case scala.util.control.NonFatal(_) => return None }
+    analyzed match {
+      case Project(pl, child: LocalRelation)
+          if !pl.exists(_.exists(_.isInstanceOf[SubqueryExpression])) =>
+        Some(pl.map(e => BindReferences.bindReference(e: Expression, child.output)))
+      case _ => None
+    }
+  }
+
+  /** `outs` as a function of one external row of `probeSchema`: bound
+    * once ([[bindOverProbe]]); a shape that does not bind evaluates
+    * over a one-row frame per call, with the script's tables visible
+    * to its subqueries. */
+  private def rowEvaluator(probeSchema: StructType,
+      outs: Seq[Column]): IndexedSeq[Any] => IndexedSeq[Any] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.SafeProjection
+    bindOverProbe(probeSchema, outs) match {
+      case Some(bound) =>
+        val proj = SafeProjection.create(bound)
+        proj.initialize(0)
+        val in = CatalystTypeConverters.createToCatalystConverter(probeSchema)
+        val out = bound.map(e =>
+          CatalystTypeConverters.createToScalaConverter(e.dataType)).toIndexedSeq
+        vals => {
+          val r = proj(in(org.apache.spark.sql.Row.fromSeq(vals)).asInstanceOf[InternalRow])
+          out.indices.map(i => out(i)(r.get(i, bound(i).dataType)))
+        }
+      case None => vals => withRelationsVisible() {
+        collated(localDf(probeSchema, Seq(vals)).select(outs: _*))
+          .collect().head.toSeq.toIndexedSeq
+      }
+    }
   }
 
   /** Run one compiled body against the target's driver-local rows.
@@ -3396,15 +3217,6 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       LocalRelation(lr.output.map(_.newInstance()), out.toSeq)))
     true
   }
-
-  private def sparkTypeName(dt: org.apache.spark.sql.types.DataType): String = dt match {
-    case org.apache.spark.sql.types.LongType => "BIGINT"
-    case org.apache.spark.sql.types.DoubleType => "DOUBLE"
-    case org.apache.spark.sql.types.StringType => "STRING"
-    case org.apache.spark.sql.types.BinaryType => "BINARY"
-    case other => other.sql
-  }
-
 
   // ------------------------------------------- vectorized trigger firing
 
@@ -4659,69 +4471,83 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     true
   }
 
-  /** INSERT with trigger firing — the probed SQLite shape, per
-    * incoming row in arrival order:
+  /** The one INSERT row loop. Every INSERT with a conflict clause, and
+    * every triggered INSERT the vectorized tier cannot take, resolves
+    * here one incoming row at a time in arrival order, the way SQLite
+    * runs OR IGNORE, OR REPLACE and upsert. Per row:
     *
     *  1. BEFORE INSERT programs (these fire in EVERY conflict mode,
     *     even for rows subsequently dropped by OR IGNORE / DO NOTHING
     *     or diverted to DO UPDATE — probed);
-    *  2. the row action: insert / replace (no DELETE programs for the
-    *     displaced row — recursive_triggers off, probed) / silent drop
-    *     / upsert-update (which fires the UPDATE programs instead of
-    *     AFTER INSERT — probed);
-    *  3. AFTER programs.
+    *  2. NOT NULL and CHECK (lang_conflict.html): OR IGNORE skips a
+    *     failing row, OR REPLACE gives a NULL its column's DEFAULT, an
+    *     upsert fails the statement before any diversion;
+    *  3. the row action, decided by the row's keys on every unique
+    *     constraint against the rows holding them now (earlier rows of
+    *     the statement included): insert / replace (every conflicting
+    *     row deleted; no DELETE programs — recursive_triggers off,
+    *     probed) / silent drop / upsert-update (UPDATE programs instead
+    *     of AFTER INSERT — probed) / SQLite's UNIQUE error;
+    *  4. AFTER programs.
     *
-    * NEW of an omitted rowid alias reads -1 in BEFORE programs and the
-    * assigned id in AFTER (probed). Conflict classification happens
-    * against pre-statement state (one bounded semi-join) plus local
-    * tracking of this statement's own effects; a trigger body that
-    * mutates the target table via its own DML adopts into the per-row
-    * state (legal in SQLite — it just doesn't re-fire suppressed
-    * triggers). */
-  private def insertWithTriggers(table: String, meta: TableMeta,
+    * Within the driver-local cap the keys index the target's local
+    * rows (no job); over it, one semi-join against all the statement's
+    * incoming keys brings only the rows they reach to the driver. DO
+    * UPDATE SET/WHERE and the CHECK predicates are bound once per
+    * statement ([[rowEvaluator]]). NEW of an omitted rowid alias reads
+    * -1 in BEFORE programs and the assigned id in AFTER (probed). A
+    * trigger body that mutates the target (legal in SQLite) re-reads
+    * its rows, so later rows see the change. Returns the (possibly
+    * ANY-adopted) meta and, for a `retText`, the rows RETURNING
+    * reports, in arrival order. */
+  private def insertRows(table: String, meta: TableMeta,
       existing: DataFrame, aligned0: DataFrame, conflict: Option[String],
       upsertClause: Option[String], insTrigs: Seq[SqliteDdl.TriggerDef],
-      aiAssigned: Option[String], aiBase: Option[Long]): Unit = {
+      aiAssigned: Option[String], aiBase: Option[Long],
+      retText: Option[String]): (TableMeta, Seq[IndexedSeq[Any]]) = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     val fields = meta.schema.fields
     def fieldIdx(c: String): Int = {
       val i = fields.indexWhere(_.name.equalsIgnoreCase(c))
       if (i < 0) throw new IllegalArgumentException(s"no such column: $c")
       i
     }
-    // the upsert clause parsed once; SET RHS / WHERE stay raw text for
-    // per-row literal evaluation
-    val upsert: Option[(Seq[String], Boolean, Seq[(Int, String)], Option[String])] =
-      upsertClause.map { clause =>
-        val m = onConflictRe.findFirstMatchIn(clause.trim).getOrElse(
-          throw new IllegalArgumentException(s"cannot parse ON CONFLICT clause: $clause"))
-        val target = Option(m.group(1)).map(SqlLexer.splitTopLevel(_).map(c =>
-          SqlScript.unquoteIdent(c.trim.split("\\s+").head)))
-        val doNothing = m.group(2).equalsIgnoreCase("NOTHING")
-        val (sets, predText) =
-          if (doNothing) (Seq.empty[(Int, String)], None)
-          else {
-            val setBody = m.group(3)
-            val whereAt = SqlLexer.lastTopLevel(setBody, "WHERE")
-            val (setPart, pp) =
-              if (whereAt < 0) (setBody, None)
-              else (setBody.substring(0, whereAt), Some(setBody.substring(whereAt + 5)))
-            (SqlLexer.splitTopLevel(setPart).map { a =>
-              val eq = topLevelEq(a)
-              (fieldIdx(SqlScript.unquoteIdent(a.substring(0, eq).trim)),
-                a.substring(eq + 1).trim)
-            }, pp)
-          }
-        (upsertKeyCols(meta, target, requireMatch = !doNothing), doNothing, sets, predText)
-      }
-    val keyCols: Seq[String] = upsert.map(_._1).getOrElse(
-      if (conflict.isDefined) meta.primaryKey.toSeq else Nil)
-    val keyIdx = keyCols.map(fieldIdx)
-    val updTrigs = upsert.filter(!_._2).map(u =>
-      activeTriggers(table, "UPDATE", Some(u._3.map(x => fields(x._1).name))))
+    // the upsert clause parsed once: target key columns, DO NOTHING,
+    // SET (column, rhs text), WHERE text
+    final case class Upsert(keyCols: Seq[String], targeted: Boolean,
+        doNothing: Boolean, sets: Seq[(Int, String)], pred: Option[String])
+    val upsert: Option[Upsert] = upsertClause.map { clause =>
+      val m = onConflictRe.findFirstMatchIn(clause.trim).getOrElse(
+        throw new IllegalArgumentException(s"cannot parse ON CONFLICT clause: $clause"))
+      // per-column COLLATE/direction stripped, as in index/pk parsing
+      val target = Option(m.group(1)).map(SqlLexer.splitTopLevel(_).map(c =>
+        SqlScript.unquoteIdent(c.trim.split("\\s+").head)))
+      val doNothing = m.group(2).equalsIgnoreCase("NOTHING")
+      val (sets, predText) =
+        if (doNothing) (Seq.empty[(Int, String)], None)
+        else {
+          val setBody = m.group(3)
+          val whereAt = SqlLexer.lastTopLevel(setBody, "WHERE")
+          val (setPart, pp) =
+            if (whereAt < 0) (setBody, None)
+            else (setBody.substring(0, whereAt), Some(setBody.substring(whereAt + 5)))
+          (SqlLexer.splitTopLevel(setPart).map { a =>
+            val eq = topLevelEq(a)
+            val c = SqlScript.unquoteIdent(a.substring(0, eq).trim)
+            requireNotGenerated(meta, c, "UPDATE")
+            (fieldIdx(c), a.substring(eq + 1).trim)
+          }, pp)
+        }
+      Upsert(upsertKeyCols(meta, target, requireMatch = !doNothing),
+        target.isDefined, doNothing, sets, predText)
+    }
+    val updTrigs = upsert.filter(!_.doNothing).map(u =>
+      activeTriggers(table, "UPDATE", Some(u.sets.map(x => fields(x._1).name))))
       .getOrElse(Nil)
-
+    refuseReturningWithTriggers(retText, insTrigs.nonEmpty || updTrigs.nonEmpty)
+    val returning = retText.isDefined
     val mode: String =
-      if (upsert.exists(_._2)) "NOTHING"
+      if (upsert.exists(_.doNothing)) "NOTHING"
       else if (upsert.isDefined) "UPDATE"
       else conflict.getOrElse("PLAIN")
     val perRow = touchesTarget(insTrigs ++ updTrigs, table)
@@ -4731,350 +4557,322 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     // read their own target via supported aggregate subqueries stay on
     // this tier (r11 — extractSelfAggs); the function itself falls
     // back for every other target-touching shape.
-    if (mode == "PLAIN" && updTrigs.isEmpty &&
-        tryVectorizedInsertFiring(table, meta, existing, aligned0,
-          insTrigs, aiAssigned, aiBase))
-      return
+    if (mode == "PLAIN" && tryVectorizedInsertFiring(table, meta, existing,
+        aligned0, insTrigs, aiAssigned, aiBase))
+      return (meta, Nil)
 
-    // UNCAPPED since r17: incoming rows STREAM in batches; per batch,
-    // occupancy prescans run against the PRE-STATEMENT state for keys
-    // not yet seen, and applied rows fold into the working frame —
-    // driver memory is bounded by a batch plus the conflict-key maps
-    // (O(distinct incoming keys), keys only for row-free modes).
-    val rowIter = streamRows(aligned0).map(_.toSeq.toIndexedSeq)
-    // occupant: key → the row currently holding that key (pre-existing
-    // or applied earlier this statement); only incoming keys tracked.
-    // The prescan compares under declared collations (collated wrap —
-    // a NOCASE-unique PK conflict is still a conflict, r17 fuzz).
-    val occupant = mutable.LinkedHashMap[Seq[Any], IndexedSeq[Any]]()
-    val knownPk = mutable.HashSet[Seq[Any]]() // keys already prescanned
-    // r17 (fuzz [552]/[836]): OR IGNORE / OR REPLACE conflict on ANY
-    // unique constraint — the PK machinery above plus every recorded
-    // UNIQUE — compared under declared collations (sqlite's rule;
-    // conflict-target upserts keep their single-target semantics).
-    // Occupancy per secondary set tracks collation-NORMALIZED keys;
-    // REPLACE victims are removed by their PK identity, so secondary
-    // replacement engages only when the table has a PK (without one
-    // the old loud commit-time error remains — documented residual).
-    val secSets: Seq[IndexedSeq[Int]] =
-      if (mode == "IGNORE" || mode == "REPLACE")
-        uniqueKeySets(meta).map(_.map(fieldIdx).toIndexedSeq)
-          .filterNot(s => s.sorted == keyIdx.sorted)
-      else Nil
-    def secKeyOf(set: IndexedSeq[Int], row: IndexedSeq[Any]): Seq[Any] =
-      if (set.forall(row(_) != null))
-        set.map(i => WriteTxn.collNorm(fields(i), row(i)))
+    // the unique constraints a row's keys are checked on, in SQLite's
+    // constraint order, an upsert's own target first (an untargeted DO
+    // NOTHING has none: it ignores a conflict on ANY of them, probed)
+    val target: Option[IndexedSeq[Int]] = upsert
+      .filter(u => u.targeted || !u.doNothing).map(_.keyCols.map(fieldIdx).toIndexedSeq)
+    val sets: IndexedSeq[IndexedSeq[Int]] =
+      if (mode == "PLAIN") IndexedSeq.empty
+      else (target.toSeq ++ uniqueKeySets(meta).map(_.map(fieldIdx).toIndexedSeq)
+        .filterNot(s => target.exists(_.sorted == s.sorted))).toIndexedSeq
+    // a conflict the mode resolves; any other fails the statement
+    def resolves(si: Int): Boolean =
+      mode == "IGNORE" || mode == "REPLACE" || target.isEmpty || si == 0
+    def uniqueFailed(si: Int): Nothing = throw new IllegalArgumentException(
+      "UNIQUE constraint failed: " +
+        sets(si).map(i => s"$table.${fields(i).name}").mkString(", "))
+
+    var metaCur = meta
+    // the target's rows the keys can reach (null: deleted), and over
+    // the cap the rest of the target, which no incoming key reaches
+    val rows = mutable.ArrayBuffer[IndexedSeq[Any]]()
+    var rest: Option[DataFrame] = None
+    // per set: collation-normalized key -> slot in `rows`
+    val occ = sets.map(_ => mutable.HashMap[Seq[Any], Int]())
+    def keyOf(si: Int, r: IndexedSeq[Any]): Seq[Any] =
+      if (sets(si).forall(r(_) != null))
+        sets(si).map(i => WriteTxn.collNorm(fields(i), r(i)))
       else null
-    val secOcc: IndexedSeq[mutable.LinkedHashMap[Seq[Any], IndexedSeq[Any]]] =
-      secSets.map(_ => mutable.LinkedHashMap[Seq[Any], IndexedSeq[Any]]()).toIndexedSeq
-    val secKnown: IndexedSeq[mutable.HashSet[Seq[Any]]] =
-      secSets.map(_ => mutable.HashSet[Seq[Any]]()).toIndexedSeq
-    /** Prescan one batch's not-yet-seen keys against the PRE-STATEMENT
-      * state. Later batches must NOT resurrect occupants the loop
-      * already removed or replaced — hence the known-key guards. */
-    def prescanBatch(batch: IndexedSeq[IndexedSeq[Any]]): Unit = {
-      if (keyIdx.nonEmpty) {
-        val keySchema = org.apache.spark.sql.types.StructType(keyIdx.map(fields))
-        val fresh = batch.map(r => keyIdx.map(r(_)).toIndexedSeq)
-          .filter(k => k.forall(_ != null) &&
-            !knownPk.contains(WriteTxn.normKeyOf(fields, keyIdx, k))).distinct
-        if (fresh.nonEmpty) {
-          val keysDf = localDf(keySchema, fresh)
-          // explicit re-select: a USING join fronts the join columns
-          // in its output, breaking positional indexing (r17)
-          collated(existing.join(broadcast(keysDf), keyCols.toSeq, "left_semi"))
-            .select(fields.map(f => col(f.name)).toSeq: _*)
-            .collect()
-            .foreach { r =>
-              val vals = r.toSeq.toIndexedSeq
-              val k = WriteTxn.normKeyOf(fields, keyIdx, vals)
-              occupant(k) = vals
-            }
-          fresh.foreach(k => knownPk += WriteTxn.normKeyOf(fields, keyIdx, k))
-        }
+    def index(slot: Int): Unit = if (rows(slot) != null)
+      sets.indices.foreach { si =>
+        val k = keyOf(si, rows(slot))
+        if (k != null) occ(si)(k) = slot
       }
-      secSets.zipWithIndex.foreach { case (set, si) =>
-        val setCols = set.map(i => fields(i).name)
-        val keySchema = org.apache.spark.sql.types.StructType(set.map(fields))
-        val fresh = batch.map(r => set.map(r(_)).toIndexedSeq)
-          .filter(k => k.forall(_ != null) &&
-            !secKnown(si).contains(k.indices.map(j =>
-              WriteTxn.collNorm(fields(set(j)), k(j))))).distinct
-        if (fresh.nonEmpty) {
-          val keysDf = localDf(keySchema, fresh)
-          collated(existing.join(broadcast(keysDf), setCols.toSeq, "left_semi"))
-            .select(fields.map(f => col(f.name)).toSeq: _*)
-            .collect()
-            .foreach { r =>
-              val vals = r.toSeq.toIndexedSeq
-              val k = secKeyOf(set, vals)
-              if (!secOcc(si).contains(k)) secOcc(si)(k) = vals
-            }
-          fresh.foreach { k =>
-            secKnown(si) += k.indices.map(j =>
-              WriteTxn.collNorm(fields(set(j)), k(j)))
+    def unindex(slot: Int): Unit = sets.indices.foreach { si =>
+      val k = keyOf(si, rows(slot))
+      if (k != null && occ(si).get(k).contains(slot)) occ(si).remove(k)
+    }
+    def frame(): DataFrame = {
+      val live = localDf(metaCur.schema, rows.iterator.filter(_ != null).toSeq)
+      rest.map(_.unionByName(live)).getOrElse(live)
+    }
+
+    val nnIdx = meta.notNull.map(c => fields.indexWhere(_.name.equalsIgnoreCase(c)))
+      .filter(i => i >= 0 && !aiAssigned.exists(_.equalsIgnoreCase(fields(i).name)))
+    // OR REPLACE: a NULL into a NOT NULL column takes its DEFAULT
+    val nnDefaultCols: Seq[(Int, Column)] =
+      if (mode != "REPLACE") Nil
+      else nnIdx.flatMap(i => defaultExpr(meta, fields(i).name)
+        .map(e => i -> dexpr(e).cast(fields(i).dataType)))
+    val nnDefaults: Seq[(Int, Any)] =
+      if (nnDefaultCols.isEmpty) Nil
+      else nnDefaultCols.map(_._1).zip(
+        rowEvaluator(StructType(Nil), nnDefaultCols.map(_._2))(IndexedSeq.empty))
+    // incoming rows read once: from their local relation within the
+    // cap, else from a checkpoint the over-cap semi-join reads too
+    val src = SqlInternals.toLocal(aligned0).getOrElse(aligned0.localCheckpoint(true))
+
+    /** (Re)read the target's rows from `state` and index their keys. */
+    def reload(state: DataFrame): Unit = {
+      val cols = fields.map(f => col(f.name)).toSeq
+      val inOrder = settled(state.select(cols: _*))
+      rows.clear()
+      occ.foreach(_.clear())
+      SqlInternals.localRelation(inOrder) match {
+        case Some(lr) =>
+          rest = None
+          val conv = CatalystTypeConverters.createToScalaConverter(lr.schema)
+          lr.data.foreach(r =>
+            rows += conv(r).asInstanceOf[org.apache.spark.sql.Row].toSeq.toIndexedSeq)
+        case None =>
+          val keysSrc = nnDefaultCols.foldLeft(src) { case (d, (i, v)) =>
+            d.withColumn(fields(i).name, coalesce(col(fields(i).name), v)) }
+          var left = inOrder
+          // per set, the rows its incoming keys reach that no earlier
+          // set's did: disjoint, so each comes to the driver once
+          val reached = sets.map { s =>
+            val ks = s.map(i => fields(i).name)
+            val keys = keysSrc.select(ks.map(col): _*)
+            val hit = collated(left.join(keys, ks, "left_semi")).select(cols: _*)
+            left = collated(left.join(keys, ks, "left_anti")).select(cols: _*)
+            hit
           }
-        }
+          rest = Some(left)
+          reached.reduceOption(_ unionByName _).foreach(
+            _.collect().foreach(r => rows += r.toSeq.toIndexedSeq))
       }
+      rows.indices.foreach(index)
     }
-    var cur = existing
-    // driver-local tier (see "driver-local working frames"): cleared
-    // once the working table outgrows the cap
-    var localTier = perRow
-    // append straight into the LocalRelation (a union + optimizer fold
-    // per applied row was most of the loop's residual wall)
-    def appendLocal(row: IndexedSeq[Any]): Boolean = localTier &&
-      (SqlInternals.localRelation(cur) match {
-        case Some(lr) if lr.data.length < SqlInternals.LocalMaxRows =>
-          cur = localAppend(lr, meta.schema, Seq(row)); true
-        case _ => false
-      })
-    var opCount = 0
-    var folds = 0
-    def checkpointMaybe(): Unit = {
-      if (localTier && SqlInternals.localRelation(cur).isEmpty) {
-        stage(table, meta, cur)
-        cur = working(table)._2
-        localTier = SqlInternals.localRelation(cur).isDefined
-      }
-      if (!localTier) {
-        opCount += 1
-        if (opCount % 64 == 0) cur = cur.localCheckpoint(true)
-      }
-    }
-    // run one program with the per-row state published for its bodies,
-    // adopting any target mutation the body made (self-DML is legal)
+    reload(existing)
+
+    // run one program with the per-row state published for its bodies;
+    // a body that mutated the target re-reads it
     def fire(t: SqliteDdl.TriggerDef, resolve: (String, String) => String,
         raw: (String, String) => Any): Boolean = {
-      if (perRow) stage(table, meta, cur, fold = localTier)
-      val ok = runTriggerProgram(t, resolve, raw)
-      if (perRow && (working(table)._2 ne cur)) {
-        cur = working(table)._2
-        checkpointMaybe()
+      var staged: DataFrame = null
+      if (perRow) {
+        stage(table, metaCur, frame())
+        staged = working(table)._2
       }
+      val ok = runTriggerProgram(t, resolve, raw)
+      if (perRow && (working(table)._2 ne staged)) reload(working(table)._2)
       ok
     }
-    def keyEq(key: Seq[Any]): Column =
-      keyIdx.zip(key).map { case (i, v) => col(fields(i).name) === lit(v) }.reduce(_ && _)
-    // !perRow bookkeeping: applied rows buffer per batch, removals of
-    // already-folded or pre-existing rows buffer as key filters; one
-    // filter + one union per batch, checkpoint every 16 folds
-    val batchApplied = mutable.ArrayBuffer[(Seq[Any], IndexedSeq[Any])]()
-    val batchRemovals = mutable.ArrayBuffer[Seq[Any]]()
-    def removeApplied(key: Seq[Any]): Unit = {
-      val at = batchApplied.indexWhere(_._1 == key)
-      if (at >= 0) { batchApplied.remove(at); () }
-      else batchRemovals += key
-    }
-    def foldBatch(): Unit = {
-      if (batchRemovals.nonEmpty) {
-        val pred = batchRemovals
-          .map(k => coalesce(keyEq(k), lit(false))).reduce(_ || _)
-        cur = cur.where(!pred)
-        batchRemovals.clear()
+
+    /** Expressions bound against the current meta, rebound after an
+      * ANY adoption retypes a column. */
+    def perMeta[A](build: TableMeta => A): () => A = {
+      var at: TableMeta = null
+      var v: Option[A] = None
+      () => {
+        if (at ne metaCur) { v = Some(build(metaCur)); at = metaCur }
+        v.get
       }
-      if (batchApplied.nonEmpty) {
-        cur = cur.unionByName(localDf(meta.schema, batchApplied.toSeq.map(_._2)))
-        batchApplied.clear()
-      }
-      folds += 1
-      if (folds % 16 == 0) cur = cur.localCheckpoint(true)
     }
+    // CHECK predicates, bound once: true where a row fails one
+    val checkEval = perMeta(m => rowEvaluator(m.schema,
+      m.checks.map(c => !coalesce(checkPred(m, c.expr), lit(true)))))
+    def requireConstraints(r: IndexedSeq[Any]): Unit = {
+      nnIdx.find(r(_) == null).foreach { i =>
+        throw new IllegalArgumentException(
+          s"NOT NULL constraint failed: $table.${fields(i).name}")
+      }
+      if (meta.checks.nonEmpty) {
+        val c = checkEval()(r).indexWhere(_ == true)
+        if (c >= 0) throw new IllegalArgumentException(
+          s"CHECK constraint failed: ${meta.checks(c).label}")
+      }
+    }
+    // DO UPDATE over (existing row ++ excluded row), bound once: the
+    // WHERE guard, then per SET its value and its STRICT storage-class
+    // violation (NULL when it stores); an ANY column's value keeps its
+    // own class, which the column adopts before it is stored
+    val updEval = perMeta { m =>
+      val u = upsert.get
+      val fs = m.schema.fields
+      val probe = StructType(fs ++ fs.map(f => f.copy(name = s"__exc_${f.name}")))
+      withRelationsVisible() {
+        val probeDf = localDf(probe, Nil)
+        def typeOf(c: Column): DataType = probeDf.select(c).schema.head.dataType
+        val outs = u.sets.flatMap { case (i, rhs) =>
+          val v = dexpr(rewriteExcluded(rhs))
+          val f = fs(i)
+          val decl = declOf(m, f.name)
+          if (!m.strict) Seq(v.cast(f.dataType), lit(null).cast(StringType))
+          else if (decl.equalsIgnoreCase("ANY"))
+            Seq(v.cast(anyClassOf(typeOf(v), f.dataType)), lit(null).cast(StringType))
+          else {
+            val (value, viol) = strictCoerce(decl, f.dataType, typeOf(v), v)
+            Seq(value, viol.getOrElse(lit(null).cast(StringType)))
+          }
+        }
+        val pred = u.pred.map(p => coalesce(dpred(rewriteExcluded(p)), lit(false)))
+          .getOrElse(lit(true))
+        rowEvaluator(probe, pred +: outs)
+      }
+    }
+    // a row held under `from`, its values cast where `to` retyped an
+    // ANY column
+    def conform(from: StructType, to: StructType)(r: IndexedSeq[Any]): IndexedSeq[Any] =
+      if (from eq to) r
+      else r.indices.foldLeft(r)((acc, i) =>
+        if (from(i).dataType == to(i).dataType) acc
+        else acc.updated(i, castValue(acc(i), to(i).dataType)))
+    // the ANY columns a DO UPDATE stores a new class into adopt it:
+    // every held row, and the over-cap rest, retype with the column
+    val affected = mutable.ArrayBuffer[IndexedSeq[Any]]()
+    def adoptAny(classes: Seq[(Int, DataType)]): Unit = {
+      val (m2, _) = adaptAnyTypes(table, metaCur, frame(), localDf(StructType(
+        classes.map { case (i, t) => StructField(fields(i).name, t) }), Nil))
+      if (m2 ne metaCur) {
+        val retype = conform(metaCur.schema, m2.schema) _
+        rows.indices.foreach(s => if (rows(s) != null) rows(s) = retype(rows(s)))
+        affected.indices.foreach(a => affected(a) = retype(affected(a)))
+        rest = rest.map(_.select(m2.schema.fields.map(f =>
+          col(f.name).cast(f.dataType).as(f.name, f.metadata)).toSeq: _*))
+        metaCur = m2
+        occ.foreach(_.clear())
+        rows.indices.foreach(index)
+      }
+    }
+
+    def doUpdate(key: Seq[Any], excl: IndexedSeq[Any]): Unit = {
+      val old = rows(occ(0)(key))
+      val out = updEval()(old ++ excl)
+      if (out(0) != true) return // the guard fails: no update, and no insert
+      val sets0 = upsert.get.sets
+      sets0.indices.foreach { j =>
+        val viol = out(2 + 2 * j)
+        val c = fields(sets0(j)._1).name
+        if (viol != null) throw new IllegalArgumentException(
+          s"cannot store $viol value in ${declOf(metaCur, c)} column $table.$c")
+      }
+      val upd0 = sets0.indices.foldLeft(old) { case (r, j) =>
+        r.updated(sets0(j)._1, out(1 + 2 * j)) }
+      // a value of a new storage class adopts its ANY column first
+      val classes = sets0.flatMap { case (i, _) =>
+        val v = upd0(i)
+        if (v == null || !metaCur.strict ||
+            !declOf(metaCur, fields(i).name).equalsIgnoreCase("ANY")) None
+        else Some(i -> classOfValue(v)).filter(_._2 != metaCur.schema.fields(i).dataType)
+      }
+      if (classes.nonEmpty) adoptAny(classes)
+      val upd = classes.foldLeft(upd0) { case (r, (i, _)) =>
+        r.updated(i, castValue(r(i), metaCur.schema.fields(i).dataType)) }
+      def resolveUpd(kw: String, c: String): String = sqliteLiteral(rawUpd(kw, c))
+      def rawUpd(kw: String, c: String): Any = kw match {
+        case "old" => old(fieldIdx(c))
+        case "new" => upd(fieldIdx(c))
+        case other => throw new IllegalArgumentException(s"no such column: $other.$c")
+      }
+      var updIgnored = false
+      updTrigs.withFilter(_.timing == "BEFORE").foreach { t =>
+        if (!updIgnored && !fire(t, resolveUpd, rawUpd)) updIgnored = true
+      }
+      // a BEFORE body may have deleted the row meanwhile
+      val slot = occ(0).get(key)
+      if (updIgnored || slot.isEmpty) return
+      requireConstraints(upd)
+      sets.indices.foreach { si =>
+        val k = keyOf(si, upd)
+        if (k != null && occ(si).get(k).exists(_ != slot.get)) uniqueFailed(si)
+      }
+      unindex(slot.get)
+      rows(slot.get) = upd
+      index(slot.get)
+      if (returning) affected += upd
+      updTrigs.withFilter(_.timing == "AFTER").foreach { t =>
+        if (!updIgnored && !fire(t, resolveUpd, rawUpd)) updIgnored = true
+      }
+    }
+
     val aiIdx = aiAssigned.map(fieldIdx)
     // rowid-alias ids are allocated at APPLY time, not pre-assigned:
     // a row abandoned by RAISE(IGNORE) must not consume an id (probed:
     // SQLite allocates 1,2 for the two survivors of a filtered 4-row
     // insert, no gaps)
     var nextAi = aiBase.getOrElse(0L)
-
-    def registerSec(r: IndexedSeq[Any]): Unit =
-      secSets.zipWithIndex.foreach { case (s, si) =>
-        val k = secKeyOf(s, r)
-        if (k != null) secOcc(si)(k) = r
-      }
-    // NOT NULL columns and their DEFAULT values, evaluated once: OR
-    // IGNORE skips a row with a NULL there, OR REPLACE takes the default
-    // (none: the NULL stays and the commit gate refuses it) —
-    // lang_conflict.html, after the BEFORE triggers have fired
-    val nnDefaults: Seq[(Int, Option[Any])] =
-      if (mode != "IGNORE" && mode != "REPLACE") Nil
-      else meta.notNull.map(fieldIdx).map { i =>
-        i -> defaultExpr(meta, fields(i).name).map(e =>
-          spark.range(1).select(dexpr(e).cast(fields(i).dataType)).head().get(0))
-      }
-    def nnDefaulted(r: IndexedSeq[Any]): IndexedSeq[Any] =
-      nnDefaults.foldLeft(r) { case (acc, (i, d)) =>
-        if (acc(i) == null && d.isDefined) acc.updated(i, d.get) else acc }
-    // an upsert checks NOT NULL and CHECK before its uniqueness
-    // diversion, so a row diverted to DO UPDATE / DO NOTHING still
-    // fails them, as on the trigger-free path (an omitted rowid alias
-    // is assigned later and never NULL)
-    val nnIdx = meta.notNull.map(c => fields.indexWhere(_.name.equalsIgnoreCase(c)))
-      .filter(i => i >= 0 && !aiIdx.contains(i))
-    def enforceIncomingRow(r: IndexedSeq[Any]): Unit = {
-      nnIdx.find(r(_) == null).foreach { i =>
-        throw new IllegalArgumentException(
-          s"NOT NULL constraint failed: $table.${fields(i).name}")
-      }
-      if (meta.checks.nonEmpty)
-        enforceIncomingConstraints(table, meta.copy(notNull = Nil),
-          localDf(meta.schema, Seq(r)))
-    }
+    var spills = 0
     def processRow(row0: IndexedSeq[Any]): Unit = {
-      var row = row0
-      def resolveIns(before: Boolean)(kw: String, c: String): String = kw match {
-        case "new" =>
-          val i = fieldIdx(c)
-          if (before && aiIdx.contains(i)) "-1" else sqliteLiteral(row(i))
-        case other => throw new IllegalArgumentException(s"no such column: $other.$c")
-      }
-      // raw (unrendered) image values for the compiled-body tier — the
-      // same resolution rules, minus the literal round trip
+      var row = conform(meta.schema, metaCur.schema)(row0)
       def rawIns(before: Boolean)(kw: String, c: String): Any = kw match {
         case "new" =>
           val i = fieldIdx(c)
           if (before && aiIdx.contains(i)) -1L else row(i)
         case other => throw new IllegalArgumentException(s"no such column: $other.$c")
       }
-      def allocAi(): Unit = aiIdx.foreach { i =>
-        nextAi += 1
-        row = row.updated(i, nextAi)
-      }
+      def resolveIns(before: Boolean)(kw: String, c: String): String =
+        sqliteLiteral(rawIns(before)(kw, c))
       var ignored = false
       insTrigs.withFilter(_.timing == "BEFORE").foreach { t =>
         if (!ignored && !fire(t, resolveIns(before = true),
           rawIns(before = true))) ignored = true
       }
-      if (!ignored && mode == "IGNORE") ignored = nnDefaults.exists { case (i, _) => row(i) == null }
-      if (!ignored && mode == "REPLACE") row = nnDefaulted(row)
-      // after the BEFORE programs: a row they drop is never checked
-      if (!ignored && upsert.isDefined) enforceIncomingRow(row)
-      if (!ignored) {
-        val key: Seq[Any] =
-          if (keyIdx.nonEmpty && keyIdx.forall(row(_) != null))
-            WriteTxn.normKeyOf(fields, keyIdx, row) else null
-        val secKeys: Seq[Seq[Any]] = secSets.map(s => secKeyOf(s, row))
-        def fireAfterInsert(): Unit =
-          insTrigs.withFilter(_.timing == "AFTER").foreach { t =>
-            if (!ignored && !fire(t, resolveIns(before = false),
-              rawIns(before = false))) ignored = true
-          }
-        val secHit = secKeys.zipWithIndex.exists { case (k, si) =>
-          k != null && secOcc(si).contains(k) }
-        val conflicting = (key != null && occupant.contains(key)) || secHit
-        if (!conflicting || mode == "PLAIN") {
-          // a PLAIN duplicate still lands here: the commit-time unique
-          // gate raises for it, exactly like the set-based fast path
-          allocAi()
-          if (perRow) {
-            if (!appendLocal(row)) {
-              cur = cur.unionByName(localDf(meta.schema, Seq(row)))
-              checkpointMaybe()
-            }
-          } else batchApplied += ((key, row))
-          if (key != null) occupant(key) = row
-          registerSec(row)
-          fireAfterInsert()
-        } else mode match {
-          case "REPLACE" =>
-            // victims: the PK occupant plus every conflicting
-            // secondary-set occupant (sqlite deletes EVERY row any
-            // uniqueness violation points at); each removes by its own
-            // PK identity — r17 fuzz [552]/[836] generalization
-            val victims = mutable.LinkedHashSet[IndexedSeq[Any]]()
-            if (key != null) occupant.get(key).foreach(victims += _)
-            secKeys.zipWithIndex.foreach { case (k, si) =>
-              if (k != null) secOcc(si).get(k).foreach(victims += _) }
-            victims.foreach { v =>
-              val vKey: Seq[Any] =
-                if (keyIdx.nonEmpty && keyIdx.forall(v(_) != null))
-                  WriteTxn.normKeyOf(fields, keyIdx, v) else null
-              if (vKey != null) {
-                occupant.remove(vKey)
-                if (perRow)
-                  cur = cur.where(!coalesce(keyEq(vKey), lit(false)))
-                else removeApplied(vKey)
-              }
-              secSets.zipWithIndex.foreach { case (s, si) =>
-                val k = secKeyOf(s, v)
-                if (k != null && secOcc(si).get(k).contains(v)) secOcc(si).remove(k)
-              }
-            }
-            allocAi()
-            if (perRow) {
-              if (!appendLocal(row)) {
-                cur = cur.unionByName(localDf(meta.schema, Seq(row)))
-                checkpointMaybe()
-              }
-            } else batchApplied += ((key, row))
-            if (key != null) occupant(key) = row
-            registerSec(row)
-            fireAfterInsert()
-          case "IGNORE" | "NOTHING" => () // dropped silently; no AFTER (probed)
-          case "UPDATE" =>
-            val (_, _, sets, predText) = upsert.get
-            val exVals = occupant(key)
-            def rwExc(text: String): String =
-              WriteTxn.rewriteRowRefs(text, Set("excluded"),
-                (_, c) => sqliteLiteral(row(fieldIdx(c))))
-            val inner = fields.zipWithIndex.map { case (f, i) =>
-              s"${sqliteLiteral(exVals(i))} AS `${f.name}`" }.mkString(", ")
-            val outs = s"(${predText.map(rwExc).getOrElse("1")}) AS __p" +
-              sets.map { case (i, rhs) =>
-                s", CAST((${rwExc(rhs)}) AS ${sparkTypeName(fields(i).dataType)}) AS `__v$i`"
-              }.mkString
-            val r = runSelect(s"SELECT $outs FROM (SELECT $inner) __cur").head()
-            if (truthy(r.get(0))) {
-              val newVals = exVals.indices.map { i =>
-                val at = sets.indexWhere(_._1 == i)
-                if (at < 0) exVals(i) else r.get(1 + at)
-              }.toIndexedSeq
-              def resolveUpd(kw: String, c: String): String = kw match {
-                case "old" => sqliteLiteral(exVals(fieldIdx(c)))
-                case "new" => sqliteLiteral(newVals(fieldIdx(c)))
-                case other => throw new IllegalArgumentException(s"no such column: $other.$c")
-              }
-              def rawUpd(kw: String, c: String): Any = kw match {
-                case "old" => exVals(fieldIdx(c))
-                case "new" => newVals(fieldIdx(c))
-                case other => throw new IllegalArgumentException(s"no such column: $other.$c")
-              }
-              var updIgnored = false
-              updTrigs.withFilter(_.timing == "BEFORE").foreach { t =>
-                if (!updIgnored && !fire(t, resolveUpd, rawUpd)) updIgnored = true
-              }
-              if (!updIgnored) {
-                val newKey: Seq[Any] =
-                  if (keyIdx.nonEmpty && keyIdx.forall(newVals(_) != null))
-                    WriteTxn.normKeyOf(fields, keyIdx, newVals) else null
-                if (perRow) {
-                  cur = cur.where(!coalesce(keyEq(key), lit(false)))
-                    .unionByName(localDf(meta.schema, Seq(newVals)))
-                  checkpointMaybe()
-                } else {
-                  removeApplied(key)
-                  batchApplied += ((newKey, newVals))
-                }
-                occupant.remove(key)
-                if (newKey != null) occupant(newKey) = newVals
-                updTrigs.withFilter(_.timing == "AFTER").foreach { t =>
-                  if (!updIgnored && !fire(t, resolveUpd, rawUpd)) updIgnored = true
-                }
-              }
-            }
-          case other =>
-            throw new IllegalStateException(s"unexpected conflict mode: $other")
+      if (ignored) return
+      mode match {
+        case "IGNORE" =>
+          if (nnIdx.exists(row(_) == null) ||
+              (meta.checks.nonEmpty && checkEval()(row).contains(true))) return
+        case "REPLACE" =>
+          row = nnDefaults.foldLeft(row) { case (r, (i, d)) =>
+            if (r(i) == null) r.updated(i, d) else r }
+          requireConstraints(row)
+        case "UPDATE" | "NOTHING" => requireConstraints(row)
+        case _ => ()
+      }
+      val keys = sets.indices.map(keyOf(_, row))
+      val hits = sets.indices.filter(si => keys(si) != null && occ(si).contains(keys(si)))
+      if (mode == "UPDATE" && hits.headOption.contains(0)) doUpdate(keys(0), row)
+      else if (hits.nonEmpty && mode != "REPLACE") {
+        // OR IGNORE / DO NOTHING drop the row silently, no AFTER
+        // programs (probed); a conflict they do not resolve fails
+        if (!hits.exists(resolves)) uniqueFailed(hits.head)
+      } else {
+        hits.map(si => occ(si)(keys(si))).distinct.foreach { s =>
+          unindex(s)
+          rows(s) = null
+        }
+        aiIdx.foreach { i =>
+          nextAi += 1
+          row = row.updated(i, nextAi)
+        }
+        rows += row
+        index(rows.length - 1)
+        if (returning) affected += row
+        insTrigs.withFilter(_.timing == "AFTER").foreach { t =>
+          if (!ignored && !fire(t, resolveIns(before = false),
+            rawIns(before = false))) ignored = true
+        }
+        // nothing looks a PLAIN row up again: a long statement folds
+        // its rows into the lazy rest instead of holding them all
+        if (sets.isEmpty && rows.length >= SqlInternals.LocalMaxRows) {
+          rest = Some(frame())
+          rows.clear()
+          spills += 1
+          if (spills % 16 == 0) rest = rest.map(_.localCheckpoint(true))
         }
       }
     }
-    rowIter.grouped(FoldBatchRows).foreach { g =>
-      val batchRows = g.toIndexedSeq
-      // a REPLACE row's defaulted NOT NULL values are keys too
-      prescanBatch(if (mode == "REPLACE") batchRows.map(nnDefaulted) else batchRows)
-      batchRows.foreach(processRow)
-      if (!perRow) foldBatch()
+    val incoming: Iterator[IndexedSeq[Any]] = SqlInternals.localRelation(src) match {
+      case Some(lr) =>
+        val conv = CatalystTypeConverters.createToScalaConverter(lr.schema)
+        lr.data.iterator.map(r =>
+          conv(r).asInstanceOf[org.apache.spark.sql.Row].toSeq.toIndexedSeq)
+      case None => streamRows(src).map(_.toSeq.toIndexedSeq)
     }
-    stage(table, meta, cur)
+    incoming.foreach(processRow)
+    val out = frame()
+    // over the cap the keys reach only the rows incoming keys name; a
+    // SET may move a key onto one of the rest
+    if (rest.isDefined && mode == "UPDATE")
+      enforceUniqueForUpdate(table, metaCur, out, upsert.get.sets.map(s => fields(s._1).name))
+    stage(table, metaCur, out)
+    (metaCur, affected.toSeq)
   }
 
   /** UPDATE with trigger firing: the affected set (pre- AND post-images)
@@ -5394,12 +5192,9 @@ private[graft] object WriteTxn {
         s.substring(0, e)
       case _ => s
     }
+    case b: Array[Byte] => b.toSeq // a blob key compares by content
     case other => other
   }
-
-  private[engine] def normKeyOf(fields: Array[StructField],
-      idxs: Seq[Int], row: IndexedSeq[Any]): Seq[Any] =
-    idxs.map(i => collNorm(fields(i), row(i)))
 
   /** Rewrite `kw.<ident>` row references (NEW./OLD./excluded., any
     * SQLite ident quoting) through `resolve` — token-level, so string

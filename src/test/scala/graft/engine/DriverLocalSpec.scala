@@ -95,6 +95,43 @@ class DriverLocalSpec extends SparkSpecBase {
     assert(jobs == 0, s"$jobs jobs for a read of an 804-row table")
   }
 
+  test("a 10-tuple INSERT OR IGNORE with 3 existing keys into an 800-row " +
+      "serve_mixed table runs in at most 3 jobs") {
+    // serve_mixed's DDL and write shape (perfbench/gen.py)
+    val seg = segment("local-ignore",
+      "CREATE TABLE dedup (digest_key TEXT PRIMARY KEY, url TEXT NOT NULL, " +
+        "date TEXT NOT NULL, id TEXT, status_code INTEGER);")
+    def row(i: Int, tag: String) = s"'k$i', 'https://h/$tag$i', '2024-01-01', NULL, 200"
+    engine.write(seg, (0 until 2).map { half =>
+      "INSERT INTO dedup VALUES " +
+        values(half * 400 + 1 to half * 400 + 400)(row(_, "old")) + ";"
+    }.mkString)
+    val batch = Seq(5, 1001, 1002, 400, 1003, 1004, 1005, 799, 1006, 1007)
+    val (jobs, _) = counted {
+      engine.write(seg, "INSERT OR IGNORE INTO dedup VALUES " +
+        values(batch)(row(_, "new")) + ";")
+    }
+    assert(jobs <= 3, s"$jobs jobs for a 10-tuple INSERT OR IGNORE")
+    val kept = engine.read(seg, "SELECT count(*) AS n, " +
+      "sum(CASE WHEN url LIKE '%old%' THEN 1 ELSE 0 END) AS o FROM dedup;").collect()(0)
+    assert((kept.getLong(0), kept.getLong(1)) == ((807L, 800L)))
+  }
+
+  test("an INSERT OR IGNORE ... SELECT into a table over the driver-local " +
+      "cap keeps exactly the rows without a conflict") {
+    val seg = segment("local-overcap",
+      "CREATE TABLE big (id INTEGER PRIMARY KEY, v TEXT);")
+    engine.write(seg, "INSERT INTO big SELECT id, 'v' || id FROM range(70000);")
+    // ids 60000..79999: the first half collide and keep their old value
+    engine.write(seg,
+      "INSERT OR IGNORE INTO big SELECT id + 60000, 'w' || id FROM range(20000);")
+    val r = engine.read(seg, "SELECT count(*) AS n, " +
+      "sum(CASE WHEN v = 'v' || id THEN 1 ELSE 0 END) AS old, " +
+      "sum(CASE WHEN v = 'w' || (id - 60000) THEN 1 ELSE 0 END) AS new FROM big;")
+      .collect()(0)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((80000L, 70000L, 10000L)))
+  }
+
   test("reads of a segment run beside commits to it without a failed read") {
     val seg = segment("local-race",
       "CREATE TABLE t (id INTEGER PRIMARY KEY, v TEXT);")

@@ -8,7 +8,8 @@ import graft.SparkSpecBase
   * (types, PK/rowid alias, NOT NULL + DEFAULT, CHECK, UNIQUE incl.
   * UNIQUE over COLLATE NOCASE/RTRIM columns, STRICT, generated
   * columns) and random write scripts (INSERT incl. OR IGNORE / OR
-  * REPLACE / upsert, UPDATE, DELETE, ALTER ADD/DROP/RENAME COLUMN,
+  * REPLACE / upsert of 1-3 tuples that may repeat an id, UPDATE,
+  * DELETE, ALTER ADD/DROP/RENAME COLUMN,
   * CREATE TRIGGER with an audit body, CREATE VIEW), runs each script
   * through the engine AND through real sqlite3 — both as ONE
   * transaction (the engine's contract; sqlite3 via `.bail on` +
@@ -154,9 +155,21 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
     * end when set). */
   private var madeView = false
 
+  private var nextId = 1
+
+  /** One VALUES tuple: an id already handed out when `collide` (and
+    * one was), else a fresh one, then a literal per column. */
+  private def tuple(cols: Seq[Col], strict: Boolean, collide: Boolean): String =
+    cols.map {
+      case Col("id", _) =>
+        if (collide && nextId > 1) (rng.nextInt(nextId) + 1).toString
+        else { nextId += 1; nextId.toString }
+      case c => litFor(c.tpe, strict)
+    }.mkString("(", ", ", ")")
+
   private def genScript(table: String, cols0: Seq[Col], strict: Boolean): String = {
     var cols = cols0
-    var nextId = 1
+    nextId = 1
     var added = 0
     var triggers = 0
     madeView = false
@@ -202,28 +215,22 @@ class SqliteWriteFuzzSpec extends SparkSpecBase {
               where(s"${q(tc.name)} = $textLit") + ";"
           }
         case 0 | 1 | 2 | 3 =>
-          val vals = cols.map {
-            case Col("id", _) =>
-              // mostly fresh ids, sometimes a deliberate collision
-              if (rng.nextInt(4) == 0 && nextId > 1) (rng.nextInt(nextId) + 1).toString
-              else { nextId += 1; nextId.toString }
-            case c => litFor(c.tpe, strict)
-          }
           val conflict = rng.nextInt(6) match {
             case 0 => "OR IGNORE "
             case 1 => "OR REPLACE "
             case _ => ""
           }
-          s"INSERT $conflict INTO $table ${glue("VALUES", s"(${vals.mkString(", ")})")};"
+          // mostly fresh ids, sometimes a deliberate collision; a
+          // conflict INSERT carries 1-3 tuples, which may collide with
+          // each other too
+          val tuples = (1 to (if (conflict.isEmpty) 1 else 1 + rng.nextInt(3)))
+            .map(_ => tuple(cols, strict, collide = rng.nextInt(4) == 0))
+          s"INSERT $conflict INTO $table ${glue("VALUES", tuples.mkString(", "))};"
         case 4 =>
-          val vals = cols.map {
-            case Col("id", _) =>
-              if (nextId > 1) (rng.nextInt(nextId) + 1).toString
-              else { nextId += 1; nextId.toString }
-            case c => litFor(c.tpe, strict)
-          }
+          val tuples = (1 to (1 + rng.nextInt(3)))
+            .map(_ => tuple(cols, strict, collide = rng.nextInt(3) > 0))
           val tgt = cols(1 + rng.nextInt(cols.length - 1))
-          s"INSERT INTO $table VALUES (${vals.mkString(", ")}) " +
+          s"INSERT INTO $table VALUES ${tuples.mkString(", ")} " +
             s"ON CONFLICT(id) DO UPDATE SET ${q(tgt.name)} = excluded.${q(tgt.name)};"
         case 5 | 6 =>
           val tgt = cols(1 + rng.nextInt(cols.length - 1))

@@ -90,13 +90,77 @@ class UpsertSpec extends SparkSpecBase {
       "ON CONFLICT clause does not match any PRIMARY KEY or UNIQUE constraint"))
   }
 
-  test("rows conflicting with EACH OTHER under DO UPDATE: clean refusal") {
-    val id = seg()
-    val e = intercept[Exception](engine.write(id,
+  // ---- sqlite3 differentials: each statement with and without an
+  // INSERT trigger, so the trigger-free and the triggered INSERT take
+  // the same row loop and must give sqlite3's answer either way ----
+
+  /** Render one engine row the way the sqlite3 CLI prints it. */
+  private def render(r: org.apache.spark.sql.Row): String =
+    (0 until r.length).map(i => if (r.isNullAt(i)) "" else r.get(i).toString).mkString("|")
+
+  /** A trigger logging every inserted row's key `k` into `log`. */
+  private val logTrigger =
+    "CREATE TABLE log (msg TEXT);" +
+      "CREATE TRIGGER tg AFTER INSERT ON t BEGIN INSERT INTO log VALUES ('i' || NEW.k); END;"
+
+  /** `script` on a fresh segment of `ddl` holding the rows of `seed`,
+    * and on sqlite3 (one
+    * transaction, `.bail on`), once as given and once after
+    * [[logTrigger]]: both fail (the engine with sqlite3's `error`) or
+    * both commit, and `t` (and `log`) hold the same rows. */
+  private def differential(ddl: String, seed: String, script: String,
+      error: Option[String] = None): Unit =
+    Seq("", logTrigger).foreach { pre =>
+      n += 1
+      val id = s"ups-$n"
+      engine.schemas.put(s"ups-diff-$n", ddl)
+      engine.provisionWritable(id, s"ups-diff-$n")
+      if (seed.nonEmpty) engine.write(id, seed)
+      val db = Files.createTempDirectory("ups-diff").resolve("f.sqlite").toString
+      assert(SqliteCli.run(db, ddl + seed) == 0)
+      val ours = scala.util.Try(engine.write(id, pre + script)).failed.toOption
+      val rc = SqliteCli.run(db, s".bail on\nBEGIN;\n$pre$script\nCOMMIT;\n")
+      assert(ours.isDefined == (rc != 0), s"engine: $ours, sqlite3 rc=$rc, trigger: ${pre.nonEmpty}")
+      assert(ours.map(_.getMessage) == error, s"trigger: ${pre.nonEmpty}")
+      (if (pre.isEmpty || ours.isDefined) Seq("t") else Seq("t", "log")).foreach { tbl =>
+        val q = s"SELECT * FROM $tbl;"
+        val engineSide = engine.read(id, q).collect().map(render).toSeq.sorted
+        val cliSide = SqliteCli.query(db, q).split("\n").filter(_.nonEmpty).toSeq.sorted
+        assert(engineSide == cliSide, s"$tbl, trigger: ${pre.nonEmpty}")
+      }
+    }
+
+  test("rows conflicting with EACH OTHER under DO UPDATE fold one at a time (sqlite3)") {
+    // sqlite3: 5|p|3 — the second row updates the first one's insert
+    differential(
+      "CREATE TABLE t (k INTEGER PRIMARY KEY, v TEXT, n INTEGER);" +
+        "CREATE UNIQUE INDEX uv ON t (v);",
+      "INSERT INTO t VALUES (1, 'a', 1);",
       "INSERT INTO t VALUES (5, 'p', 1), (5, 'q', 2) " +
-        "ON CONFLICT(k) DO UPDATE SET n = n + excluded.n;"))
-    assert(e.getMessage.contains("one at a time"))
-    assert(dump(id) == Seq("1|a|1")) // atomicity: nothing landed
+        "ON CONFLICT(k) DO UPDATE SET n = n + excluded.n;")
+  }
+
+  test("OR IGNORE skips a row failing CHECK (sqlite3)") {
+    differential(
+      "CREATE TABLE t (k INTEGER PRIMARY KEY, v TEXT, c INTEGER CHECK (c > 0));", "",
+      "INSERT OR IGNORE INTO t VALUES (1, 'a', 5), (2, 'b', -1), (3, 'c', 2);")
+  }
+
+  test("a STRICT DO UPDATE SET of TEXT into an INTEGER column fails (sqlite3)") {
+    differential(
+      "CREATE TABLE t (k INTEGER PRIMARY KEY, n INTEGER) STRICT;",
+      "INSERT INTO t VALUES (1, 1);",
+      "INSERT INTO t VALUES (1, 2) ON CONFLICT(k) DO UPDATE SET n = 'abc';",
+      Some("cannot store TEXT value in INTEGER column t.n"))
+  }
+
+  test("a key that is not the leading column resolves OR IGNORE and upsert (sqlite3)") {
+    differential(
+      "CREATE TABLE t (v TEXT, w TEXT, k INTEGER PRIMARY KEY);",
+      "INSERT INTO t VALUES ('a', 'x', 1);",
+      "INSERT OR IGNORE INTO t VALUES ('b', 'y', 1), ('c', 'z', 2);" +
+        "INSERT INTO t VALUES ('d', 'q', 2), ('e', 'r', 3) " +
+        "ON CONFLICT(k) DO UPDATE SET v = excluded.v || v;")
   }
 
   test("INSERT OR REPLACE cannot carry an ON CONFLICT clause") {
