@@ -2735,7 +2735,9 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
     * SELECT, so arbitrary expressions work (incl. the client's
     * datetime('<iso>') literals, UDF calls that Spark's inline VALUES
     * tables refuse), and the N-way UNION ALL folds into one local
-    * relation — one partition instead of N for every later job. */
+    * relation — one partition instead of N for every later job. The
+    * tuples parse ValuesChunk at a time: Spark's parser recurses once
+    * per UNION ALL, and a list of ~1,500 tuples overflows its stack. */
   private def valuesFrame(tuplesText: String, targetCols: Seq[String]): DataFrame = {
     val selects = SqlLexer.splitTopLevel(tuplesText).map { t =>
       val exprs = SqlLexer.splitTopLevel(t.trim.stripPrefix("(").stripSuffix(")"))
@@ -2744,7 +2746,10 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
       "SELECT " + exprs.zip(targetCols)
         .map { case (e, c) => s"$e AS `$c`" }.mkString(", ")
     }
-    val df = runSelect(selects.mkString(" UNION ALL "))
+    val df = withRelationsVisible() {
+      selects.grouped(WriteTxn.ValuesChunk)
+        .map(chunk => runSelect(chunk.mkString(" UNION ALL "))).reduce(_ union _)
+    }
     SqlInternals.toLocal(df).getOrElse(df)
   }
 
@@ -5169,6 +5174,10 @@ private[engine] class WriteTxn(engine: TroughEngine, segmentId: String) {
 
 private[graft] object WriteTxn {
   val selectMutex = new Object
+
+  /** Tuples of an `INSERT … VALUES` list parsed per SELECT: a UNION ALL
+    * this deep stays well inside the parser's stack. */
+  private val ValuesChunk = 200
 
   /** How long ATTACH waits for a busy segment's script lock before
     * refusing with 'database is locked' — python sqlite3's default

@@ -73,6 +73,22 @@ class DriverLocalSpec extends SparkSpecBase {
     assert(n == tuples)
   }
 
+  test("a 5,000-tuple INSERT parses in chunks and still folds driver-local") {
+    // serve_mixed's DDL; one UNION ALL of this many SELECTs overflows
+    // Spark's parser stack
+    val seg = segment("local-wide-values",
+      "CREATE TABLE dedup (digest_key TEXT PRIMARY KEY, url TEXT NOT NULL, " +
+        "date TEXT NOT NULL, id TEXT, status_code INTEGER);")
+    val tuples = 5000
+    val (_, tasks) = counted(engine.write(seg, "INSERT INTO dedup VALUES " +
+      values(1 to tuples)(i => s"'k$i', 'https://h/$i', '2024-01-01', NULL, $i") + ";"))
+    assert(tasks < tuples, s"$tasks tasks for $tuples VALUES tuples")
+    val r = engine.read(seg,
+      "SELECT count(*), sum(status_code), max(digest_key) FROM dedup;").collect()(0)
+    assert((r.getLong(0), r.getLong(1), r.getString(2)) ==
+      ((tuples.toLong, tuples.toLong * (tuples + 1) / 2, "k999")))
+  }
+
   test("a 10-row INSERT OR IGNORE into an 800-row table commits one part " +
       "file, and the next read of the segment schedules zero jobs") {
     val seg = segment("local-commit",
